@@ -212,7 +212,7 @@ def run_json_to_parquet(
     wide_ids: bool = False,
     corrupt_root: str | None = None,
 ) -> dict[str, str]:
-    """The stage-2 job for one dataset: read → (ledger anti-join) → conform
+    """The stage-2 job for one dataset: read → (ledger pruning) → conform
     → relationalize (if nested) → write each table as partitioned parquet.
     Returns ``{table_name: parquet_path}`` for every table written.
 
@@ -260,10 +260,7 @@ def run_json_to_parquet(
             # rescan.)
             dataset_dir = os.path.join(json_root, f"dataset={ds.name}")
             if path_exists(spark, dataset_dir):
-                done = {
-                    r["file_path"]
-                    for r in ledger.processed_files(dataset_name).collect()
-                }
+                done = ledger.processed_paths(dataset_name)
                 new_paths = [
                     p
                     for p in list_data_files(spark, dataset_dir)

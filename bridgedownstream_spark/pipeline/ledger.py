@@ -8,24 +8,32 @@ schema-change protocol's "reset the bookmark" step clears that state
 src/scripts/bookmarks/get-bookmarks.py:19-27).
 
 Spark-first: the bookmark is just a tiny parquet table of processed file
-paths per dataset. New work = an **anti-join of the file listing against
-the ledger** — file-count-scale, not data-scale: at 100 TB the ledger holds
-one row per input file (millions, not billions) and broadcasts cleanly.
-Commit = appending the newly processed paths after the sink write succeeds,
+paths per dataset, read with its declared schema (no inference job). It
+holds one row per input file — file-count scale, not data scale: at 100 TB
+that is millions of paths, which fit on the driver. New work is therefore a
+**driver-side set difference** of the file listing against
+:meth:`FileLedger.processed_paths`, and a commit is the same difference
+followed by one append of the new paths, after the sink write succeeds —
 mirroring the reference's post-write ``job.commit()`` ordering so a failed
-run reprocesses rather than drops files.
+run reprocesses rather than drops files. :meth:`FileLedger.filter_new`
+keeps a broadcast anti-join for row frames supplied by callers, which carry
+no file listing.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bridgedownstream_spark.pipeline.fsutil import delete_path, path_exists
 
 __all__ = ["FileLedger"]
+
+#: the ledger table's declared schema
+LEDGER_SCHEMA = "file_path string"
 
 
 class FileLedger:
@@ -46,8 +54,15 @@ class FileLedger:
         double-append every file)."""
         path = self._path(dataset)
         if not path_exists(self.spark, path):
-            return self.spark.createDataFrame([], "file_path string")
-        return self.spark.read.parquet(path).select("file_path")
+            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(path)
+
+    def processed_paths(self, dataset: str) -> set[str]:
+        """The ledger's file paths on the driver: one scan job, none for a
+        dataset never committed."""
+        if not path_exists(self.spark, self._path(dataset)):
+            return set()
+        return {r.file_path for r in self.processed_files(dataset).collect()}
 
     def filter_new(self, df: DataFrame, dataset: str, file_col: str = "_source_file") -> DataFrame:
         """Keep only rows from files not yet in the ledger: a broadcast
@@ -59,24 +74,27 @@ class FileLedger:
         return df.join(F.broadcast(ledger), file_col, "left_anti")
 
     def commit(self, df_or_paths: DataFrame | list[str], dataset: str) -> int:
-        """Record files as processed (idempotent: duplicates are
-        anti-joined away first). Call AFTER the sink write succeeds —
-        the reference's ``job.commit()`` ordering."""
+        """Record files as processed; returns how many were new. Idempotent:
+        paths already in the ledger, or repeated in the input, are recorded
+        once. A DataFrame contributes the distinct values of its first
+        column. Call AFTER the sink write succeeds — the reference's
+        ``job.commit()`` ordering."""
         if isinstance(df_or_paths, DataFrame):
-            new = df_or_paths.select(
-                F.col(df_or_paths.columns[0]).alias("file_path")
-            ).distinct()
+            first = df_or_paths.columns[0]
+            paths = {r[0] for r in df_or_paths.select(first).distinct().collect()}
         else:
-            new = self.spark.createDataFrame(
-                [(p,) for p in df_or_paths], "file_path string"
-            ).distinct()
-        new = new.join(
-            F.broadcast(self.processed_files(dataset)), "file_path", "left_anti"
-        )
-        rows = new.count()
-        if rows:
-            new.coalesce(1).write.mode("append").parquet(self._path(dataset))
-        return rows
+            paths = set(df_or_paths)
+        if not paths:
+            return 0
+        new = list(paths - self.processed_paths(dataset))
+        if new:
+            # an Arrow table becomes a JVM-local relation: the append is
+            # one job with no Python worker behind it
+            rows = pa.table({"file_path": pa.array(new, pa.string())})
+            self.spark.createDataFrame(rows).coalesce(1).write.mode(
+                "append"
+            ).parquet(self._path(dataset))
+        return len(new)
 
     def reset(self, dataset: str) -> None:
         """Bookmark reset (schema-change protocol §3e): forget the dataset's

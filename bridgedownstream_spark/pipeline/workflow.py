@@ -70,7 +70,12 @@ def run_study_workflow(
     Both stages are incremental: stage 1 is the checkpointed archive
     stream (the reference needed the SQS queue to deliver only-new
     archives; the checkpoint subsumes it, so re-listing ALL archives is
-    safe), and stage 2's ledger skips already-processed lake files.
+    safe), and stage 2's ledger skips already-processed lake files. Stage 1
+    lists the archive directory once on the driver per run: an
+    ``archive_path`` such as ``inbox/*.zip`` is loaded as ``inbox`` with a
+    file-name filter (:func:`~bridgedownstream_spark.sources.archive.load_archive_files`),
+    and stage 2 compares each dataset's file listing with the ledger on
+    the driver, so a re-run with nothing new reads no lake data.
     Datasets present in the lake but absent from the registry are left
     for a later run (exactly the reference's behavior when the catalog
     lags the data — the crawler sees them, the job has no table yet).

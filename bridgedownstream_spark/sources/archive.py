@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["read_archives", "explode_members", "MEMBER_SCHEMA"]
+__all__ = ["read_archives", "load_archive_files", "explode_members", "MEMBER_SCHEMA"]
 
 #: Output schema of :func:`explode_members` (before the manifest columns,
 #: which are carried through).
@@ -46,16 +46,42 @@ MEMBER_FIELDS = [
 MEMBER_SCHEMA = T.StructType(MEMBER_FIELDS)
 
 
+_GLOB_CHARS = frozenset("*?[]{}\\")
+
+
+def _has_glob(s: str) -> bool:
+    return any(c in _GLOB_CHARS for c in s)
+
+
+def load_archive_files(reader, path: str) -> DataFrame:
+    """Load ``path`` through a ``binaryFile`` batch or stream reader.
+
+    A glob in the last component only (``inbox/*.zip``) loads the parent
+    directory with ``pathGlobFilter``: Spark lists that one directory on the
+    driver. Loading the glob itself expands it into one root path per
+    archive, and above ``spark.sql.sources.parallelPartitionDiscovery
+    .threshold`` paths Spark lists those with a job of one task per archive.
+    Both forms select the same files — the filter also skips subdirectories
+    whose names do not match. Every other path shape, a glob directly under
+    a filesystem root included, is loaded unchanged.
+    """
+    parent, _, pattern = path.rpartition("/")
+    listable = parent and not parent.endswith(("/", ":"))
+    if listable and _has_glob(pattern) and not _has_glob(parent):
+        return reader.option("pathGlobFilter", pattern).load(parent)
+    return reader.load(path)
+
+
 def read_archives(
     spark: SparkSession, path: str, manifest: DataFrame | None = None
 ) -> DataFrame:
     """Scan zip archives as binary rows; inner-join the manifest (by
     ``path``) so each archive carries its record metadata.
 
-    The binaryFile source splits the *listing* across tasks (one archive per
+    The binaryFile source splits the archives across tasks (one archive per
     row); archive bodies stay opaque until :func:`explode_members`.
     """
-    df = spark.read.format("binaryFile").load(path).select(
+    df = load_archive_files(spark.read.format("binaryFile"), path).select(
         F.col("path"), F.col("content")
     )
     # binaryFile paths are URIs (file:/…); normalize to plain paths so the

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bridgedownstream_spark.pipeline.ingest import ingest_archives
+from bridgedownstream_spark.sources.archive import load_archive_files
 
 __all__ = ["stream_ingest", "BINARY_FILE_SCHEMA"]
 
@@ -55,12 +56,10 @@ def stream_ingest(
     stage-1 job, appending to the NDJSON lake (and quarantine), then
     return. Re-running with the same checkpoint ingests only archives that
     arrived since the last run."""
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .load(archive_path)
-        .select("path", "content")
-    )
+    stream = load_archive_files(
+        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA),
+        archive_path,
+    ).select("path", "content")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         archives = batch_df.withColumn(
@@ -89,6 +88,6 @@ def stream_ingest(
     if not q.awaitTermination(timeout_sec):
         q.stop()  # hung drains must raise, not return half-ingested
         raise TimeoutError(
-            f"stream_ingest_archives: drain exceeded {timeout_sec}s "
+            f"stream_ingest: drain exceeded {timeout_sec}s "
             f"(checkpoint={checkpoint_root})"
         )

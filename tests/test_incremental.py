@@ -141,3 +141,72 @@ def test_ledger_file_level_pruning_with_empty_file(spark, tmp_path):
         spark, json_root, pq, "inc_v1", REGISTRY, ledger=ledger
     ) == {}
     assert spark.read.parquet(f"{pq}/inc_v1").count() == 2
+
+
+def _ledger_files(root) -> list[str]:
+    return sorted(str(p) for p in root.rglob("*") if p.is_file())
+
+
+def test_ledger_commit_empty_list_writes_nothing(spark, tmp_path):
+    root = tmp_path / "l"
+    ledger = FileLedger(spark, str(root))
+    assert ledger.commit([], "ds") == 0
+    assert _ledger_files(root) == []
+    ledger.commit(["f1"], "ds")
+    before = _ledger_files(root)
+    assert ledger.commit([], "ds") == 0
+    assert _ledger_files(root) == before
+
+
+def test_ledger_commit_counts_repeated_path_once(spark, tmp_path):
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    assert ledger.commit(["f1", "f2", "f1", "f1"], "ds") == 2
+    assert sorted(r["file_path"] for r in ledger.processed_files("ds").collect()) == [
+        "f1", "f2",
+    ]
+    assert ledger.processed_paths("ds") == {"f1", "f2"}
+    assert ledger.processed_paths("never_committed") == set()
+
+
+def test_ledger_format_matches_dataframe_append(spark, tmp_path):
+    # reference writer: the DataFrame append that defines the ledger
+    # format (a distinct createDataFrame(list) through coalesce(1)).
+    # FileLedger.commit must write the same parquet schema and rows, and
+    # keep deduplicating against a ledger written that way.
+    paths = ["s3://b/x/part-0.json", "s3://b/x/part-1.json", "s3://b/y/part-0.json"]
+    old, new = tmp_path / "old" / "dataset=ds", tmp_path / "new" / "dataset=ds"
+    spark.createDataFrame([(p,) for p in paths], "file_path string").distinct().coalesce(
+        1
+    ).write.mode("append").parquet(str(old))
+    assert FileLedger(spark, str(tmp_path / "new")).commit(paths, "ds") == len(paths)
+
+    new_df, old_df = spark.read.parquet(str(new)), spark.read.parquet(str(old))
+    assert new_df.schema == old_df.schema
+    assert sorted(new_df.collect()) == sorted(old_df.collect())
+    assert len(list(old.glob("*.parquet"))) == len(list(new.glob("*.parquet"))) == 1
+
+    # a ledger in the old layout keeps deduplicating new commits
+    legacy = FileLedger(spark, str(tmp_path / "old"))
+    assert legacy.processed_paths("ds") == set(paths)
+    assert legacy.commit(paths + ["s3://b/z/part-0.json"], "ds") == 1
+
+
+def _commit_jobs(spark, ledger, paths, group):
+    """(paths committed, Spark jobs launched) of one commit run under the
+    job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "FileLedger.commit job census")
+    try:
+        committed = ledger.commit(paths, "ds")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return committed, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ledger_commit_is_one_job(spark, tmp_path):
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    # the append is the only job: no parallelize, count or shuffle
+    assert _commit_jobs(spark, ledger, ["f1", "f2", "f3"], "ledger-commit-new") == (3, 1)
+    # over an existing ledger, one scan reads the committed paths first
+    assert _commit_jobs(spark, ledger, ["f3", "f4"], "ledger-commit-more") == (1, 2)

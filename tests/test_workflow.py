@@ -233,3 +233,51 @@ def test_workflow_skips_unregistered_datasets(spark, tmp_path):
         "eventlist_v1"
     ]
     assert written == {}
+
+
+def _jobs_since(spark, first_job: int) -> list[tuple[int, int]]:
+    """(job id, task count) of every job with id >= ``first_job``, read
+    from Spark's status store once its listener events are processed."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = [(j.jobId(), j.numTasks()) for j in (jobs.apply(i) for i in range(jobs.size()))]
+    return sorted(j for j in out if j[0] >= first_job)
+
+
+def test_noop_rerun_lists_archive_directory_once(spark, tmp_path):
+    # 40 archives exceed spark.sql.sources.parallelPartitionDiscovery
+    # .threshold (32): listing them as 40 root paths launches a 40-task
+    # job. The inbox glob is listed as one directory instead, so a no-op
+    # re-run has at most one such job (the stream re-opening its last
+    # committed batch).
+    n = 40
+    arch = tmp_path / "archives"
+    arch.mkdir()
+    rows = [
+        _meta(_zip(arch / f"r{i:02d}.zip", [{"event_id": i}]), f"r{i:02d}")
+        for i in range(n)
+    ]
+    work = str(tmp_path / "work")
+
+    def run():
+        return run_study_workflow(
+            spark,
+            archive_path=str(arch / "*.zip"),
+            manifest=_manifest(spark, rows),
+            archive_map=ARCHIVE_MAP,
+            schema_store=SCHEMA_STORE,
+            schema_mapping=SCHEMA_MAPPING,
+            registry=REGISTRY,
+            work_root=work,
+        )
+
+    written = run()
+    table = written["eventlist_v1"]["eventlist_v1"]
+    assert spark.read.parquet(table).count() == n
+
+    first = max((j for j, _ in _jobs_since(spark, 0)), default=-1) + 1
+    assert run() == {"eventlist_v1": {}}
+    jobs = _jobs_since(spark, first)
+    assert sum(1 for _, tasks in jobs if tasks == n) <= 1, jobs
+    assert spark.read.parquet(table).count() == n

@@ -44,13 +44,14 @@ __all__ = [
     "ivfpq_shortlist",
 ]
 
-#: L2 between subvec and centroid — identical fold order both uses
-_L2 = (
-    "aggregate(zip_with(subvec, c_vec, (x, y) -> (x - y) * (x - y)), "
+#: squared L2 / dot product of double arrays {a} and {b} (``.format``):
+#: left-to-right folds, the add order of the DuckDB twins' list_sum
+L2_SPARK = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
     "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 )
-_DOT = (
-    "aggregate(zip_with(subvec, c_vec, (x, y) -> x * y), "
+DOT_SPARK = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
     "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 )
 
@@ -168,15 +169,12 @@ def pq_index(
 
 
 def _assign(sv: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest centroid per (vec_id, sub), ROW-LOCALLY (r10): the k
-    candidates of each subspace collect into ONE array per sub (a
-    16-row broadcast), each (vec_id, sub) row folds its own candidate
-    structs via array_min(transform(...)), and the assignment becomes a
-    pure map — ZERO exchange. array_min uses the same struct order
-    (dist, then cent_id) over the same round(L2, 9) values as the former
-    min() aggregate (and the window before it), so the winner is
-    bit-identical; the r9 struct-min form still shuffled one
-    (dist, cent_id, subvec) struct per (vec_id, sub)."""
+    """Nearest centroid per (vec_id, sub), ROW-LOCALLY: the k candidates
+    of each subspace collect into ONE array per sub (a 16-row
+    broadcast), each (vec_id, sub) row folds its own candidate structs
+    via array_min(transform(...)), and the assignment is a pure map —
+    ZERO exchange. array_min orders the structs by dist, then cent_id,
+    over round(L2, 9) values, so ties break on the lower cent_id."""
     cands = F.broadcast(
         cent.groupBy("sub").agg(
             F.expr("array_sort(collect_list(struct(cent_id, c_vec)))").alias(
@@ -184,7 +182,7 @@ def _assign(sv: DataFrame, cent: DataFrame) -> DataFrame:
             )
         )
     )
-    l2_c = _L2.replace("c_vec", "c.c_vec")
+    l2_c = L2_SPARK.format(a="subvec", b="c.c_vec")
     return (
         sv.join(cands, "sub")
         .select(
@@ -238,7 +236,9 @@ def pq_shortlist(
             "query_id",
             "sub",
             F.col("cent_id").alias("code"),
-            F.round(F.expr(_DOT), 6).cast("decimal(18,6)").alias("partial"),
+            F.round(F.expr(DOT_SPARK.format(a="subvec", b="c_vec")), 6)
+            .cast("decimal(18,6)")
+            .alias("partial"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("approx_dot").desc(), "vec_id")
@@ -261,27 +261,15 @@ def pq_shortlist(
 # space. This is the standard billion-vector index layout.
 # ---------------------------------------------------------------------------
 
-_L2_EMB = (
-    "aggregate(zip_with(emb, c_vec, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-
 
 def _coarse_assign(d: DataFrame, coarse: DataFrame, id_col: str = "vec_id"):
     """Nearest coarse cell per vector + the residual: (id, cell_id,
-    embedding=emb−centroid). The n_cells-row centroid frame broadcasts
-    into a nested-loop over the corpus (bounded: cells × rows), distances
-    round to 9 before the argmin, ties break on cell_id — the same
-    determinism contract as PQ's _assign. The argmin is a map-side-
-    combinable min over struct(dist, cell_id, residual): candidate
-    residuals cost n_cells cheap zip_withs per vector, and in exchange
-    the shuffle carries ONE 64-dim struct per vector instead of n_cells
-    (emb, c_vec) pairs through a window sort.
-
-    r10: ROW-LOCAL — the n_cells centroids collect into ONE broadcast
-    array row; each vector folds its candidates via array_min (same
-    struct order: dist, then cell_id — the winner's c_vec rides third
-    and is never compared since (dist, cell_id) is unique) and takes its
+    embedding=emb−centroid). Distances round to 9 before the argmin and
+    ties break on cell_id — the same determinism contract as PQ's
+    _assign. ROW-LOCAL: the n_cells centroids collect into ONE broadcast
+    array row; each vector folds its candidates via array_min (struct
+    order: dist, then cell_id — the winner's c_vec rides third and is
+    never compared since (dist, cell_id) is unique) and takes its
     residual against the winner locally. The assignment is a pure
     projection: ZERO exchange, no crossJoin row expansion."""
     cells_row = F.broadcast(
@@ -291,7 +279,7 @@ def _coarse_assign(d: DataFrame, coarse: DataFrame, id_col: str = "vec_id"):
             )
         )
     )
-    l2_c = _L2_EMB.replace("c_vec", "c.c_vec")
+    l2_c = L2_SPARK.format(a="emb", b="c.c_vec")
     return (
         d.crossJoin(cells_row)
         .select(
@@ -385,7 +373,9 @@ def ivfpq_shortlist(
     wq = W.partitionBy("query_id").orderBy("dist", "cell_id")
     qcells = (
         qd.crossJoin(F.broadcast(coarse))
-        .withColumn("dist", F.round(F.expr(_L2_EMB), 9))
+        .withColumn(
+            "dist", F.round(F.expr(L2_SPARK.format(a="emb", b="c_vec")), 9)
+        )
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= probes)
         .select(
@@ -420,7 +410,9 @@ def ivfpq_shortlist(
         "cell_id",
         "sub",
         F.col("cent_id").alias("code"),
-        F.round(F.expr(_L2), 6).cast("decimal(18,6)").alias("partial"),
+        F.round(F.expr(L2_SPARK.format(a="subvec", b="c_vec")), 6)
+        .cast("decimal(18,6)")
+        .alias("partial"),
     )
     w = W.partitionBy("query_id").orderBy(F.col("approx_dist").asc(), "vec_id")
     return (

@@ -59,11 +59,9 @@ def _edge_parts(fact: DataFrame) -> int:
     ~5x scheduling overhead per iteration round; at 100x (1.1 GB, ~9
     splits) it gives 36-way edge state so per-task aggregation maps
     stay bounded (the r5 fixed coalesce(8) died
-    AGGREGATE_OUT_OF_MEMORY there). Used as an explicit
+    AGGREGATE_OUT_OF_MEMORY there). Used as ``_copurchase_edges``'
     repartition-by-dst width: the ONE pair-sized exchange each graph
-    query pays, after which dst-clustering makes every per-round
-    aggregate exchange-free (localCheckpoint preserves the
-    partitioning metadata through the LogicalRDD boundary)."""
+    query pays."""
     # Structural guard (not just a docstring contract): a shuffle-derived
     # frame would silently report shuffle-width partition counts and
     # mis-size the edge state. A raw scan (+ narrow filter/project)
@@ -76,6 +74,60 @@ def _edge_parts(fact: DataFrame) -> int:
             "spark.sql.shuffle.partitions, not the input split count"
         )
     return max(8, 4 * fact.rdd.getNumPartitions())
+
+
+def _copurchase_edges(raw: DataFrame, min_orders: int | None = None) -> DataFrame:
+    """The part co-purchase graph: parts are linked, both ways and never
+    to themselves, when they share an order. ``raw`` is the
+    ``(l_orderkey, l_partkey)`` lineitem SCAN that ``_edge_parts`` sizes
+    the edge state from.
+
+    - ``min_orders=None``: distinct ``(src, dst)``.
+    - an int: ``(src, dst, n_orders)``, ``n_orders`` counting DISTINCT
+      shared orders (a part repeated in one order counts once), kept
+      where ``n_orders >= min_orders``.
+
+    ONE pair-sized exchange: the pairs repartition by dst, so the
+    (src, dst) distinct or count needs no second one. The rows stay
+    dst-clustered in the checkpoint and through the callers' broadcast
+    joins, so a per-round partial aggregate on dst (= src: the graph is
+    symmetric) map-combines to one row per node before its exchange
+    (AQE does not carry the partitioning through the checkpoint, so
+    that node-sized exchange is still planned). Measured at 100x
+    (bfs_hops, warm, min-of-2): clustered 141 s vs unclustered
+    209-295 s — the AQE-coalesced unclustered layout collapsed the
+    per-round distinct onto too few partitions.
+
+    No pre-join distinct for the distinct variant: the edge distinct
+    drops a repeated part's pair copies anyway, and lineitem rarely
+    repeats a part within an order, so it would buy a whole pair-keyed
+    exchange to drop a near-empty duplicate mass. The self-join's sides
+    stay ONE computation via ReusedExchange. The counted variant needs
+    the incidence distinct so ``n_orders`` counts orders, not lines.
+
+    Lazily localCheckpointed (serialized, _FACT_STATE): every round of
+    the caller's loop reads the cached edges, not the self-join.
+    """
+    li = raw if min_orders is None else raw.distinct()
+    a, b = li.alias("a"), li.alias("b")
+    pairs = (
+        a.join(b, "l_orderkey")
+        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
+        .select(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+        .repartition(_edge_parts(raw), "dst")
+    )
+    if min_orders is None:
+        edges = pairs.distinct()
+    else:
+        edges = (
+            pairs.groupBy("src", "dst")
+            .agg(F.count("*").alias("n_orders"))
+            .where(F.col("n_orders") >= min_orders)
+        )
+    return edges.localCheckpoint(eager=False, storageLevel=_FACT_STATE)
 
 
 #: conservative serialized bytes per node-frame row inside a broadcast
@@ -2573,14 +2625,15 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit for bit (the float formulation would wobble in the last bit per
     accumulation order).
 
-    Plan/scale: the edge list (distinct same-order part pairs) builds from
-    ONE self-join on l_orderkey, then edges+degrees are localCheckpointed
-    once and reused by all 5 rounds. Rank state is node-cardinality (the
-    part DIMENSION, orders of magnitude below lineitem at 100 TB), so each
-    round BROADCASTS the rank frame into a map-side hash join over the
-    cached edge partitions — the edge table is never re-shuffled — and the
-    only exchange per round is the partial->final integer aggregate on
-    dst, which map-combines down to node-cardinality before the wire.
+    Plan/scale: the distinct edge list comes from ``_copurchase_edges``
+    (checkpointed, dst-clustered); the degrees aggregate on dst and are
+    checkpointed too, so all 5 rounds reuse both. Rank state is
+    node-cardinality (the part DIMENSION, orders of magnitude below
+    lineitem at 100 TB), so each round BROADCASTS the rank frame into a
+    map-side hash join over the cached edge partitions — the edge table
+    is never re-shuffled — and the only exchange per round is the
+    partial->final integer aggregate on dst, which map-combines down to
+    node-cardinality before the wire.
     Isolated nodes (sole part in every one of its orders) leave the loop
     entirely: with no in-edges their rank is exactly `base` after round 1,
     so they re-enter as constants at the end instead of riding 5 no-op
@@ -2589,37 +2642,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic-identical either way.
     """
     raw = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = raw.alias("a"), raw.alias("b")
-    # ONE pair-sized exchange total: the self-join's pairs repartition
-    # by dst, after which dst-clustering satisfies EVERY later grouping
-    # — the (src,dst) distinct needs no second exchange (a subset of the
-    # grouping keys clusters it), the out-degree aggregate runs on dst
-    # (= in-degree: the co-purchase graph is symmetric) exchange-free,
-    # and each round's contribution sum on dst is exchange-free because
-    # the broadcast join preserves the streamed side's partitioning and
-    # localCheckpoint carries it through the LogicalRDD boundary. The
-    # r5 shape (distinct + deg-on-src + edges ⋈ deg) recomputed the
-    # self-join twice and moved pair-sized data three times; at 100x
-    # that dominated the whole query.
-    # r10: the pre-join distinct + pair checkpoint are GONE — the edge
-    # set's own distinct already dedups any (orderkey, partkey) repeat's
-    # pair copies, so the pre-distinct bought one whole exchange + agg +
-    # MEMORY_AND_DISK materialization of the pair table to drop a
-    # near-empty duplicate mass (lineitem rarely repeats a part within
-    # an order; the dup pairs ride the dst exchange and die in the
-    # distinct). The self-join's two sides stay ONE computation via
-    # ReusedExchange (identical scan -> Exchange(l_orderkey) subtrees).
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .repartition(_edge_parts(raw), "dst")
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_FACT_STATE)
-    )
+    edges = _copurchase_edges(raw)
     deg = (
         edges.groupBy("dst")  # symmetric graph: indeg == outdeg
         .agg(F.count("*").cast("long").alias("outdeg"))
@@ -3037,41 +3060,20 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive CTE whose UNION (distinct) semantics replay the
     visited-set dedup exactly.
 
-    Plan/scale: the edge list builds from ONE lineitem self-join and is
-    localCheckpointed once (lineage truncation keeps round k's plan flat
-    instead of 2^k deep). Each round BROADCASTS the frontier — bounded by
-    the part DIMENSION, orders of magnitude below lineitem — into a
-    map-side hash semi-join over the cached edge partitions, so edges
-    never re-shuffle; the only exchanges are the frontier distinct and
-    the visited anti-join, both node-cardinality. A frontier too large to
-    broadcast degrades to a shuffle hash join on src with identical
-    results. Fixed-depth rounds avoid a per-round count() action; an
-    empty frontier makes the remaining rounds no-op joins.
+    Plan/scale: the distinct edge list comes from ``_copurchase_edges``
+    (checkpointed, dst-clustered — the clustering keeps each round's
+    frontier-distinct partials node-sized). Each round BROADCASTS the
+    frontier — bounded by the part DIMENSION, orders of magnitude below
+    lineitem — into a map-side hash semi-join over the cached edge
+    partitions, so edges never re-shuffle; the only exchanges are the
+    frontier distinct and the visited anti-join, both node-cardinality.
+    A frontier too large to broadcast degrades to a shuffle hash join on
+    src with identical results. Fixed-depth rounds avoid a per-round
+    count() action; an empty frontier makes the remaining rounds no-op
+    joins.
     """
-    # No pre-distinct on (l_orderkey, l_partkey): the edge distinct below
-    # dedups anyway, and skipping it trades a full pair-keyed shuffle of
-    # lineitem for a tiny self-join fan-out (same-part repeats within an
-    # order are rare), leaving ONE orderkey exchange feeding the join.
     li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        # one pair-sized exchange: dst-clustering satisfies the (src,dst)
-        # distinct with no second exchange and keeps each round's
-        # frontier-distinct partials node-sized. Measured at 100x (warm,
-        # min-of-2 per variant): clustered 141 s vs unclustered 209-295 s
-        # — the AQE-coalesced unclustered layout collapsed the per-round
-        # distinct onto too few partitions once visited/frontier frames
-        # grew node-scale.
-        .repartition(_edge_parts(li), "dst")
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_FACT_STATE)
-    )
+    edges = _copurchase_edges(li)
     part = tbl(spark, sf_dir, "part")
     n_nodes = part.count()  # node-frame upper bound for _pin_node_side
     seeds = part.where(F.col("p_partkey") % 500 == 7).select(
@@ -4171,32 +4173,19 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive-CTE oracle enumerates — two different algorithms
     (per-round relaxation vs path enumeration + dedup), one answer.
 
-    Plan/scale: the weighted edge list aggregates out of ONE orderkey
-    self-join and is localCheckpointed; each round BROADCASTS the
+    Plan/scale: the edges and their shared-order counts come from
+    ``_copurchase_edges`` (checkpointed, dst-clustered); the weight is a
+    projection over the cached edges. Each round BROADCASTS the
     node-cardinality distance table into the cached edge partitions
-    (edges never re-shuffle) and re-minimizes per node — the shuffle per
-    round is <=|V| rows. The oracle's path enumeration is exponential in
+    (edges never re-shuffle) and re-minimizes per node — relaxed rows
+    stay dst-clustered through the broadcast join, so partial
+    aggregation emits per-node minima and the shuffle per round is
+    <=|V| rows. The oracle's path enumeration is exponential in
     hops; the relaxation is rounds x |E| with |V|-sized state, which is
     why Bellman-Ford, not path listing, is the 100 TB shape."""
     raw = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    li = raw.distinct()
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        # one pair-sized exchange: dst-clustering satisfies the (src,dst)
-        # weight aggregate (grouping-key subset) and pre-shrinks every
-        # round's min-distance partials — relaxed rows stay dst-clustered
-        # through the broadcast join, so partial aggregation emits
-        # per-node minima instead of per-partition-per-node ones
-        .repartition(_edge_parts(raw), "dst")
-        .groupBy("src", "dst")
-        .agg(F.expr("1000000 div count(*)").alias("w"))
-        .localCheckpoint(eager=False, storageLevel=_FACT_STATE)
+    edges = _copurchase_edges(raw, min_orders=1).select(
+        "src", "dst", F.expr("1000000 div n_orders").alias("w")
     )
     part = tbl(spark, sf_dir, "part")
     n_nodes = part.count()  # node-frame upper bound for _pin_node_side
@@ -4297,12 +4286,13 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterated object is the SUBGRAPH itself — each round's node set
     induces the next round's degree distribution.
 
-    Plan/scale: the symmetric edge list builds from ONE orderkey
-    self-join and is localCheckpointed ONCE (serialized — see
-    _FACT_STATE); each peel round BROADCASTS the node-cardinality
-    survivor set into the cached edge partitions as two LeftSemi joins
-    (src-end, dst-end) — the edge table never re-shuffles — and the only
-    exchange per round is the map-combined integer degree count on src.
+    Plan/scale: the confirmed edge list comes from
+    ``_copurchase_edges`` (checkpointed, dst-clustered); each peel round
+    BROADCASTS the node-cardinality survivor set into the cached edge
+    partitions as two LeftSemi joins (src-end, dst-end) — the edge table
+    never re-shuffles — and the only exchange per round is the
+    map-combined integer degree count on dst (symmetric graph: indeg ==
+    outdeg).
     Round semantics are deliberately fixed-count (not to-fixpoint) so
     the DuckDB oracle is the same computation unrolled; convergence at
     this corpus happens within the cap (verified by the value hash —
@@ -4311,26 +4301,7 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     n_nodes = _graph_node_bound(spark, sf_dir, raw)  # _pin_node_side bound
-    # same part twice in one order must count ONE order
-    li = raw.distinct().localCheckpoint(eager=False, storageLevel=_FACT_STATE)
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        # one pair-sized exchange: dst-clustering satisfies the (src,dst)
-        # confirmation count and makes every round's degree aggregate
-        # (on dst — symmetric graph, indeg == outdeg) exchange-free
-        .repartition(_edge_parts(raw), "dst")
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n_orders"))
-        .where(F.col("n_orders") >= _KCORE_MIN_ORDERS)
-        .select("src", "dst")
-        .localCheckpoint(eager=False, storageLevel=_FACT_STATE)
-    )
+    edges = _copurchase_edges(raw, _KCORE_MIN_ORDERS).select("src", "dst")
     deg = edges.groupBy("dst").agg(F.count("*").cast("long").alias("c"))
     for _ in range(_KCORE_ROUNDS - 1):
         # The survivor set feeds TWO semi-joins per round, so each peel
@@ -5701,28 +5672,13 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-ordered variant `dedup_graph_triangles` uses is simpler but lets
     one low-id hub enumerate its whole neighborhood squared). Each
     triangle is produced exactly once, then explodes into 3 node credits.
-    Shuffles: the one pair-sized edge aggregate (kcore's edge build), two
-    node-keyed degree joins (broadcast-eligible — the node table is
-    |V|-sized), the wedge self-join on the pivot key, and a LeftSemi
-    closure check on (v, w) — candidates only, never all-pairs.
+    Shuffles: the one pair-sized edge aggregate (``_copurchase_edges``,
+    checkpointed), two node-keyed degree joins (broadcast-eligible — the
+    node table is |V|-sized), the wedge self-join on the pivot key, and a
+    LeftSemi closure check on (v, w) — candidates only, never all-pairs.
     """
     raw = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    li = raw.distinct()
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .repartition(_edge_parts(raw), "dst")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n_ord"))
-        .where(F.col("n_ord") >= _CC_MIN_ORDERS)
-        .drop("n_ord")
-        .localCheckpoint(eager=False, storageLevel=_FACT_STATE)
-    )
+    e = _copurchase_edges(raw, _CC_MIN_ORDERS).drop("n_orders")
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )

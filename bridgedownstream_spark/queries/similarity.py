@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bridgedownstream_spark.operators.pq import DOT_SPARK, L2_SPARK
 from bridgedownstream_spark.queries.util import tbl, wide
 
 QUERIES: dict = {}
@@ -516,11 +517,6 @@ def _emb_norms(spark, sf_dir):
     ).select("vec_id", "emb", "nrm")
 
 
-_DOT_SPARK = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-
-
 @q(
     "ann_topk_cosine",
     _EMB_CTE_DUCK + f"""
@@ -553,7 +549,7 @@ def ann_topk_cosine(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -600,7 +596,7 @@ _PLANE_W = [
 
 def _plane_dot_spark(j: int) -> str:
     w = "array(" + ", ".join(f"{x!r}D" for x in _PLANE_W[j]) + ")"
-    return _DOT_SPARK.format(a=f"slice({w}, 1, size(emb))", b="emb")
+    return DOT_SPARK.format(a=f"slice({w}, 1, size(emb))", b="emb")
 
 
 def _plane_dot_duck(j: int) -> str:
@@ -682,7 +678,7 @@ def ann_lsh_bucketed(spark, sf_dir):
         b, (F.col("q_bucket") == F.col("bucket")) & (F.col("vec_id") != F.col("query_id"))
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -719,7 +715,7 @@ def _ivf_cent(spark, sf_dir):
 
 def _ivf_ccos():
     return F.round(
-        F.expr(_DOT_SPARK.format(a="emb", b="c_emb"))
+        F.expr(DOT_SPARK.format(a="emb", b="c_emb"))
         / (F.col("nrm") * F.col("c_nrm")),
         6,
     )
@@ -759,7 +755,7 @@ def _ivf_assign(spark, sf_dir):
         )
     )
     ccos_c = (
-        f"round({_DOT_SPARK.format(a='emb', b='c.c_emb')}"
+        f"round({DOT_SPARK.format(a='emb', b='c.c_emb')}"
         " / (nrm * c.c_nrm), 6)"
     )
     return (
@@ -835,7 +831,7 @@ def ann_ivf_topk(spark, sf_dir):
         (F.col("cell") == F.col("cent_id")) & (F.col("vec_id") != F.col("query_id")),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -917,7 +913,7 @@ def ann_ivf_multiprobe(spark, sf_dir):
         & (F.col("vec_id") != F.col("query_id")),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -1023,7 +1019,7 @@ def embedding_near_dup(spark, sf_dir):
     b = _bucketed(spark, sf_dir)
     a, c = b.alias("a"), b.alias("c")
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a.emb", b="c.emb"))
+        F.expr(DOT_SPARK.format(a="a.emb", b="c.emb"))
         / (F.col("a.nrm") * F.col("c.nrm")),
         4,
     )
@@ -1044,12 +1040,7 @@ def embedding_near_dup(spark, sf_dir):
 
 _KM_ITERS = 2
 
-#: squared-L2 distance between emb and c_emb — identical left-to-right
-#: fold order in both engines
-_L2_SPARK = (
-    "aggregate(zip_with(emb, c_emb, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
+#: squared-L2 distance between v.emb and c.c_emb — the L2_SPARK fold order
 _L2_DUCK = (
     "list_sum(list_transform(generate_series(1, len(v.emb)), "
     "i -> (v.emb[i] - c.c_emb[i]) * (v.emb[i] - c.c_emb[i])))"
@@ -1097,10 +1088,10 @@ def kmeans_refine_centroids(spark, sf_dir):
     (cell, dim, component) rows.
 
     This is the *training* half of IVF that ann_ivf_topk's docstring
-    defers to — expressed in DataFrame ops: assignment is a broadcast
-    join + map-side-combined struct-min argmin (8 centroids ride along;
-    the corpus never shuffles candidate rows, only one winner struct per
-    vector), the mean is posexplode → one narrow-keyed aggregation, and
+    defers to — expressed in DataFrame ops: assignment is a row-local
+    array_min argmin over one broadcast array of the 8 centroids (no
+    vector ever shuffles), the mean is posexplode → one narrow-keyed
+    aggregation, and
     each round's tiny centroid frame is localCheckpointed so iteration
     lineage stays O(1), exactly the connected-components pattern.
 
@@ -1110,9 +1101,9 @@ def kmeans_refine_centroids(spark, sf_dir):
     unrolled-CTE DuckDB twin matches hash-for-hash despite the two
     engines aggregating in different orders. A dyadic double can never be
     a decimal half-way case, so the double→decimal rounding agrees too."""
-    # scan-width floor before the per-iteration assign: the struct-min
-    # partial aggregate (and its candidate L2 folds) otherwise runs at
-    # the scan's single-row-group width (util.wide — cluster no-op)
+    # scan-width floor before the per-iteration assign: the candidate L2
+    # folds otherwise run at the scan's single-row-group width
+    # (util.wide — cluster no-op)
     e = wide(spark, tbl(spark, sf_dir, "embeddings"), sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb")
     )
@@ -1121,18 +1112,13 @@ def kmeans_refine_centroids(spark, sf_dir):
     ).select(F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb"))
     means = None
     for _ in range(_KM_ITERS):
-        # r10 (the r9/r10 isolated 100x gates breached the struct-min
-        # form's budget — its exchange carried one (dist, cent_id,
-        # emb[64]) struct PER VECTOR, and the crossJoin first
-        # materialized n_cells embedding-wide copies of every row): the
-        # argmin is now ROW-LOCAL — the 8 centroids collect into ONE
-        # broadcast array row and each vector folds its own candidate
-        # structs via array_min(transform(...)). array_min uses the same
-        # struct order (dist, then cent_id — the original window's
-        # tie-break) over the same round(L2, 6) values, so the winner is
-        # bit-identical, with ZERO vector-payload exchange per iteration:
-        # the only shuffle left is the means aggregate's map-side-combined
-        # (cell, d) partials.
+        # ROW-LOCAL argmin: the 8 centroids collect into ONE broadcast
+        # array row and each vector folds its own candidate structs via
+        # array_min(transform(...)), ordered by (dist, then cent_id) over
+        # round(L2, 6). A struct-min aggregate instead shuffled one
+        # (dist, cent_id, emb[64]) struct PER VECTOR and breached its
+        # isolated 100x gate budget. The only shuffle left is the means
+        # aggregate's map-side-combined (cell, d) partials.
         cents_row = F.broadcast(
             cent.agg(
                 F.expr(
@@ -1140,7 +1126,7 @@ def kmeans_refine_centroids(spark, sf_dir):
                 ).alias("cents")
             )
         )
-        l2_c = _L2_SPARK.replace("c_emb", "c.c_emb")
+        l2_c = L2_SPARK.format(a="emb", b="c.c_emb")
         assign = (
             e.crossJoin(cents_row)
             .select(
@@ -2116,7 +2102,7 @@ def _sem_ranked(spark, sf_dir):
         )
     )
     ccos_c = (
-        f"round({_DOT_SPARK.format(a='emb', b='c.c_emb')}"
+        f"round({DOT_SPARK.format(a='emb', b='c.c_emb')}"
         " / (nrm * c.c_nrm), 6)"
     )
     assign = (
@@ -2191,7 +2177,7 @@ def semdedup_prune(spark, sf_dir):
         F.col("nrm").alias("b_nrm"),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a_emb", b="b_emb"))
+        F.expr(DOT_SPARK.format(a="a_emb", b="b_emb"))
         / (F.col("a_nrm") * F.col("b_nrm")),
         4,
     )
@@ -2302,7 +2288,7 @@ def ann_matryoshka_recall(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     tcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_temb", b="temb"))
+        F.expr(DOT_SPARK.format(a="q_temb", b="temb"))
         / (F.col("q_tnrm") * F.col("tnrm")),
         4,
     )
@@ -2321,7 +2307,7 @@ def ann_matryoshka_recall(spark, sf_dir):
     # rows ONLY (the funnel's whole point) — the shortlist broadcasts
     # into the corpus scan, then the query side broadcasts again
     fcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -2457,7 +2443,7 @@ def ann_matryoshka_curve(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     fcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT_SPARK.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -2495,7 +2481,7 @@ def ann_matryoshka_curve(spark, sf_dir):
             )
         )
         tcos = F.round(
-            F.expr(_DOT_SPARK.format(a="q_temb", b="temb"))
+            F.expr(DOT_SPARK.format(a="q_temb", b="temb"))
             / (F.col("q_tnrm") * F.col("tnrm")),
             4,
         )
@@ -2679,7 +2665,7 @@ def contrastive_pairs(spark, sf_dir):
         F.col("nrm").alias("b_nrm"),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a_emb", b="b_emb"))
+        F.expr(DOT_SPARK.format(a="a_emb", b="b_emb"))
         / (F.col("a_nrm") * F.col("b_nrm")),
         4,
     )

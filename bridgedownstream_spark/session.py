@@ -28,6 +28,10 @@ DEFAULT_SHUFFLE_PARTITIONS = int(
     )
 )
 
+#: the directory that holds this package. Python workers start in the
+#: launch directory, so they import the package only from their path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "bridgedownstream_spark",
@@ -81,6 +85,7 @@ def get_spark(
         # per-dataset workflow should pass
         # extra_conf={"spark.scheduler.mode": "FAIR"} (see workflow.py).
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # diagnostics hook (e.g. -Xlog:gc for the scale_ci spread
         # investigation); empty default is a no-op

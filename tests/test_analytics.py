@@ -1094,6 +1094,112 @@ def test_edge_parts_rejects_shuffle_derived_frames(spark):
         _edge_parts(raw.distinct())
 
 
+def _inline_edges(raw, variant):
+    """The edge list as each graph query used to build it by hand:
+    "distinct" (pagerank, bfs), "weighted" (sssp: 1000000 div the
+    shared-order count) and "confirmed" (kcore, clustering: >= 2 orders)."""
+    from pyspark.sql import functions as F
+
+    from bridgedownstream_spark.queries.advanced import _edge_parts
+
+    li = raw if variant == "distinct" else raw.distinct()
+    a, b = li.alias("a"), li.alias("b")
+    pairs = (
+        a.join(b, "l_orderkey")
+        .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
+        .select(
+            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
+        )
+        .repartition(_edge_parts(raw), "dst")
+    )
+    if variant == "distinct":
+        return pairs.distinct()
+    if variant == "weighted":
+        return pairs.groupBy("src", "dst").agg(
+            F.expr("1000000 div count(*)").alias("w")
+        )
+    return (
+        pairs.groupBy("src", "dst")
+        .agg(F.count("*").alias("n"))
+        .where(F.col("n") >= 2)
+        .select("src", "dst")
+    )
+
+
+def _copurchase_variants(raw):
+    from pyspark.sql import functions as F
+
+    from bridgedownstream_spark.queries.advanced import _copurchase_edges
+
+    return {
+        "distinct": _copurchase_edges(raw),
+        "weighted": _copurchase_edges(raw, min_orders=1).select(
+            "src", "dst", F.expr("1000000 div n_orders").alias("w")
+        ),
+        "confirmed": _copurchase_edges(raw, min_orders=2).select("src", "dst"),
+    }
+
+
+def test_copurchase_edges_hand_graph(spark, tmp_path_factory):
+    """Order 1 holds parts 10, 20 (twice) and 30; order 2 holds 10 and
+    20; order 3 holds 20 and 30; order 4 holds 40 alone. Edges run both
+    ways and never to self (20's repeat in order 1 is no 20-20 edge),
+    the repeat counts as ONE shared order, min_orders drops the 10-30
+    edge (one order), and None lists each edge once."""
+    from bridgedownstream_spark.queries.advanced import _copurchase_edges
+    from bridgedownstream_spark.queries.util import tbl
+
+    path = str(tmp_path_factory.mktemp("edges") / "lake")
+    rows = [(1, 10), (1, 20), (1, 20), (1, 30), (2, 10), (2, 20),
+            (3, 20), (3, 30), (4, 40)]
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
+    raw = tbl(spark, path, "lineitem").select("l_orderkey", "l_partkey")
+
+    pairs = sorted(tuple(r) for r in _copurchase_edges(raw).collect())
+    assert pairs == [(10, 20), (10, 30), (20, 10), (20, 30), (30, 10), (30, 20)]
+    counted = {
+        (r.src, r.dst): r.n_orders
+        for r in _copurchase_edges(raw, min_orders=1).collect()
+    }
+    assert counted == {(10, 20): 2, (20, 10): 2, (10, 30): 1, (30, 10): 1,
+                       (20, 30): 2, (30, 20): 2}
+    confirmed = {
+        (r.src, r.dst): r.n_orders
+        for r in _copurchase_edges(raw, min_orders=2).collect()
+    }
+    assert confirmed == {k: n for k, n in counted.items() if n >= 2}
+    for variant, df in _copurchase_variants(raw).items():
+        assert sorted(map(tuple, df.collect())) == sorted(
+            map(tuple, _inline_edges(raw, variant).collect())
+        ), variant
+
+
+def test_copurchase_edges_match_inline_builds(spark, tmp_path_factory):
+    """On a seeded random lineitem (400 orders of 1-8 lines over 60
+    parts, so parts repeat within orders and many pairs share several
+    orders), every variant the graph queries take from _copurchase_edges
+    equals the edge list they used to build inline, schema included."""
+    import random
+
+    from bridgedownstream_spark.queries.util import tbl
+
+    rng = random.Random(7)
+    rows = [(o, rng.randrange(60)) for o in range(400)
+            for _ in range(rng.randint(1, 8))]
+    path = str(tmp_path_factory.mktemp("edges_rand") / "lake")
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
+    raw = tbl(spark, path, "lineitem").select("l_orderkey", "l_partkey")
+    for variant, df in _copurchase_variants(raw).items():
+        ref = _inline_edges(raw, variant)
+        assert df.schema == ref.schema, variant
+        got = sorted(map(tuple, df.collect()))
+        assert got and got == sorted(map(tuple, ref.collect())), variant
+
+
 def test_graph_loop_degrades_to_shuffle_hash_above_broadcast_ceiling(spark):
     """_pin_node_side: when the node frame cannot broadcast (the ceiling
     conf forced to 0, the node-table-outgrew-the-ceiling stand-in),

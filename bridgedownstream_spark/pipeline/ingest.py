@@ -5,7 +5,8 @@ Spark-first re-expression of the reference's single-node ingest job
 
     boto3 get_object loop        → binaryFile scan + manifest broadcast join
     zipfile member loop          → mapInPandas fan-out (sources.archive)
-    get_json_schema (3 scopes)   → broadcast lookup join (validation.resolve)
+    get_json_schema (3 scopes)   → memoized lookup in the validation UDF
+                                   (validation.resolve)
     jsonschema.iter_errors       → Arrow-batched mapInPandas (validation)
     remove_expected_validation_errors → array_except projection
     invalid → SQS queue          → quarantine parquet table (replayable scan)
@@ -31,7 +32,6 @@ from pyspark.sql import types as T
 
 from bridgedownstream_spark.sources.archive import explode_members, read_archives
 from bridgedownstream_spark.validation import (
-    attach_schema_urls,
     split_valid_records,
     suppress_expected_errors,
     validate_members,
@@ -272,9 +272,8 @@ def ingest_archives(
 
     members = explode_members(archives)
     # schema resolution happens inside the validation UDF (per-executor
-    # memo over the config-cardinality combos) — single pass over the
-    # archives; attach_schema_urls' broadcast-join variant would need an
-    # extra unzip pass just to enumerate combos
+    # memo over the config-cardinality combos) — a single pass over the
+    # archives, with no extra unzip pass to enumerate combos
     members = validate_members(
         members, schema_store, archive_map=archive_map, app_id=app_id
     )

@@ -3,7 +3,7 @@
 Spark-first re-expression of the reference's main Spark job
 (src/glue/jobs/json_s3_to_parquet.py:179-233):
 
-    catalog scan            → spark.read.schema(declared).json(basePath=…)
+    catalog scan            → spark.read.schema(lake_read_schema).json(basePath=…)
     resolveChoice(match_catalog) → cast-to-declared (conform_to_schema)
     DynamicFrame.relationalize + add_index_to_table (a join per child)
                             → operators.relationalize (shuffle-free)
@@ -11,12 +11,13 @@ Spark-first re-expression of the reference's main Spark job
                             → df.write.partitionBy(…).parquet
 
 Scale notes: the whole job is narrow transformations over one JSON scan per
-dataset; the only shuffles are whatever the (optional) ledger anti-join
-introduces. Small JSON files are handled by ``maxPartitionBytes`` packing
+dataset; the only shuffle is each table's repartition by its partition
+columns before the write, and the ledger prunes the file listing on the
+driver. Small JSON files are handled by ``maxPartitionBytes`` packing
 (Spark bin-packs many small files into one task — the reference needed
 ``groupFiles: inPartition`` for the same effect, json_s3_to_parquet.py:73).
-Each emitted table re-scans the JSON source on write; at scale that is N
-narrow scans instead of N child⋈parent shuffles — the better trade.
+Each emitted table is written from the one persisted batch; at scale that
+is N narrow passes instead of N child⋈parent shuffles — the better trade.
 """
 
 from __future__ import annotations
@@ -33,9 +34,11 @@ from bridgedownstream_spark.operators.relationalize import (
     relationalize,
 )
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
+from bridgedownstream_spark.sources.ndjson import dataset_path
 
 __all__ = [
     "conform_to_schema",
+    "lake_read_schema",
     "read_json_dataset",
     "write_parquet_dataset",
     "run_json_to_parquet",
@@ -114,11 +117,22 @@ def _widen_leaves(dt: T.DataType) -> T.DataType:
 CORRUPT_COL = "_corrupt_record"
 
 
+def lake_read_schema(dataset: Dataset, keep_corrupt: bool = False) -> T.StructType:
+    """The schema every stage-2 reader, batch or stream, reads a JSON lake
+    through: the leaf-widened data fields, then :data:`CORRUPT_COL` if
+    ``keep_corrupt``, then the declared partition fields (they resolve
+    from the directory layout, never from file bodies)."""
+    return T.StructType(
+        list(_widen_leaves(dataset.data_schema()).fields)
+        + ([T.StructField(CORRUPT_COL, T.StringType())] if keep_corrupt else [])
+        + list(dataset.partition_schema().fields)
+    )
+
+
 def read_json_dataset(
     spark: SparkSession,
     json_root: str,
     dataset: Dataset,
-    conform: bool = True,
     keep_corrupt: bool = False,
     paths: list[str] | None = None,
 ) -> DataFrame:
@@ -130,12 +144,11 @@ def read_json_dataset(
     cast to their declared (string) catalog types — never read from file
     bodies, which kills the int-in-data/string-in-partition ambiguity.
 
-    With ``conform=True`` (default) the data columns are read through a
-    leaf-widened (all-string) twin of the declared schema and cast back —
-    full ``resolveChoice(choice="match_catalog")`` semantics (reference
-    json_s3_to_parquet.py:75-78): a file carrying ``"7"`` where an int is
-    declared, or an int where a double is declared, coerces instead of
-    silently NULLing as a strict-schema read would.
+    The data columns are read through :func:`lake_read_schema` and cast
+    back — full ``resolveChoice(choice="match_catalog")`` semantics
+    (reference json_s3_to_parquet.py:75-78): a file carrying ``"7"`` where
+    an int is declared, or an int where a double is declared, coerces
+    instead of silently NULLing as a strict-schema read would.
 
     ``keep_corrupt=True`` adds :data:`CORRUPT_COL` holding the raw text of
     any UNPARSEABLE line (PERMISSIVE mode's sidecar) — without it a
@@ -147,30 +160,18 @@ def read_json_dataset(
     ``paths`` restricts the scan to an explicit file list (the ledger's
     file-level pruning); ``basePath`` stays the dataset root so partition
     columns still resolve from the directory layout."""
-    path = os.path.join(json_root, f"dataset={dataset.name}")
-    source = paths if paths is not None else path
-    corrupt = (
-        [T.StructField(CORRUPT_COL, T.StringType())] if keep_corrupt else []
+    path = dataset_path(json_root, dataset.name)
+    df = (
+        spark.read.schema(lake_read_schema(dataset, keep_corrupt))
+        .option("basePath", path)
+        .json(paths if paths is not None else path)
     )
-    if conform:
-        widened = T.StructType(
-            [
-                T.StructField(f.name, _widen_leaves(f.dataType), True)
-                for f in dataset.data_schema().fields
-            ]
-            + corrupt
-            # partition columns stay declared (they come from the layout)
-            + list(dataset.partition_schema().fields)
+    out_schema = dataset.full_schema()
+    if keep_corrupt:
+        out_schema = T.StructType(
+            list(out_schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
-        df = spark.read.schema(widened).option("basePath", path).json(source)
-        out_schema = dataset.full_schema()
-        if keep_corrupt:
-            out_schema = T.StructType(
-                list(out_schema.fields) + corrupt
-            )
-        return conform_to_schema(df, out_schema)
-    schema = T.StructType(list(dataset.full_schema().fields) + corrupt)
-    return spark.read.schema(schema).option("basePath", path).json(source)
+    return conform_to_schema(df, out_schema)
 
 
 def write_parquet_dataset(
@@ -207,7 +208,6 @@ def run_json_to_parquet(
     registry: DatasetRegistry,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     mode: str = "append",
-    source_df: DataFrame | None = None,
     ledger=None,
     wide_ids: bool = False,
     corrupt_root: str | None = None,
@@ -223,9 +223,6 @@ def run_json_to_parquet(
     json_s3_to_parquet.py:74,103,233). Re-running over the same input is
     then a no-op (idempotent).
 
-    ``source_df`` overrides the JSON read (used by tests / the streaming
-    wrapper); it must already carry the partition columns.
-
     ``corrupt_root`` enables the stage-2 quarantine: unparseable lake
     lines are captured (see :func:`read_json_dataset` ``keep_corrupt``)
     and written there with their partition columns, instead of flowing on
@@ -240,79 +237,37 @@ def run_json_to_parquet(
     )
 
     ds = registry[dataset_name]
-    keep_corrupt = corrupt_root is not None and source_df is None
-    new_paths: list[str] | None = None
-    file_pruned = False
-    if source_df is not None:
-        df = source_df
-    else:
-        paths = None
-        if ledger is not None:
-            # File-level bookmark pruning (the Glue-bookmark shape): diff
-            # the dataset LISTING against the ledger driver-side and read
-            # ONLY unprocessed files. File-count-scale metadata — a no-op
-            # re-run touches zero data bytes, and an incremental run scans
-            # delta files instead of scan-everything-then-anti-join. (An
-            # all-empty batch is not committed — the isEmpty probe below
-            # returns before the sinks; an empty file in a mixed batch IS
-            # committed, which the row-level anti-join never did — strictly
-            # more bookmark-like: it contributes no rows and needs no
-            # rescan.)
-            dataset_dir = os.path.join(json_root, f"dataset={ds.name}")
-            if path_exists(spark, dataset_dir):
-                done = ledger.processed_paths(dataset_name)
-                new_paths = [
-                    p
-                    for p in list_data_files(spark, dataset_dir)
-                    if p not in done
-                ]
-                if not new_paths:
-                    return {}
-                paths = new_paths
-                file_pruned = True
-        df = read_json_dataset(
-            spark, json_root, ds, keep_corrupt=keep_corrupt, paths=paths
-        )
+    keep_corrupt = corrupt_root is not None
+    paths: list[str] | None = None
+    dataset_dir = dataset_path(json_root, ds.name)
+    if ledger is not None and path_exists(spark, dataset_dir):
+        # File-level bookmark pruning (the Glue-bookmark shape): diff the
+        # dataset LISTING against the ledger driver-side and read ONLY
+        # unprocessed files. File-count-scale metadata — a no-op re-run
+        # touches zero data bytes, and an incremental run scans only the
+        # delta files. An all-empty batch is not committed (the isEmpty
+        # probe below returns before the sinks); an empty file in a mixed
+        # batch is, since it contributes no rows and needs no rescan. A
+        # missing dataset directory falls through to the read, which
+        # raises.
+        done = ledger.processed_paths(dataset_name)
+        paths = [p for p in list_data_files(spark, dataset_dir) if p not in done]
+        if not paths:
+            return {}
+    df = read_json_dataset(spark, json_root, ds, keep_corrupt=keep_corrupt, paths=paths)
 
-    if ledger is not None and not file_pruned:
-        # caller-supplied frames carry no file listing to prune against —
-        # fall back to the row-level anti-join on input_file_name(). The
-        # ledger filter runs BEFORE the corrupt split so quarantine rows
-        # are incremental too: filtering after would re-append every
-        # already-ledgered file's corrupt rows on each run
-        df = df.withColumn("_source_file", F.input_file_name())
-        df = ledger.filter_new(df, dataset_name)
-
-    # Persist the (delta) batch ONCE before fan-out: the ledger path
-    # collect, the empty probe, the corrupt split, and EVERY table write
-    # otherwise re-scan and re-parse the JSON lake — 4+ full scans per
-    # run. The batch is delta-sized under a ledger (only files absent from
-    # it), which is exactly the frame a 100 TB incremental job
+    # Persist the (delta) batch ONCE before fan-out: the empty probe, the
+    # corrupt split, and EVERY table write otherwise re-scan and re-parse
+    # the JSON lake. The batch is delta-sized under a ledger (only files
+    # absent from it), which is exactly the frame a 100 TB incremental job
     # materializes before multi-table writes. (Persisting also satisfies
     # Spark's refusal of corrupt-column-only projections over a raw JSON
-    # scan — QUERY_ONLY_CORRUPT_RECORD_COLUMN.) A caller-supplied
-    # source_df without ledger columns is the CALLER's frame — persisting
-    # and unpersisting it here would evict a cache they may rely on.
-    own_frame = df is not source_df
-    cached = df = (
-        df.persist(StorageLevel.MEMORY_AND_DISK) if own_frame else df
-    )
+    # scan — QUERY_ONLY_CORRUPT_RECORD_COLUMN.)
+    cached = df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if ledger is not None and not file_pruned:
-            # file-count-scale collect: the paths to commit after the
-            # writes. This job also fills the cache, and its result decides
-            # emptiness for free (every row carries a source file) — no
-            # separate isEmpty scan.
-            new_paths = [
-                r["_source_file"]
-                for r in df.select("_source_file").distinct().collect()
-            ]
-            df = df.drop("_source_file")
-            if not new_paths:
-                return {}
         # Empty-input skip (reference json_s3_to_parquet.py:197,225):
         # cheap single-partition probe, not a full count.
-        elif df.isEmpty():
+        if df.isEmpty():
             return {}
 
         if keep_corrupt:
@@ -333,9 +288,8 @@ def run_json_to_parquet(
                 written[name] = write_parquet_dataset(table, parquet_root, name, mode=mode)
         else:
             written[dataset_name] = write_parquet_dataset(df, parquet_root, dataset_name, mode=mode)
-        if ledger is not None and new_paths:
-            ledger.commit(new_paths, dataset_name)  # post-write, like job.commit()
+        if paths:
+            ledger.commit(paths, dataset_name)  # post-write, like job.commit()
         return written
     finally:
-        if own_frame:
-            cached.unpersist()
+        cached.unpersist()

@@ -15,18 +15,16 @@ that is millions of paths, which fit on the driver. New work is therefore a
 :meth:`FileLedger.processed_paths`, and a commit is the same difference
 followed by one append of the new paths, after the sink write succeeds —
 mirroring the reference's post-write ``job.commit()`` ordering so a failed
-run reprocesses rather than drops files. :meth:`FileLedger.filter_new`
-keeps a broadcast anti-join for row frames supplied by callers, which carry
-no file listing.
+run reprocesses rather than drops files.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bridgedownstream_spark.pipeline.fsutil import delete_path, path_exists
 
@@ -64,26 +62,12 @@ class FileLedger:
             return set()
         return {r.file_path for r in self.processed_files(dataset).collect()}
 
-    def filter_new(self, df: DataFrame, dataset: str, file_col: str = "_source_file") -> DataFrame:
-        """Keep only rows from files not yet in the ledger: a broadcast
-        anti-join on the file path (operator S9 listing semantics — the
-        'scan' side is ``input_file_name()`` already on the rows)."""
-        ledger = self.processed_files(dataset).withColumnRenamed(
-            "file_path", file_col
-        )
-        return df.join(F.broadcast(ledger), file_col, "left_anti")
-
-    def commit(self, df_or_paths: DataFrame | list[str], dataset: str) -> int:
+    def commit(self, paths: Iterable[str], dataset: str) -> int:
         """Record files as processed; returns how many were new. Idempotent:
         paths already in the ledger, or repeated in the input, are recorded
-        once. A DataFrame contributes the distinct values of its first
-        column. Call AFTER the sink write succeeds — the reference's
+        once. Call AFTER the sink write succeeds — the reference's
         ``job.commit()`` ordering."""
-        if isinstance(df_or_paths, DataFrame):
-            first = df_or_paths.columns[0]
-            paths = {r[0] for r in df_or_paths.select(first).distinct().collect()}
-        else:
-            paths = set(df_or_paths)
+        paths = set(paths)
         if not paths:
             return 0
         new = list(paths - self.processed_paths(dataset))

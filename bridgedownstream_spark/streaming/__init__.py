@@ -1,8 +1,5 @@
 """Streaming/incremental processing.
 
-- :mod:`.availablenow` — Structured Streaming stage-2: checkpointed
-  ``Trigger.AvailableNow`` micro-batch over the JSON lake, the Spark-native
-  replacement for Glue job bookmarks.
 - :mod:`.stateful` — custom stateful operator (cross-batch record dedup
   via ``applyInPandasWithState``).
 - :mod:`.windowed` — watermarked event-time windowed aggregation.
@@ -12,14 +9,13 @@
   UPSERT: re-exported records replace their rows in place, keeping the
   parquet lake dedup-latest continuously.
 
-The ledger-based alternative (explicit processed-files table) lives in
-:mod:`bridgedownstream_spark.pipeline.ledger`; the streaming checkpoint is
-the lower-ops variant, the ledger the introspectable one (the reference
-needed a script just to *read* its bookmarks,
+The append-only stage 2 is bookmarked by the processed-files ledger
+(:mod:`bridgedownstream_spark.pipeline.ledger`), not by a streaming
+checkpoint: the ledger is a plain table, so it stays introspectable (the
+reference needed a script just to *read* its bookmarks,
 src/scripts/bookmarks/get-bookmarks.py).
 """
 
-from bridgedownstream_spark.streaming.availablenow import stream_json_to_parquet
 from bridgedownstream_spark.streaming.ingest_stream import stream_ingest
 from bridgedownstream_spark.streaming.joins import interval_join_streams
 from bridgedownstream_spark.streaming.lake_sync import (
@@ -30,7 +26,6 @@ from bridgedownstream_spark.streaming.stateful import dedup_stream
 from bridgedownstream_spark.streaming.windowed import session_counts, windowed_counts
 
 __all__ = [
-    "stream_json_to_parquet",
     "stream_ingest",
     "stream_upsert_lake",
     "sync_batch_to_lake",

@@ -27,7 +27,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
@@ -35,12 +34,13 @@ from bridgedownstream_spark.operators.relationalize import (
     relationalize,
 )
 from bridgedownstream_spark.pipeline.json_to_parquet import (
-    _widen_leaves,
     conform_to_schema,
+    lake_read_schema,
 )
 from bridgedownstream_spark.pipeline.fsutil import has_data_files, list_dirs
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
 from bridgedownstream_spark.pipeline.upsert import upsert_dataset
+from bridgedownstream_spark.sources.ndjson import dataset_path
 
 __all__ = ["sync_batch_to_lake", "stream_upsert_lake"]
 
@@ -65,7 +65,7 @@ def sync_batch_to_lake(
     parquet_root: str,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     registry: DatasetRegistry | None = None,
-) -> dict[str, str]:
+) -> tuple[dict[str, str], set[str]]:
     """Conform → relationalize → upsert one (micro-)batch into the lake.
 
     ``batch_df`` carries the widened data columns plus partition columns
@@ -193,12 +193,12 @@ def stream_upsert_lake(
     """Drain all NDJSON lake files not yet seen by ``checkpoint_root``
     through stage 2, upserting into the parquet lake, then return.
 
-    The stream reads through the leaf-widened declared schema (same
-    ``resolveChoice`` semantics as the batch reader — see
-    ``read_json_dataset``); partition columns resolve from the directory
-    layout. Re-running with the same checkpoint processes only files that
-    arrived since the last run; re-exported records replace their prior
-    rows instead of appending duplicates.
+    The stream reads through :func:`lake_read_schema`, like the batch
+    reader, so drifted scalar types coerce the same way (``resolveChoice``
+    semantics); partition columns resolve from the directory layout.
+    Re-running with the same checkpoint processes only files that arrived
+    since the last run; re-exported records replace their prior rows
+    instead of appending duplicates.
 
     When ``rollup_path`` is given (with ``rollup_group_cols`` and
     ``rollup_aggs``, see :func:`pipeline.rollup.refresh_rollup`), every
@@ -219,16 +219,11 @@ def stream_upsert_lake(
             "stream_upsert_lake: rollup_path requires non-empty rollup_aggs"
         )
     ds = registry[dataset_name]
-    path = os.path.join(json_root, f"dataset={ds.name}")
-    widened = T.StructType(
-        [
-            T.StructField(f.name, _widen_leaves(f.dataType), True)
-            for f in ds.data_schema().fields
-        ]
-        + list(ds.partition_schema().fields)
-    )
+    path = dataset_path(json_root, ds.name)
     stream = (
-        spark.readStream.schema(widened).option("basePath", path).json(path)
+        spark.readStream.schema(lake_read_schema(ds))
+        .option("basePath", path)
+        .json(path)
     )
 
     def _parse_part(p: str) -> dict:

@@ -6,10 +6,7 @@ suppression, and validity routing (quarantine split).
   suppression, record-level validity split.
 """
 
-from bridgedownstream_spark.validation.resolve import (
-    attach_schema_urls,
-    resolve_schema_url,
-)
+from bridgedownstream_spark.validation.resolve import resolve_schema_url
 from bridgedownstream_spark.validation.validate import (
     ANDROID_EXPECTED_ERRORS,
     split_valid_records,
@@ -18,7 +15,6 @@ from bridgedownstream_spark.validation.validate import (
 )
 
 __all__ = [
-    "attach_schema_urls",
     "resolve_schema_url",
     "validate_members",
     "suppress_expected_errors",

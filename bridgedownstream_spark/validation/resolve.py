@@ -15,18 +15,16 @@ three scopes with a per-record self-reference override
 
 Spark-first: resolution inputs have *config cardinality* — distinct
 (assessment, revision, filename) combos, bounded by the archive map itself,
-not by row count — so we resolve each distinct combo once driver-side and
-broadcast-join the resulting lookup table onto the member stream. 100 TB of
+not by row count — so the validation UDF
+(:func:`~bridgedownstream_spark.validation.validate.validate_members`)
+resolves each distinct combo once per executor and memoizes it. 100 TB of
 archives with the same few hundred assessment/file combos still resolve in
-milliseconds of driver work.
+milliseconds of work, in the same pass that validates them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-__all__ = ["resolve_schema_url", "attach_schema_urls"]
+__all__ = ["resolve_schema_url"]
 
 
 def resolve_schema_url(
@@ -69,39 +67,3 @@ def resolve_schema_url(
         if f.get("filename") == file_name and "jsonSchema" in f:
             return f["jsonSchema"]
     return None
-
-
-def attach_schema_urls(
-    members: DataFrame,
-    archive_map: dict,
-    app_id: str = "mobile-toolbox",
-) -> DataFrame:
-    """Add a ``schema_url`` column: self-ref override first, else archive-map
-    resolution via a broadcast-joined lookup of the distinct
-    (assessmentid, assessmentrevision, file_name) combos."""
-    spark = members.sparkSession
-    combos = [
-        (r["assessmentid"], r["assessmentrevision"], r["file_name"])
-        for r in members.select(
-            "assessmentid", "assessmentrevision", "file_name"
-        )
-        .distinct()
-        .collect()  # config-cardinality, bounded by the archive map
-    ]
-    rows = [
-        (aid, rev, fname, resolve_schema_url(archive_map, app_id, aid, int(rev), fname))
-        for aid, rev, fname in combos
-    ]
-    lookup = spark.createDataFrame(
-        rows,
-        "assessmentid string, assessmentrevision string, file_name string, "
-        "resolved_url string",
-    )
-    joined = members.join(
-        F.broadcast(lookup),
-        ["assessmentid", "assessmentrevision", "file_name"],
-        "left",
-    )
-    return joined.withColumn(
-        "schema_url", F.coalesce("self_ref_schema_url", "resolved_url")
-    ).drop("resolved_url")

@@ -68,21 +68,19 @@ ANDROID_EXPECTED_ERRORS: dict[str, list[str]] = {
 def validate_members(
     members: DataFrame,
     schema_store: dict[str, dict],
-    archive_map: dict | None = None,
+    archive_map: dict,
     app_id: str = "mobile-toolbox",
 ) -> DataFrame:
-    """Add an ``errors: array<string>`` column — the JSON-Schema validation
-    errors of ``body`` against its schema.
+    """Add a ``schema_url: string`` column, then an ``errors:
+    array<string>`` column — the governing schema's URL and the JSON-Schema
+    validation errors of ``body`` against it.
 
-    The governing schema URL comes from an existing ``schema_url`` column
-    (pre-resolved, e.g. by
-    :func:`~bridgedownstream_spark.validation.resolve.attach_schema_urls`);
-    when ``archive_map`` is given and no such column exists, resolution
-    happens *inside* the UDF with a per-executor memo on the distinct
-    (assessment, revision, filename) combos — the single-pass path: no
-    extra scan to enumerate combos, identical resolution semantics (the
-    self-ref column still wins). ``run_ingest`` uses this path; the
-    broadcast-join variant remains for pre-resolved flows.
+    The URL is the member's ``self_ref_schema_url`` when set, else the
+    ``archive_map`` resolution of its (assessment, revision, filename)
+    combo (:func:`~bridgedownstream_spark.validation.resolve.resolve_schema_url`).
+    Resolution happens *inside* the UDF with a per-executor memo on the
+    distinct combos, so validation stays a single pass with no extra scan
+    to enumerate them.
 
     ``schema_store`` maps schema URLs to schema documents (the engine's
     stand-in for the reference's HTTP fetch + cache, s3_to_json_s3.py:
@@ -90,14 +88,14 @@ def validate_members(
     in per-row network calls). Members with no resolved schema validate
     vacuously (reference skips them with a warning, :374-380).
     """
-    resolve_in_udf = archive_map is not None and "schema_url" not in members.columns
-    out_fields = list(members.schema.fields)
-    if resolve_in_udf:
-        out_fields.append(T.StructField("schema_url", T.StringType()))
-    out_fields.append(T.StructField("errors", T.ArrayType(T.StringType())))
-    out_schema = T.StructType(out_fields)
+    out_schema = T.StructType(
+        list(members.schema.fields)
+        + [
+            T.StructField("schema_url", T.StringType()),
+            T.StructField("errors", T.ArrayType(T.StringType())),
+        ]
+    )
     store = {k: v for k, v in schema_store.items()}  # plain dict → task closure
-    amap = archive_map
 
     def do_validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import jsonschema
@@ -130,16 +128,12 @@ def validate_members(
             key = (rec.assessmentid, rec.assessmentrevision, rec.file_name)
             if key not in resolved:
                 resolved[key] = resolve_schema_url(
-                    amap, app_id, key[0], int(key[1]), key[2]
+                    archive_map, app_id, key[0], int(key[1]), key[2]
                 )
             return resolved[key]
 
         for pdf in batches:
-            urls = (
-                [url_of(rec) for rec in pdf.itertuples(index=False)]
-                if resolve_in_udf
-                else list(pdf["schema_url"])
-            )
+            urls = [url_of(rec) for rec in pdf.itertuples(index=False)]
             errs = []
             for file_name, body, url in zip(pdf["file_name"], pdf["body"], urls):
                 if file_name == _CORRUPT_ARCHIVE_MEMBER:
@@ -162,8 +156,7 @@ def validate_members(
                     continue
                 errs.append([e.message for e in v.iter_errors(data)])
             pdf = pdf.copy()
-            if resolve_in_udf:
-                pdf["schema_url"] = urls
+            pdf["schema_url"] = urls
             pdf["errors"] = errs
             yield pdf
 

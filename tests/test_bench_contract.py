@@ -3,11 +3,15 @@ external harness's stdout capture, which keeps only the LAST 2000 bytes
 (measured from the r2 bench record, whose stored tail was exactly 2000
 chars with the JSON line truncated mid-line and never parsed).
 
+The repo benchmark's tracer (``perfbench/tracing.py``) is pinned here too:
+it wraps package names that must stay importable.
+
 These tests need no Spark session — they exercise the line builder pure.
 """
 
 from __future__ import annotations
 
+import importlib
 import json
 import sys
 from pathlib import Path
@@ -86,3 +90,16 @@ def test_certifying_window_is_exactly_fifty():
     component certified, no slot wasted)."""
     assert len(_CERTIFYING) == 50
     assert list(REGISTRY)[:50] == list(_CERTIFYING)
+
+
+def test_benchmark_tracer_targets_resolve():
+    """A traced benchmark run wraps every ``TARGETS`` name and every
+    ``LEDGER_METHODS`` method with a bare ``getattr``: deleting or renaming
+    one of them in the package crashes every ``--trace 1`` run."""
+    from bridgedownstream_spark.pipeline.ledger import FileLedger
+    from perfbench import tracing
+
+    for mod_name, attr, _layer in tracing.TARGETS:
+        assert callable(getattr(importlib.import_module(mod_name), attr)), (mod_name, attr)
+    for attr in tracing.LEDGER_METHODS:
+        assert callable(getattr(FileLedger, attr)), attr

@@ -1,17 +1,17 @@
-"""Incremental-processing tests: the processed-files ledger (bookmark
-equivalent) and the checkpointed streaming stage-2. Idempotency is the
-contract: re-running over the same input must write zero new rows
-(reference bookmarks, json_s3_to_parquet.py:74,103,233; reset protocol
+"""Incremental-processing tests: the processed-files ledger, stage 2's
+bookmark equivalent. Idempotency is the contract: re-running over the same
+input must write zero new rows (reference bookmarks,
+json_s3_to_parquet.py:74,103,233; reset protocol
 docs/schema_change_protocol.md §3e)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from bridgedownstream_spark.pipeline import DatasetRegistry, run_json_to_parquet
 from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.sources import write_ndjson_dataset
-from bridgedownstream_spark.streaming import stream_json_to_parquet
 
 REGISTRY = DatasetRegistry(
     {
@@ -82,34 +82,25 @@ def test_ledger_reset_reprocesses(spark, tmp_path):
     assert spark.read.parquet(f"{pq}/inc_v1").count() == 2
 
 
+def test_ledger_run_on_missing_dataset_raises(spark, tmp_path):
+    # no dataset directory is an error at the JSON read, never a silent
+    # empty run that would look like "nothing new"
+    json_root, pq, led = str(tmp_path / "j"), str(tmp_path / "p"), str(tmp_path / "l")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_json_to_parquet(
+            spark, json_root, pq, "inc_v1", REGISTRY, ledger=FileLedger(spark, led)
+        )
+
+
 def test_ledger_commit_dataframe_and_introspection(spark, tmp_path):
     ledger = FileLedger(spark, str(tmp_path / "l"))
-    paths = spark.createDataFrame([("f1",), ("f2",)], "file_path string")
-    assert ledger.commit(paths, "ds") == 2
+    assert ledger.commit(["f1", "f2"], "ds") == 2
     assert ledger.commit(["f2", "f3"], "ds") == 1  # dup filtered
     # the bookmark is introspectable as a plain table (unlike Glue's,
     # which needed its own script to read)
     assert {r["file_path"] for r in ledger.processed_files("ds").collect()} == {
         "f1", "f2", "f3",
     }
-
-
-def test_streaming_availablenow_incremental(spark, tmp_path):
-    json_root, pq, cp = str(tmp_path / "j"), str(tmp_path / "p"), str(tmp_path / "cp")
-    _write_batch(spark, json_root, [("r1", [1, 2])])
-    stream_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, cp)
-    assert spark.read.parquet(f"{pq}/inc_v1").count() == 1
-    assert spark.read.parquet(f"{pq}/inc_v1_items").count() == 2
-
-    # new records arrive; the checkpoint makes the second drain incremental
-    _write_batch(spark, json_root, [("r2", [5, 6, 7])])
-    stream_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, cp)
-    assert spark.read.parquet(f"{pq}/inc_v1").count() == 2
-    assert spark.read.parquet(f"{pq}/inc_v1_items").count() == 5
-
-    # third drain with nothing new: no growth (idempotent)
-    stream_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, cp)
-    assert spark.read.parquet(f"{pq}/inc_v1").count() == 2
 
 
 def test_ledger_file_level_pruning_with_empty_file(spark, tmp_path):

@@ -19,6 +19,7 @@ from bridgedownstream_spark.pipeline import (
     run_json_to_parquet,
 )
 from bridgedownstream_spark.sources import write_ndjson_dataset
+from bridgedownstream_spark.streaming import stream_upsert_lake
 
 REGISTRY_YAML = """
 tables:
@@ -108,10 +109,26 @@ def test_conform_to_schema_casts_and_fills(spark):
     assert r["missing"] is None
 
 
-def test_choice_type_coercion(spark, registry, tmp_path):
+def _read_batch(spark, root, registry, name, tmp_path):
+    return read_json_dataset(spark, root, registry[name])
+
+
+def _read_stream_upsert(spark, root, registry, name, tmp_path):
+    pq = str(tmp_path / "pq")
+    stream_upsert_lake(spark, root, pq, name, registry, str(tmp_path / "ckpt"))
+    return spark.read.parquet(f"{pq}/{name}")
+
+
+@pytest.mark.parametrize(
+    "read",
+    [_read_batch, _read_stream_upsert],
+    ids=["read_json_dataset", "stream_upsert_lake"],
+)
+def test_choice_type_coercion(spark, registry, tmp_path, read):
     # resolveChoice(match_catalog) fidelity: files disagree on leaf types
-    # (string "7" / double 7.5 / int 9 for a declared int; numeric string
-    # for a declared string) — every variant coerces, none NULLs.
+    # (string "7" / double 9.0 / int 9 for a declared int; a number for a
+    # declared string) — every variant coerces, none NULLs, and the batch
+    # and stream readers agree.
     import json as _json
     import os
 
@@ -125,7 +142,7 @@ def test_choice_type_coercion(spark, registry, tmp_path):
         f.write(_json.dumps({"recordid": "r1", "stringfield": 12, "intfield": "7"}) + "\n")
         f.write(_json.dumps({"recordid": "r2", "stringfield": "s", "intfield": 9.0}) + "\n")
         f.write(_json.dumps({"recordid": "r3", "stringfield": "t", "intfield": 9}) + "\n")
-    df = read_json_dataset(spark, root, registry["pytest_flat_table"])
+    df = read(spark, root, registry, "pytest_flat_table", tmp_path)
     got = {r["recordid"]: r for r in df.collect()}
     assert got["r1"]["intfield"] == 7  # string "7" → int
     assert got["r1"]["stringfield"] == "12"  # number → declared string

@@ -224,25 +224,51 @@ def test_every_query_plan_is_scale_clean(registry_dfs):
 def test_every_query_scans_only_declared_inputs(registry_dfs):
     """De-cache invariant as CI (VERDICT r9 #9): every file path any
     registry plan scans must be (a) the testdata dir itself, (b) a /tmp
-    fixture lake written by the declared pipeline builders (bds_* — the
-    write-once ETL artifacts the lake queries READ, rebuilt per process),
-    or (c) the local spark-warehouse. Anything else — in particular the
+    fixture lake written by the declared pipeline builders (one of the
+    bds_<name>_ prefixes listed below — the write-once ETL artifacts the
+    lake queries READ, rebuilt per process), or (c) the local
+    spark-warehouse. Anything else — in particular the
     r3-r5-era stamped result caches (bds_lshcand_*, bds_pq_*,
     bds_ivfpq_*) removed by the r9 de-cache — is result caching across
     runs: gaming, not optimization."""
     # substring tokens, not prefixes: plan text renders some locations as
-    # glob/regex patterns (e.g. ")?/*tmp/bds_compactlake_sf0\\.001/")
-    allowed = ("testdata/", "tmp/bds_", "spark-warehouse")
+    # glob/regex patterns (e.g. ")?/*tmp/bds_compactlake_sf0\\.001/").
+    # One token per fixture-lake prefix the package writes.
+    fixture_lakes = (
+        "tmp/bds_archlake_", "tmp/bds_bkt_lineitem_", "tmp/bds_bkt_orders_",
+        "tmp/bds_bloomlake_", "tmp/bds_bloommani_", "tmp/bds_bucketed_",
+        "tmp/bds_compactlake_", "tmp/bds_csv_", "tmp/bds_evolve_",
+        "tmp/bds_fw_", "tmp/bds_ingest_", "tmp/bds_jview_", "tmp/bds_lake_",
+        "tmp/bds_manifest_", "tmp/bds_orc_", "tmp/bds_sdedup_",
+        "tmp/bds_senrich_", "tmp/bds_sfjoin_", "tmp/bds_sijoin_",
+        "tmp/bds_sljoin_", "tmp/bds_ssess_", "tmp/bds_streamsrc_",
+        "tmp/bds_upsertlake_", "tmp/bds_wflake_", "tmp/bds_winagg_",
+        "tmp/bds_zorder_",
+    )
+    allowed = ("testdata/", "spark-warehouse", *fixture_lakes)
     forbidden = ("bds_lshcand", "bds_pq_", "bds_ivfpq_")
+
+    def declared(raw: str) -> bool:
+        path = raw.rstrip(".")
+        if any(a in path for a in allowed):
+            return True
+        # plan metadata longer than spark.sql.maxMetadataStringLength is
+        # cut and ends in "...", and where it is cut depends on expression
+        # ids: a cut fixture-lake name must still begin a declared prefix
+        cut = re.search(r"tmp/bds_[a-z_]*$", path)
+        return (
+            raw.endswith("...")
+            and cut is not None
+            and any(t.startswith(cut.group(0)) for t in fixture_lakes)
+        )
+
     bad = []
     for name, df in registry_dfs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         for m in re.finditer(r"file:([^\s,\]]+)", plan):
-            path = m.group(1).rstrip(".")
-            if any(f in path for f in forbidden) or not any(
-                a in path for a in allowed
-            ):
-                bad.append(f"{name}: {path}")
+            raw = m.group(1)
+            if any(f in raw for f in forbidden) or not declared(raw):
+                bad.append(f"{name}: {raw}")
     assert not bad, f"plans scan undeclared paths: {bad}"
 
 

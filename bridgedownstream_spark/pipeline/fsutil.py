@@ -2,10 +2,9 @@
 
 Path existence / listing / deletion must go through Hadoop's FS layer (not
 ``os``) so the same code works on file://, s3a://, and hdfs:// — one RPC per
-call, never a recursive local walk. This is the pattern
-``workflow.discover_datasets`` established; these helpers make it reusable
-for the upsert sink's empty-partition cleanup and the rollup's
-existence check (a blanket ``except`` around ``spark.read`` treats
+call, never a recursive local walk. The workflow's dataset discovery, the
+upsert sink's empty-partition cleanup and the rollup's existence check
+all use these helpers (a blanket ``except`` around ``spark.read`` treats
 transient failures as "table absent", which is how aggregates get silently
 doubled — check existence explicitly instead).
 """
@@ -53,21 +52,7 @@ def list_data_files(spark: SparkSession, path: str) -> list[str]:
     metadata, one FS traversal: this is what lets the ledger prune work at
     the LISTING instead of anti-joining parsed rows (a no-op incremental
     run then touches zero data bytes, like a Glue bookmark)."""
-    fs, p = _fs_and_path(spark, path)
-    if not fs.exists(p):
-        return []
-    out: list[str] = []
-    stack = [p]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue  # hidden file OR hidden subtree
-            if st.isDirectory():
-                stack.append(st.getPath())
-            else:
-                out.append(st.getPath().toString())
-    return sorted(out)
+    return sorted(st.getPath().toString() for st in _visible_files(spark, path))
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
@@ -91,17 +76,25 @@ def has_data_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> 
     schema from). Existence alone is therefore the wrong "is there a
     table?" probe; this one stops at the first real data file.
     """
+    return any(
+        st.getPath().getName().endswith(suffix)
+        for st in _visible_files(spark, path)
+    )
+
+
+def _visible_files(spark: SparkSession, path: str):
+    """Yield the ``FileStatus`` of every visible file under ``path``
+    (nothing if it is absent), applying Spark's hidden-path rule: a
+    component starting with ``_`` or ``.`` hides its whole subtree."""
     fs, p = _fs_and_path(spark, path)
     if not fs.exists(p):
-        return False
+        return
     stack = [p]
     while stack:
         for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
+            if st.getPath().getName().startswith(("_", ".")):
                 continue  # hidden file OR hidden subtree
             if st.isDirectory():
                 stack.append(st.getPath())
-            elif name.endswith(suffix):
-                return True
-    return False
+            else:
+                yield st

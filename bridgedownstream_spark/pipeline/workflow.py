@@ -23,6 +23,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bridgedownstream_spark.pipeline.fsutil import list_dirs
 from bridgedownstream_spark.pipeline.json_to_parquet import run_json_to_parquet
 from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.pipeline.registry import DatasetRegistry
@@ -35,18 +36,11 @@ def discover_datasets(spark: SparkSession, json_root: str) -> list[str]:
     directories. Uses the Hadoop FileSystem API so the same call works on
     file://, s3a://, hdfs:// — one RPC for the top level, never a recursive
     walk."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(json_root)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return []
-    names = []
-    for status in fs.listStatus(p):
-        base = status.getPath().getName()
-        if status.isDirectory() and base.startswith("dataset="):
-            names.append(base.split("=", 1)[1])
-    return sorted(names)
+    return [
+        name.split("=", 1)[1]
+        for name in list_dirs(spark, json_root)
+        if name.startswith("dataset=")
+    ]
 
 
 def run_study_workflow(

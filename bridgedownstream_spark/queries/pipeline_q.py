@@ -10,14 +10,23 @@ back. The DuckDB oracle recomputes the same result straight from the source
 tables — so a pass certifies the whole write→relationalize→read cycle, not
 just a projection.
 
-The pipeline output is built once per (process, sf_dir) and cached: the
-lake lives under /tmp keyed by sf, and queries after the first just read it.
+Every fixture a query reads is built once per (process, sf_dir): a
+builder decorated with ``@_fixture`` is memoized per ``sf_dir`` and
+registered in ``FIXTURES``, which the query runners build before timing
+anything. Each fixture lives in its own emptied ``<tmp>/bds_<name>_<sf>``
+directory (``_fixture_dir``); queries after the first just read it.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
 import os
+import shutil
 import tempfile
+import time
+import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +44,36 @@ def q(name: str, oracle: str | None):
         return fn
 
     return deco
+
+
+#: every fixture builder, in definition order
+FIXTURES: list = []
+
+
+def _fixture(build):
+    """Memoize ``build(spark, sf_dir)`` per ``sf_dir`` and register it in
+    ``FIXTURES``. A build that raises stores nothing, so the next call
+    retries it."""
+    built: dict = {}
+
+    @functools.wraps(build)
+    def once(spark: SparkSession, sf_dir: str):
+        if sf_dir not in built:
+            built[sf_dir] = build(spark, sf_dir)
+        return built[sf_dir]
+
+    FIXTURES.append(once)
+    return once
+
+
+def _fixture_dir(name: str, sf_dir: str) -> str:
+    """``<tmp>/bds_<name>_<sf tag>``, emptied so every build starts clean."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"bds_{name}_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 #: keep every 20th order so the e2e rebuild stays cheap at bench scale
@@ -57,9 +96,6 @@ _REGISTRY = DatasetRegistry(
     }
 )
 
-#: (sf_dir) -> {table_name: parquet_path} for the already-built lake
-_BUILT: dict[str, dict[str, str]] = {}
-
 _ORACLE_SOURCE = f"""
     FROM orders o
     WHERE o_orderkey % {_SAMPLE} = 0
@@ -75,10 +111,11 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+@_fixture
 def _build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Stage 1 (sink) + stage 2 (job) over the sampled nested dataset."""
-    if sf_dir in _BUILT:
-        return _BUILT[sf_dir]
+    """Stage 1 (sink) + stage 2 (job) over the sampled nested dataset:
+    ``{table_name: parquet_path}`` plus the ``__json_root__`` and
+    ``__base__`` paths."""
     o = tbl(spark, sf_dir, "orders").where(F.col("o_orderkey") % _SAMPLE == 0)
     li = tbl(spark, sf_dir, "lineitem")
     items = li.groupBy("l_orderkey").agg(
@@ -100,10 +137,7 @@ def _build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         F.lit("01").alias("month"),
         F.lit("01").alias("day"),
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_lake_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
+    base = _fixture_dir("lake", sf_dir)
     json_root, pq_root = os.path.join(base, "json"), os.path.join(base, "parquet")
     write_ndjson_dataset(nested, json_root, "rec_v1", mode="overwrite")
     written = run_json_to_parquet(
@@ -111,15 +145,8 @@ def _build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         key_cols=("assessmentid", "year", "month", "day", "recordid"),
         mode="overwrite",
     )
-    written = dict(written)
-    written["__json_root__"] = json_root
-    written["__base__"] = base
-    _BUILT[sf_dir] = written
-    return written
+    return {**written, "__json_root__": json_root, "__base__": base}
 
-
-#: sf_dir -> ingest lake root (built once per process)
-_INGESTED: dict[str, str] = {}
 
 _EVENTS_SCHEMA = {
     "$id": "schemas/v1/EventList",
@@ -135,19 +162,43 @@ _EVENTS_SCHEMA = {
     },
 }
 
+#: archive-map entry routing an events.json member to the events schema
+_EVENTS_ASSESSMENT = {
+    "assessmentIdentifier": "events",
+    "assessmentRevision": 1,
+    "files": [{"filename": "events.json", "jsonSchema": "https://example.org/events"}],
+}
 
-def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
-    """Stage-1 fixture: one zip archive per user (user_id < 10) whose
-    events.json member is the user's events as a JSON array, built from the
-    real events table — then run the full ingest job (fan-out, validation,
-    routing, per-element injection, NDJSON lake)."""
-    if sf_dir in _INGESTED:
-        return _INGESTED[sf_dir]
-    import json
-    import zipfile
+#: declared columns of the eventlist_v1 lake table
+_EVENTLIST_V1 = {
+    "columns": [
+        {"Name": "event_id", "Type": "bigint"},
+        {"Name": "event_type", "Type": "string"},
+        {"Name": "value", "Type": "double"},
+        {"Name": "recordid", "Type": "string"},
+    ]
+}
 
-    from bridgedownstream_spark.pipeline.ingest import run_ingest
+_MANIFEST_DDL = (
+    "path string, recordid string, assessmentid string, "
+    "assessmentrevision string, uploadedon string, clientinfo string"
+)
 
+
+def _events_body(evs: list) -> list[dict]:
+    return [
+        {"event_id": r["event_id"], "event_type": r["event_type"], "value": r["value"]}
+        for r in evs
+    ]
+
+
+def _user_archives(
+    spark: SparkSession, sf_dir: str, arch_dir: str, member_of
+) -> list[tuple]:
+    """Write one zip archive per user (user_id < 10) of the real events
+    table into ``arch_dir``. ``member_of(uid, events)`` gives the archive's
+    one ``(member name, assessment id, JSON body)``; the events are sorted
+    by event_id. Returns the archives' manifest rows (``_MANIFEST_DDL``)."""
     rows = (
         tbl(spark, sf_dir, "events")
         .where(F.col("user_id") < 10)
@@ -157,32 +208,35 @@ def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
     by_user: dict[int, list] = {}
     for r in rows:
         by_user.setdefault(r["user_id"], []).append(r)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_ingest_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    arch_dir = os.path.join(base, "archives")
     os.makedirs(arch_dir, exist_ok=True)
     manifest_rows = []
     for uid, evs in sorted(by_user.items()):
-        evs = sorted(evs, key=lambda r: r["event_id"])
+        member, assess, body = member_of(uid, sorted(evs, key=lambda r: r["event_id"]))
         path = os.path.join(arch_dir, f"user{uid}.zip")
         with zipfile.ZipFile(path, "w") as z:
-            z.writestr(
-                "events.json",
-                json.dumps(
-                    [
-                        {"event_id": r["event_id"], "event_type": r["event_type"], "value": r["value"]}
-                        for r in evs
-                    ]
-                ),
-            )
+            z.writestr(member, json.dumps(body))
         manifest_rows.append(
-            (path, str(uid), "events", "1", "2024-01-02T00:00:00.000Z", "iPhone 13")
+            (path, str(uid), assess, "1", "2024-01-02T00:00:00.000Z", "iPhone 13")
         )
+    return manifest_rows
+
+
+@_fixture
+def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
+    """Stage-1 fixture: one zip archive per user (user_id < 10) whose
+    events.json member is the user's events as a JSON array, built from the
+    real events table — then run the full ingest job (fan-out, validation,
+    routing, per-element injection, NDJSON lake). Returns the lake root."""
+    from bridgedownstream_spark.pipeline.ingest import run_ingest
+
+    base = _fixture_dir("ingest", sf_dir)
+    arch_dir = os.path.join(base, "archives")
+    manifest_rows = _user_archives(
+        spark,
+        sf_dir,
+        arch_dir,
+        lambda uid, evs: ("events.json", "events", _events_body(evs)),
+    )
     # one malformed archive exercises the quarantine path: the body is an
     # object where the schema demands an array
     bad = os.path.join(arch_dir, "bad.zip")
@@ -191,29 +245,12 @@ def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
     manifest_rows.append(
         (bad, "badrec", "events", "1", "2024-01-02T00:00:00.000Z", "iPhone 13")
     )
-    manifest = spark.createDataFrame(
-        manifest_rows,
-        "path string, recordid string, assessmentid string, assessmentrevision string, "
-        "uploadedon string, clientinfo string",
-    )
     json_root = os.path.join(base, "json")
     run_ingest(
         spark,
         archive_path=os.path.join(arch_dir, "*.zip"),
-        manifest=manifest,
-        archive_map={
-            "assessments": [
-                {
-                    "assessmentIdentifier": "events",
-                    "assessmentRevision": 1,
-                    "files": [
-                        {"filename": "events.json", "jsonSchema": "https://example.org/events"}
-                    ],
-                }
-            ],
-            "apps": [],
-            "anyOf": [],
-        },
+        manifest=spark.createDataFrame(manifest_rows, _MANIFEST_DDL),
+        archive_map={"assessments": [_EVENTS_ASSESSMENT], "apps": [], "anyOf": []},
         schema_store={"https://example.org/events": _EVENTS_SCHEMA},
         schema_mapping={"schemas/v1/EventList": "eventlist_v1"},
         dataset_mapping=None,
@@ -222,7 +259,6 @@ def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
         mode="overwrite",
         collect_counts=False,
     )
-    _INGESTED[sf_dir] = json_root
     return json_root
 
 
@@ -295,8 +331,6 @@ def workflow_properties(spark, sf_dir):
     # record population the ingest fixture uses (bounded: ≤11 records), so
     # the parse path is exercised end-to-end and the oracle recomputes the
     # manifest from the events table.
-    import json as _json
-
     from bridgedownstream_spark.sources.listing import manifest_from_messages
 
     json_root = _build_ingest_lake(spark, sf_dir)
@@ -329,7 +363,7 @@ def workflow_properties(spark, sf_dir):
             "clientinfo": "iPhone 13",
         }
     ]
-    mf = manifest_from_messages(spark, _json.dumps(messages))
+    mf = manifest_from_messages(spark, json.dumps(messages))
     return mf.select(
         "recordid",
         "assessmentid",
@@ -425,56 +459,49 @@ def expected_error_suppression(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained windowed continuous aggregate
-_WINAGG: dict[str, str] = {}
-
-#: (sf_dir) -> two-file NDJSON stream source of the events table
-_STREAM_SRC: dict[str, str] = {}
-
 #: micros-precision JSON timestamp format — the default writer format
 #: truncates to milliseconds, which would shift window membership
 _TS_JSON_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
+_STREAM_SRC_DDL = (
+    "event_id long, ts timestamp, user_id long, "
+    "event_type string, value decimal(24,10)"
+)
 
-class _drain_partitions:
-    """Run a stream-drain fixture build at ``n`` shuffle partitions.
 
-    The fixture corpora are event-table-sized, where 32-way state-store
-    tasks are pure scheduling overhead — 8-way halves the drain wall time
-    (measured 36.9 → 16.8 s for the full-outer join drain). The drained
-    OUTPUT is partition-count-invariant (same rows, different file
-    split; every consumer aggregates or value-hashes), and each build
-    rmtree's its checkpoint first, so the count a fresh checkpoint pins
-    can never conflict with a prior one. Restores the session value on
-    exit — fixture builds are sequential (bench warmup / pytest), so no
+def _drain(spark: SparkSession, writer, ckpt: str, what: str) -> None:
+    """Drain a stream fixture: start ``writer`` (a ``DataStreamWriter``)
+    checkpointed at ``ckpt`` with an availableNow trigger and wait up to
+    300 s for it to finish.
+
+    The drain runs at 8 shuffle partitions. The fixture corpora are
+    event-table-sized, where 32-way state-store tasks are pure scheduling
+    overhead — 8-way halves the drain wall time (measured 36.9 → 16.8 s
+    for the full-outer join drain). The drained OUTPUT is
+    partition-count-invariant (same rows, different file split; every
+    consumer aggregates or value-hashes), and each build starts from an
+    emptied fixture dir, so the count a fresh checkpoint pins can never
+    conflict with a prior one. The session value is restored afterwards —
+    fixture builds are sequential (warm-up / pytest), so no
     concurrently-planned query can observe the window."""
-
-    def __init__(self, spark: SparkSession, n: str = "8"):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q_ = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        if not q_.awaitTermination(300):
+            q_.stop()
+            raise TimeoutError(f"{what} drain exceeded 300s ({ckpt})")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+@_fixture
 def _build_stream_src(spark: SparkSession, sf_dir: str) -> str:
     """The shared file-stream source: events as exactly TWO NDJSON files,
     so a maxFilesPerTrigger=1 reader sees two micro-batches — each key's
     rows hash-split across both, which is what makes cross-batch state
     (windows, dedup) actually exercised rather than vacuous."""
-    if sf_dir in _STREAM_SRC:
-        return _STREAM_SRC[sf_dir]
-    import shutil
-
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_streamsrc_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(src, ignore_errors=True)
+    src = _fixture_dir("streamsrc", sf_dir)
     (
         tbl(spark, sf_dir, "events")
         .select(
@@ -488,22 +515,36 @@ def _build_stream_src(spark: SparkSession, sf_dir: str) -> str:
         .write.option("timestampFormat", _TS_JSON_FMT)
         .json(src)
     )
-    _STREAM_SRC[sf_dir] = src
     return src
 
 
-def _read_stream_src(spark: SparkSession, src: str):
+def _read_stream_src(spark: SparkSession, src: str, schema: str = _STREAM_SRC_DDL):
+    """A one-file-per-micro-batch NDJSON stream over ``src``."""
     return (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value decimal(24,10)"
-        )
+        spark.readStream.schema(schema)
         .option("timestampFormat", _TS_JSON_FMT)
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )
 
 
+def _time_ordered_json(base: str, src: str, parts: list[DataFrame]) -> None:
+    """Write each of ``parts`` as one NDJSON file ``src/<i>.json``, staged
+    under ``base`` and mtime-staggered 30 s apart: the file stream picks
+    files oldest-mtime-first, so this pins the micro-batch order."""
+    os.makedirs(src)
+    now = time.time()
+    for i, p in enumerate(parts):
+        tmp = os.path.join(base, f"tmp{i}")
+        p.coalesce(1).write.option("timestampFormat", _TS_JSON_FMT).json(tmp)
+        (part,) = glob.glob(os.path.join(tmp, "part-*.json"))
+        dst = os.path.join(src, f"{i:02d}.json")
+        shutil.move(part, dst)
+        os.utime(dst, (now + 30 * i, now + 30 * i))
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@_fixture
 def _build_windowed_rollup(spark: SparkSession, sf_dir: str) -> str:
     """Streaming continuous-aggregate fixture: events drained as a
     TWO-micro-batch file stream (maxFilesPerTrigger=1) through the
@@ -522,20 +563,11 @@ def _build_windowed_rollup(spark: SparkSession, sf_dir: str) -> str:
     carry-over is still fully exercised (batch 2 updates windows batch 1
     opened). Sums run on DECIMAL end-to-end, so emission values are
     independent of partial-agg merge order."""
-    if sf_dir in _WINAGG:
-        return _WINAGG[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.streaming.windowed import windowed_counts
 
     src = _build_stream_src(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_winagg_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("winagg", sf_dir)
     out = os.path.join(base, "agg")
-    ckpt = os.path.join(base, "ckpt")
     stream = _read_stream_src(spark, src).drop("user_id")
     agg = windowed_counts(
         stream, "ts", "event_type", "10 minutes", watermark="90 days",
@@ -547,18 +579,12 @@ def _build_windowed_rollup(spark: SparkSession, sf_dir: str) -> str:
             "append"
         ).parquet(out)
 
-    with _drain_partitions(spark):
-        q_ = (
-            agg.writeStream.foreachBatch(_upsert)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"windowed rollup drain exceeded 300s ({ckpt})")
-    _WINAGG[sf_dir] = out
+    _drain(
+        spark,
+        agg.writeStream.foreachBatch(_upsert).outputMode("update"),
+        os.path.join(base, "ckpt"),
+        "windowed rollup",
+    )
     return out
 
 
@@ -600,10 +626,7 @@ def stream_windowed_rollup(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained streaming sessionization
-_SSESS: dict[str, str] = {}
-
-
+@_fixture
 def _build_stream_sessions(spark: SparkSession, sf_dir: str) -> str:
     """APPEND-mode session drain: session windows refuse update mode (a
     merged session has no stable update key), so finalization must come
@@ -616,28 +639,16 @@ def _build_stream_sessions(spark: SparkSession, sf_dir: str) -> str:
     sentinel batches push the watermark past every real session's
     end+gap, and the last batch emits the finalized tail. The appended
     output is exactly the batch sessionization of the real events."""
-    if sf_dir in _SSESS:
-        return _SSESS[sf_dir]
-    import glob
-    import shutil
-    import time as _time
+    import datetime as _dt
 
     from bridgedownstream_spark.streaming.windowed import session_counts
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_ssess_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("ssess", sf_dir)
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
     ev = tbl(spark, sf_dir, "events").select("user_id", "ts")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     mid = lo + (hi - lo) / 2
-    import datetime as _dt
-
     parts = [
         ev.where(F.col("ts") <= F.lit(mid)),
         ev.where(F.col("ts") > F.lit(mid)),
@@ -648,38 +659,17 @@ def _build_stream_sessions(spark: SparkSession, sf_dir: str) -> str:
             [(-1, hi + _dt.timedelta(hours=2))], "user_id long, ts timestamp"
         ),
     ]
-    now = _time.time()
-    for i, p in enumerate(parts):
-        tmp = os.path.join(base, f"tmp{i}")
-        p.coalesce(1).write.option("timestampFormat", _TS_JSON_FMT).json(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.json"))
-        dst = os.path.join(src, f"{i:02d}.json")
-        shutil.move(part, dst)
-        # the file stream picks files oldest-mtime-first: pin the order
-        os.utime(dst, (now + 30 * i, now + 30 * i))
-        shutil.rmtree(tmp, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("timestampFormat", _TS_JSON_FMT)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
+    _time_ordered_json(base, src, parts)
     sess = session_counts(
-        stream, "ts", "user_id", gap="30 minutes", watermark="10 minutes"
+        _read_stream_src(spark, src, "user_id long, ts timestamp"),
+        "ts", "user_id", gap="30 minutes", watermark="10 minutes",
     )
-    with _drain_partitions(spark):
-        q_ = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stream sessionize drain exceeded 300s ({ckpt})")
-    _SSESS[sf_dir] = out
+    _drain(
+        spark,
+        sess.writeStream.format("parquet").option("path", out).outputMode("append"),
+        os.path.join(base, "ckpt"),
+        "stream sessionize",
+    )
     return out
 
 
@@ -741,25 +731,13 @@ def stream_sessionize_e2e(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained stream-stream interval join
-_SIJOIN: dict[str, str] = {}
-
-
+@_fixture
 def _build_stream_ijoin(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SIJOIN:
-        return _SIJOIN[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.streaming.joins import interval_join_streams
 
     src = _build_stream_src(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_sijoin_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("sijoin", sf_dir)
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     left = (
         _read_stream_src(spark, src)
         .where(F.col("event_id") % 2 == 0)
@@ -777,17 +755,12 @@ def _build_stream_ijoin(spark: SparkSession, sf_dir: str) -> str:
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    with _drain_partitions(spark):
-        q_ = (
-            joined.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stream interval-join drain exceeded 300s ({ckpt})")
-    _SIJOIN[sf_dir] = out
+    _drain(
+        spark,
+        joined.writeStream.foreachBatch(_sink),
+        os.path.join(base, "ckpt"),
+        "stream interval-join",
+    )
     return out
 
 
@@ -818,41 +791,17 @@ def stream_interval_join_e2e(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained stream-stream LEFT OUTER join
-_SLJOIN: dict[str, str] = {}
-
-
-def _build_stream_ljoin(spark: SparkSession, sf_dir: str) -> str:
-    """LEFT OUTER interval-join drain. Outer emission is WATERMARK-driven
-    (an unmatched left row may only emit once no partner can still
-    arrive), so the fixture uses the sessionize protocol: a TIME-ORDERED
-    four-file source — two real halves split at the midpoint timestamp,
-    then two sentinel files an hour+ past the real maximum, each carrying
-    one row per SIDE (ids far past the real range, user_id < 0 so they
-    can never join) so BOTH inputs' watermarks advance — and the final
-    sentinel batch flushes the entire unmatched tail. With the source
-    time-ordered no real row is ever late-dropped, so the drained set
-    equals the batch left join exactly."""
-    if sf_dir in _SLJOIN:
-        return _SLJOIN[sf_dir]
+def _sentinel_event_stream(spark: SparkSession, sf_dir: str, base: str):
+    """The outer interval joins' TIME-ORDERED four-file source under
+    ``base/src``, read as a one-file-per-batch stream of
+    ``(event_id, ts, user_id)``: two real halves split at the midpoint
+    timestamp, then two sentinel files an hour+ past the real maximum,
+    each carrying one row per parity of event_id (ids far past the real
+    range, user_id < 0 so they can never join), so BOTH join inputs'
+    watermarks advance and the final sentinel batch flushes the whole
+    unmatched tail."""
     import datetime as _dt
-    import glob
-    import shutil
-    import time as _time
 
-    from bridgedownstream_spark.streaming.joins import (
-        interval_left_join_streams,
-    )
-
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_sljoin_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
     ev = tbl(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     mid = lo + (hi - lo) / 2
@@ -871,21 +820,26 @@ def _build_stream_ljoin(spark: SparkSession, sf_dir: str) -> str:
             "event_id long, ts timestamp, user_id long",
         ),
     ]
-    now = _time.time()
-    for i, p in enumerate(parts):
-        tmp = os.path.join(base, f"tmp{i}")
-        p.coalesce(1).write.option("timestampFormat", _TS_JSON_FMT).json(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.json"))
-        dst = os.path.join(src, f"{i:02d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 30 * i, now + 30 * i))
-        shutil.rmtree(tmp, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long")
-        .option("timestampFormat", _TS_JSON_FMT)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
+    src = os.path.join(base, "src")
+    _time_ordered_json(base, src, parts)
+    return _read_stream_src(spark, src, "event_id long, ts timestamp, user_id long")
+
+
+@_fixture
+def _build_stream_ljoin(spark: SparkSession, sf_dir: str) -> str:
+    """LEFT OUTER interval-join drain. Outer emission is WATERMARK-driven
+    (an unmatched left row may only emit once no partner can still
+    arrive), so the fixture uses the sessionize protocol over the
+    sentinel source (_sentinel_event_stream). With the source
+    time-ordered no real row is ever late-dropped, so the drained set
+    equals the batch left join exactly."""
+    from bridgedownstream_spark.streaming.joins import (
+        interval_left_join_streams,
     )
+
+    base = _fixture_dir("sljoin", sf_dir)
+    out = os.path.join(base, "out")
+    stream = _sentinel_event_stream(spark, sf_dir, base)
     left = stream.where(F.col("event_id") % 2 == 0)
     right = stream.where(
         (F.col("event_id") % 2 == 1) | (F.col("event_id") % 2 == -1)
@@ -893,19 +847,12 @@ def _build_stream_ljoin(spark: SparkSession, sf_dir: str) -> str:
     joined = interval_left_join_streams(
         left, right, "user_id", tolerance="10 minutes", watermark="10 minutes"
     )
-    with _drain_partitions(spark):
-        q_ = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stream left-join drain exceeded 300s ({ckpt})")
-    _SLJOIN[sf_dir] = out
+    _drain(
+        spark,
+        joined.writeStream.format("parquet").option("path", out).outputMode("append"),
+        os.path.join(base, "ckpt"),
+        "stream left-join",
+    )
     return out
 
 
@@ -947,86 +894,30 @@ def stream_left_join_e2e(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained stream-stream FULL OUTER join
-_SFJOIN: dict[str, str] = {}
-
-
+@_fixture
 def _build_stream_fjoin(spark: SparkSession, sf_dir: str) -> str:
-    """FULL OUTER interval-join drain — same time-ordered four-file
-    sentinel protocol as the left join (see _build_stream_ljoin): both
-    sides' watermarks must advance past every real row's expiry so BOTH
-    unmatched tails flush before the drain ends."""
-    if sf_dir in _SFJOIN:
-        return _SFJOIN[sf_dir]
-    import datetime as _dt
-    import glob
-    import shutil
-    import time as _time
-
+    """FULL OUTER interval-join drain — same sentinel protocol as the left
+    join (see _build_stream_ljoin): both sides' watermarks must advance
+    past every real row's expiry so BOTH unmatched tails flush before the
+    drain ends."""
     from bridgedownstream_spark.streaming.joins import (
         interval_full_join_streams,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_sfjoin_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
+    base = _fixture_dir("sfjoin", sf_dir)
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src)
-    ev = tbl(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    mid = lo + (hi - lo) / 2
-    big = 10**15
-    parts = [
-        ev.where(F.col("ts") <= F.lit(mid)),
-        ev.where(F.col("ts") > F.lit(mid)),
-        spark.createDataFrame(
-            [(big, hi + _dt.timedelta(hours=1), -1),
-             (big + 1, hi + _dt.timedelta(hours=1), -2)],
-            "event_id long, ts timestamp, user_id long",
-        ),
-        spark.createDataFrame(
-            [(big + 2, hi + _dt.timedelta(hours=2), -1),
-             (big + 3, hi + _dt.timedelta(hours=2), -2)],
-            "event_id long, ts timestamp, user_id long",
-        ),
-    ]
-    now = _time.time()
-    for i, p in enumerate(parts):
-        tmp = os.path.join(base, f"tmp{i}")
-        p.coalesce(1).write.option("timestampFormat", _TS_JSON_FMT).json(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.json"))
-        dst = os.path.join(src, f"{i:02d}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (now + 30 * i, now + 30 * i))
-        shutil.rmtree(tmp, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long")
-        .option("timestampFormat", _TS_JSON_FMT)
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
+    stream = _sentinel_event_stream(spark, sf_dir, base)
     left = stream.where(F.col("event_id") % 2 == 0)
     right = stream.where(F.col("event_id") % 2 != 0)
     joined = interval_full_join_streams(
         left, right, "user_id", tolerance="10 minutes", watermark="10 minutes"
     )
-    with _drain_partitions(spark):
-        q_ = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stream full-join drain exceeded 300s ({ckpt})")
-    _SFJOIN[sf_dir] = out
+    _drain(
+        spark,
+        joined.writeStream.format("parquet").option("path", out).outputMode("append"),
+        os.path.join(base, "ckpt"),
+        "stream full-join",
+    )
     return out
 
 
@@ -1070,23 +961,11 @@ def stream_full_join_e2e(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained stream-static enrichment
-_SENRICH: dict[str, str] = {}
-
-
+@_fixture
 def _build_stream_enrich(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SENRICH:
-        return _SENRICH[sf_dir]
-    import shutil
-
     src = _build_stream_src(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_senrich_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("senrich", sf_dir)
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     dim = tbl(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -1100,19 +979,12 @@ def _build_stream_enrich(spark: SparkSession, sf_dir: str) -> str:
             F.round(F.col("value"), 2).cast("double").alias("value"),
         )
     )
-    with _drain_partitions(spark):
-        q_ = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stream enrich drain exceeded 300s ({ckpt})")
-    _SENRICH[sf_dir] = out
+    _drain(
+        spark,
+        enriched.writeStream.format("parquet").option("path", out).outputMode("append"),
+        os.path.join(base, "ckpt"),
+        "stream enrich",
+    )
     return out
 
 
@@ -1141,25 +1013,13 @@ def stream_enrich_e2e(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> parquet path of the drained stateful-dedup output
-_SDEDUP: dict[str, str] = {}
-
-
+@_fixture
 def _build_stream_dedup(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SDEDUP:
-        return _SDEDUP[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.streaming.stateful import dedup_stream
 
     src = _build_stream_src(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_sdedup_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("sdedup", sf_dir)
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     # project to the KEY before the stateful dedup: per-key emission
     # content is then fully determined, so the drain is oracle-checkable
     # (emitting whole first-seen rows would depend on in-batch arrival
@@ -1170,18 +1030,12 @@ def _build_stream_dedup(spark: SparkSession, sf_dir: str) -> str:
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    with _drain_partitions(spark):
-        q_ = (
-            deduped.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"stateful dedup drain exceeded 300s ({ckpt})")
-    _SDEDUP[sf_dir] = out
+    _drain(
+        spark,
+        deduped.writeStream.foreachBatch(_sink).outputMode("update"),
+        os.path.join(base, "ckpt"),
+        "stateful dedup",
+    )
     return out
 
 
@@ -1219,25 +1073,11 @@ def stream_sync_e2e(spark, sf_dir):
     # a pass certifies the stream read, the checkpoint lifecycle, and the
     # upsert sink end-to-end. Re-invocation in-process is the no-op
     # drain (same checkpoint, no new files): idempotency by construction.
-    from bridgedownstream_spark.pipeline.registry import DatasetRegistry
     from bridgedownstream_spark.streaming.lake_sync import stream_upsert_lake
 
     json_root = _build_ingest_lake(spark, sf_dir)
     base = os.path.dirname(json_root)
-    registry = DatasetRegistry(
-        {
-            "tables": {
-                "eventlist_v1": {
-                    "columns": [
-                        {"Name": "event_id", "Type": "bigint"},
-                        {"Name": "event_type", "Type": "string"},
-                        {"Name": "value", "Type": "double"},
-                        {"Name": "recordid", "Type": "string"},
-                    ]
-                }
-            }
-        }
-    )
+    registry = DatasetRegistry({"tables": {"eventlist_v1": _EVENTLIST_V1}})
     pq_root = os.path.join(base, "stream_parquet")
     stream_upsert_lake(
         spark,
@@ -1327,8 +1167,6 @@ def pipeline_incremental_idempotent(spark, sf_dir):
     # same lake through the processed-files ledger; were the second run not
     # a no-op, every child row would double and the oracle's row count
     # (single-run expectation) would fail.
-    import shutil
-
     from bridgedownstream_spark.pipeline.ledger import FileLedger
 
     written = _build_lake(spark, sf_dir)
@@ -1353,26 +1191,14 @@ def pipeline_incremental_idempotent(spark, sf_dir):
     )
 
 
-#: sf_dir -> z-ordered events parquet path (built once per process)
-#: (sf_dir) -> parquet path of the materialized BASE join view
-_JVIEW: dict[str, str] = {}
-
-
+@_fixture
 def _build_join_view(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the BASE portion of an orders⋈lineitem join view
     (every line whose orderkey % 10 != 0 — the rest plays the late-
     arriving delta). Built once per corpus, like every table-format
     materialized view: the incremental query must never re-join the
     base."""
-    if sf_dir in _JVIEW:
-        return _JVIEW[sf_dir]
-    import shutil
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_jview_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = _fixture_dir("jview", sf_dir)
     li = tbl(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 != 0)
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     (
@@ -1388,7 +1214,6 @@ def _build_join_view(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(out)
     )
-    _JVIEW[sf_dir] = out
     return out
 
 
@@ -1434,41 +1259,28 @@ def incremental_join_view(spark, sf_dir):
     )
 
 
-_ZORDERED: dict[str, str] = {}
+@_fixture
+def _build_zordered(spark: SparkSession, sf_dir: str) -> str:
+    """Events rewritten clustered on the Z-key of (user_id, value)."""
+    from bridgedownstream_spark.pipeline.layout import write_zordered
+
+    path = _fixture_dir("zorder", sf_dir)
+    ev = tbl(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    write_zordered(ev, path, ["user_id", "value"], bits=6, num_files=16)
+    return path
 
 
-def _build_zordered(spark, sf_dir: str) -> str:
-    if sf_dir not in _ZORDERED:
-        from bridgedownstream_spark.pipeline.layout import write_zordered
+@_fixture
+def _build_manifest(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """The z-ordered events plus their stats manifest: (path, manifest)."""
+    from bridgedownstream_spark.pipeline.layout import write_stats_manifest
 
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"bds_zorder_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-        )
-        ev = tbl(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        write_zordered(ev, path, ["user_id", "value"], bits=6, num_files=16)
-        _ZORDERED[sf_dir] = path
-    return _ZORDERED[sf_dir]
-
-
-#: sf_dir -> stats-manifest path for the z-ordered events layout
-_MANIFEST: dict[str, str] = {}
-
-
-def _build_manifest(spark, sf_dir: str) -> tuple[str, str]:
     path = _build_zordered(spark, sf_dir)
-    if sf_dir not in _MANIFEST:
-        from bridgedownstream_spark.pipeline.layout import write_stats_manifest
-
-        mpath = os.path.join(
-            tempfile.gettempdir(),
-            f"bds_manifest_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-        )
-        write_stats_manifest(spark, path, ["user_id", "value"], mpath)
-        _MANIFEST[sf_dir] = mpath
-    return path, _MANIFEST[sf_dir]
+    mpath = _fixture_dir("manifest", sf_dir)
+    write_stats_manifest(spark, path, ["user_id", "value"], mpath)
+    return path, mpath
 
 
 @q(
@@ -1548,40 +1360,34 @@ def pipeline_partition_pruned(spark, sf_dir):
     )
 
 
-#: sf_dir -> rollup path (built once per process: refresh + no-op re-refresh)
-_ROLLUP: dict[str, str] = {}
+@_fixture
+def _build_rollup(spark: SparkSession, sf_dir: str) -> str:
+    """The lake's child table rolled up per partition, refreshed twice."""
+    from bridgedownstream_spark.pipeline.rollup import refresh_rollup
 
-
-def _build_rollup(spark, sf_dir: str) -> str:
-    if sf_dir not in _ROLLUP:
-        import shutil
-
-        from bridgedownstream_spark.pipeline.rollup import refresh_rollup
-
-        written = _build_lake(spark, sf_dir)
-        roll = os.path.join(written["__base__"], "rollup_items")
-        shutil.rmtree(roll, ignore_errors=True)
-        for _ in range(2):  # second refresh MUST be a 0-partition no-op
-            refresh_rollup(
-                spark,
-                written["rec_v1_items"],
-                roll,
-                group_cols=[],
-                aggs=[
-                    F.count("*").cast("bigint").alias("n"),
-                    # DECIMAL partial: the rollup's stored totals stay
-                    # exact under any merge order (repo-wide discipline;
-                    # integer-valued l_quantity happens to be exact in
-                    # double today, but the stored aggregate should not
-                    # depend on that)
-                    F.sum(F.col("l_quantity").cast("decimal(24,10)")).alias(
-                        "total"
-                    ),
-                ],
-                partition_cols=["assessmentid", "year", "month", "day"],
-            )
-        _ROLLUP[sf_dir] = roll
-    return _ROLLUP[sf_dir]
+    written = _build_lake(spark, sf_dir)
+    roll = os.path.join(written["__base__"], "rollup_items")
+    shutil.rmtree(roll, ignore_errors=True)
+    for _ in range(2):  # second refresh MUST be a 0-partition no-op
+        refresh_rollup(
+            spark,
+            written["rec_v1_items"],
+            roll,
+            group_cols=[],
+            aggs=[
+                F.count("*").cast("bigint").alias("n"),
+                # DECIMAL partial: the rollup's stored totals stay
+                # exact under any merge order (repo-wide discipline;
+                # integer-valued l_quantity happens to be exact in
+                # double today, but the stored aggregate should not
+                # depend on that)
+                F.sum(F.col("l_quantity").cast("decimal(24,10)")).alias(
+                    "total"
+                ),
+            ],
+            partition_cols=["assessmentid", "year", "month", "day"],
+        )
+    return roll
 
 
 @q(
@@ -1616,32 +1422,26 @@ def rollup_incremental_equiv(spark, sf_dir):
     )
 
 
-_BLOOM_LAKE: dict[str, tuple[str, str]] = {}
-
 #: point-lookup probe set for the bloom-pruned scan
 _BLOOM_PROBES = [7, 42, 99]
 
 
-def _build_bloom_lake(spark, sf_dir: str) -> tuple[str, str]:
+@_fixture
+def _build_bloom_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Orders rewritten time-sorted (64 files) + a per-file bloom manifest
     on o_custkey — the layout where min/max stats CANNOT prune a custkey
     point lookup (custkey is uncorrelated with the sort key) but a bloom
     manifest can."""
-    if sf_dir not in _BLOOM_LAKE:
-        from bridgedownstream_spark.pipeline.layout import (
-            write_bloom_manifest,
-            write_sorted,
-        )
+    from bridgedownstream_spark.pipeline.layout import (
+        write_bloom_manifest,
+        write_sorted,
+    )
 
-        tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-        path = os.path.join(tempfile.gettempdir(), f"bds_bloomlake_{tag}")
-        mpath = os.path.join(tempfile.gettempdir(), f"bds_bloommani_{tag}")
-        write_sorted(
-            tbl(spark, sf_dir, "orders"), path, "o_orderdate", num_files=64
-        )
-        write_bloom_manifest(spark, path, "o_custkey", mpath)
-        _BLOOM_LAKE[sf_dir] = (path, mpath)
-    return _BLOOM_LAKE[sf_dir]
+    path = _fixture_dir("bloomlake", sf_dir)
+    mpath = _fixture_dir("bloommani", sf_dir)
+    write_sorted(tbl(spark, sf_dir, "orders"), path, "o_orderdate", num_files=64)
+    write_bloom_manifest(spark, path, "o_custkey", mpath)
+    return path, mpath
 
 
 @q(
@@ -1674,10 +1474,7 @@ def bloom_pruned_lookup(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> path of the two-batch schema-evolving lake
-_EVOLVED: dict[str, str] = {}
-
-
+@_fixture
 def _build_evolving_lake(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet batches with DIFFERENT schemas in one dataset — the
     schema-drift shape every long-lived lake accumulates. Batch 1
@@ -1685,15 +1482,7 @@ def _build_evolving_lake(spark: SparkSession, sf_dir: str) -> str:
     it AND reorders columns (parquet matches by name, not position, so
     reorder must be a no-op). mergeSchema unions the two by name; batch-1
     rows must surface priority as NULL."""
-    if sf_dir in _EVOLVED:
-        return _EVOLVED[sf_dir]
-    import shutil
-
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_evolve_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("evolve", sf_dir)
     o = tbl(spark, sf_dir, "orders")
     v1 = o.where(F.col("o_orderkey") % 7 == 0).select(
         F.lit(1).alias("batch"), "o_orderkey", "o_custkey", "o_totalprice"
@@ -1707,7 +1496,6 @@ def _build_evolving_lake(spark: SparkSession, sf_dir: str) -> str:
     )
     v1.write.parquet(os.path.join(base, "b1"))
     v2.write.parquet(os.path.join(base, "b2"))
-    _EVOLVED[sf_dir] = base
     return base
 
 
@@ -1823,10 +1611,7 @@ def dpp_pruned_join(spark, sf_dir):
     )
 
 
-#: sf_dir -> (bucketed lineitem table name, bucketed orders table name)
-_BUCKETED: dict[str, tuple[str, str]] = {}
-
-
+@_fixture
 def _build_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Register both fact tables bucketed+sorted on the join key (8
     buckets) — the write-once layout premise the query demonstrates.
@@ -1834,10 +1619,9 @@ def _build_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     existence gate on the /tmp files let later bench runs reuse a
     previous run's derived layout — cross-run reuse of a testdata-keyed
     intermediate, which the bench contract forbids). The per-process
-    memo below holds table NAMES only; the data is rewritten fresh every
-    invocation."""
-    if sf_dir in _BUCKETED:
-        return _BUCKETED[sf_dir]
+    memo holds table NAMES only; the data is rewritten fresh every
+    process. The sf tag maps ``.`` to ``_`` because it also names the
+    catalog tables."""
     tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
     li_t, o_t = f"bds_bkt_lineitem_{tag}", f"bds_bkt_orders_{tag}"
     base = os.path.join(tempfile.gettempdir(), f"bds_bucketed_{tag}")
@@ -1859,8 +1643,7 @@ def _build_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .option("path", os.path.join(base, "orders"))
         .saveAsTable(o_t)
     )
-    _BUCKETED[sf_dir] = (li_t, o_t)
-    return _BUCKETED[sf_dir]
+    return li_t, o_t
 
 
 @q(
@@ -1905,26 +1688,15 @@ def bucketed_join_no_shuffle(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> compacted-lake path (built + compacted once per process)
-_COMPACTED: dict[str, str] = {}
-
-
+@_fixture
 def _build_compacted_lake(spark: SparkSession, sf_dir: str) -> str:
     """A deliberately fragmented lineitem lake (8 writer tasks per
     partition = 8 small files each, the shape incremental appends leave
     behind), then compacted via pipeline/compact.py — target sized so
     every fragmented partition collapses to ONE file."""
-    if sf_dir in _COMPACTED:
-        return _COMPACTED[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.pipeline.compact import compact_dataset
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_compactlake_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("compactlake", sf_dir)
     li = tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -1932,7 +1704,6 @@ def _build_compacted_lake(spark: SparkSession, sf_dir: str) -> str:
     compact_dataset(
         spark, base, ["l_returnflag"], target_file_bytes=1 << 30, min_files=2
     )
-    _COMPACTED[sf_dir] = base
     return base
 
 
@@ -1980,10 +1751,7 @@ def pipeline_compaction_equiv(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> upsert-sequence lake path
-_UPSERTED: dict[str, str] = {}
-
-
+@_fixture
 def _build_upserted_lake(spark: SparkSession, sf_dir: str) -> str:
     """An orders lake driven through a realistic merge sequence
     (pipeline/upsert.py): v0 full write, v1 re-export of every %5 key,
@@ -1991,17 +1759,9 @@ def _build_upserted_lake(spark: SparkSession, sf_dir: str) -> str:
     last-writer-wins), then a delete-only merge removing every %11 key.
     Updated rows get integer-derived prices (exact in doubles at any
     engine) and a version stamp."""
-    if sf_dir in _UPSERTED:
-        return _UPSERTED[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.pipeline.upsert import upsert_dataset
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_upsertlake_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("upsertlake", sf_dir)
     o = tbl(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -2023,7 +1783,6 @@ def _build_upserted_lake(spark: SparkSession, sf_dir: str) -> str:
     upsert_dataset(
         spark, base, None, ["o_orderkey"], ["o_orderstatus"], delete_keys=dk
     )
-    _UPSERTED[sf_dir] = base
     return base
 
 
@@ -2061,10 +1820,7 @@ def upsert_merge_equiv(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> archived-protocol lake base (built once per process)
-_ARCHIVED: dict[str, str] = {}
-
-
+@_fixture
 def _build_archived_lake(spark: SparkSession, sf_dir: str) -> str:
     """The FULL schema-change protocol loop (reference
     archive_dataset.py:60-160 + docs/schema_change_protocol.md §3) over a
@@ -2073,10 +1829,6 @@ def _build_archived_lake(spark: SparkSession, sf_dir: str) -> str:
     again (update 2) → retention prune to the newest update. Reuses the
     shared e2e lake's NDJSON export (stage 1 runs once per process); the
     protocol's own artifacts live under their own base dir."""
-    if sf_dir in _ARCHIVED:
-        return _ARCHIVED[sf_dir]
-    import shutil
-
     from bridgedownstream_spark.pipeline.archive import (
         archive_dataset,
         descendant_tables,
@@ -2086,11 +1838,7 @@ def _build_archived_lake(spark: SparkSession, sf_dir: str) -> str:
     from bridgedownstream_spark.pipeline.registry import is_compatible_evolution
 
     json_root = _build_lake(spark, sf_dir)["__json_root__"]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_archlake_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fixture_dir("archlake", sf_dir)
     pq = os.path.join(base, "parquet")
     key_cols = ("assessmentid", "year", "month", "day", "recordid")
 
@@ -2138,7 +1886,6 @@ def _build_archived_lake(spark: SparkSession, sf_dir: str) -> str:
         keep_last=1,
         tables=[t for t in descendant_tables(pq, "rec_v1") if t != "archive"],
     )
-    _ARCHIVED[sf_dir] = base
     return base
 
 
@@ -2207,9 +1954,6 @@ def archive_restore_equiv(spark, sf_dir):
     )
 
 
-#: (sf_dir) -> workflow work_root (built once per process)
-_WORKFLOWED: dict[str, str] = {}
-
 _TAPS_SCHEMA = {
     "$id": "schemas/v1/TapList",
     "type": "array",
@@ -2224,88 +1968,35 @@ _TAPS_SCHEMA = {
 }
 
 
+@_fixture
 def _build_workflow_lake(spark: SparkSession, sf_dir: str) -> str:
     """One-call study-workflow fixture: zip archives from the real events
     table routed to TWO datasets (even user ids → the 'events'
     assessment → eventlist_v1, odd → 'taps' → taplist_v1), pushed through
     run_study_workflow TWICE — the second call must be a no-op (stage-1
     checkpoint + stage-2 ledger), or every row doubles and the oracle
-    row count fails."""
-    if sf_dir in _WORKFLOWED:
-        return _WORKFLOWED[sf_dir]
-    import json
-    import shutil
-    import zipfile
-
+    row count fails. Returns the workflow's work root."""
     from bridgedownstream_spark.pipeline.workflow import run_study_workflow
 
-    rows = (
-        tbl(spark, sf_dir, "events")
-        .where(F.col("user_id") < 10)
-        .select(
-            "user_id", "event_id", "event_type", F.round("value", 2).alias("value")
-        )
-        .collect()  # fixture-builder only: ~10 users of events
-    )
-    by_user: dict[int, list] = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"bds_wflake_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    arch_dir = os.path.join(base, "archives")
-    os.makedirs(arch_dir, exist_ok=True)
-    manifest_rows = []
-    for uid, evs in sorted(by_user.items()):
-        evs = sorted(evs, key=lambda r: r["event_id"])
-        path = os.path.join(arch_dir, f"user{uid}.zip")
+    def member_of(uid: int, evs: list) -> tuple[str, str, list]:
         if uid % 2 == 0:
-            member, assess = "events.json", "events"
-            body = [
-                {
-                    "event_id": r["event_id"],
-                    "event_type": r["event_type"],
-                    "value": r["value"],
-                }
-                for r in evs
-            ]
-        else:
-            member, assess = "taps.json", "taps"
-            body = [
-                {"tap_id": r["event_id"], "value": r["value"]} for r in evs
-            ]
-        with zipfile.ZipFile(path, "w") as z:
-            z.writestr(member, json.dumps(body))
-        manifest_rows.append(
-            (path, str(uid), assess, "1", "2024-01-02T00:00:00.000Z", "iPhone 13")
-        )
+            return "events.json", "events", _events_body(evs)
+        body = [{"tap_id": r["event_id"], "value": r["value"]} for r in evs]
+        return "taps.json", "taps", body
+
+    base = _fixture_dir("wflake", sf_dir)
+    arch_dir = os.path.join(base, "archives")
     manifest = spark.createDataFrame(
-        manifest_rows,
-        "path string, recordid string, assessmentid string, "
-        "assessmentrevision string, uploadedon string, clientinfo string",
+        _user_archives(spark, sf_dir, arch_dir, member_of), _MANIFEST_DDL
     )
     archive_map = {
         "assessments": [
-            {
-                "assessmentIdentifier": "events",
-                "assessmentRevision": 1,
-                "files": [
-                    {
-                        "filename": "events.json",
-                        "jsonSchema": "https://example.org/events",
-                    }
-                ],
-            },
+            _EVENTS_ASSESSMENT,
             {
                 "assessmentIdentifier": "taps",
                 "assessmentRevision": 1,
                 "files": [
-                    {
-                        "filename": "taps.json",
-                        "jsonSchema": "https://example.org/taps",
-                    }
+                    {"filename": "taps.json", "jsonSchema": "https://example.org/taps"}
                 ],
             },
         ],
@@ -2315,14 +2006,7 @@ def _build_workflow_lake(spark: SparkSession, sf_dir: str) -> str:
     registry = DatasetRegistry(
         {
             "tables": {
-                "eventlist_v1": {
-                    "columns": [
-                        {"Name": "event_id", "Type": "bigint"},
-                        {"Name": "event_type", "Type": "string"},
-                        {"Name": "value", "Type": "double"},
-                        {"Name": "recordid", "Type": "string"},
-                    ]
-                },
+                "eventlist_v1": _EVENTLIST_V1,
                 "taplist_v1": {
                     "columns": [
                         {"Name": "tap_id", "Type": "bigint"},
@@ -2352,7 +2036,6 @@ def _build_workflow_lake(spark: SparkSession, sf_dir: str) -> str:
             work_root=work,
             max_concurrency=4,
         )
-    _WORKFLOWED[sf_dir] = work
     return work
 
 

@@ -4,7 +4,8 @@ external harness's stdout capture, which keeps only the LAST 2000 bytes
 chars with the JSON line truncated mid-line and never parsed).
 
 The repo benchmark's tracer (``perfbench/tracing.py``) is pinned here too:
-it wraps package names that must stay importable.
+it wraps package names that must stay importable. So is the fixture
+registry ``bench.warm_up`` builds.
 
 These tests need no Spark session — they exercise the line builder pure.
 """
@@ -19,7 +20,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
-from bridgedownstream_spark.queries import _CERTIFYING, REGISTRY  # noqa: E402
+from bridgedownstream_spark.queries import _CERTIFYING, REGISTRY, pipeline_q  # noqa: E402
 
 
 def _fake_times(names, t=123.456):
@@ -103,3 +104,37 @@ def test_benchmark_tracer_targets_resolve():
         assert callable(getattr(importlib.import_module(mod_name), attr)), (mod_name, attr)
     for attr in tracing.LEDGER_METHODS:
         assert callable(getattr(FileLedger, attr)), attr
+
+
+def test_warm_up_builds_every_pipeline_fixture():
+    """``bench.warm_up`` builds exactly ``pipeline_q.FIXTURES``: every
+    ``_build_*`` builder of the module must be registered, once, or its
+    first query pays the build inside the timed region."""
+    names = [f.__name__ for f in pipeline_q.FIXTURES]
+    assert len(names) == len(set(names))
+    assert set(names) == {n for n in vars(pipeline_q) if n.startswith("_build_")}
+
+
+def test_fixture_builds_once_per_sf_dir():
+    calls = []
+    saved = list(pipeline_q.FIXTURES)
+    try:
+
+        @pipeline_q._fixture
+        def _build_probe(spark, sf_dir):
+            calls.append(sf_dir)
+            if len(calls) == 1:
+                raise OSError("first build fails")
+            return f"built:{sf_dir}"
+
+        assert pipeline_q.FIXTURES[-1] is _build_probe
+        assert _build_probe.__name__ == "_build_probe"
+        try:
+            _build_probe(None, "a")
+        except OSError:
+            pass
+        got = [_build_probe(None, d) for d in ("a", "a", "b", "a", "b")]
+        assert got == ["built:a", "built:a", "built:b", "built:a", "built:b"]
+        assert calls == ["a", "a", "b"]  # a failed build is retried
+    finally:
+        pipeline_q.FIXTURES[:] = saved

@@ -6,6 +6,7 @@ sort-merge join, cartesian product) fails CI rather than shipping.
 from __future__ import annotations
 
 import re
+import tempfile
 
 import pytest
 
@@ -205,8 +206,20 @@ def registry_dfs(spark):
     """Every registry query's DataFrame, built ONCE for the four
     registry-wide guards below — analysis + fixture-build cost is paid a
     single time instead of once per guard (the r4 suite spent ~2 min
-    rebuilding the same 130+ frames four times)."""
-    return {name: fn(spark, SF) for name, (fn, _) in REGISTRY.items()}
+    rebuilding the same 130+ frames four times).
+
+    Spark cuts plan metadata at ``spark.sql.maxMetadataStringLength`` when
+    a plan is first rendered, which can cut a fixture-lake path before its
+    ``bds_<name>_`` part once the temp dir is longer than ``/tmp``. The
+    limit is raised before any of these plans exists and restored after
+    the module."""
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        yield {name: fn(spark, SF) for name, (fn, _) in REGISTRY.items()}
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_every_query_plan_is_scale_clean(registry_dfs):
@@ -232,42 +245,29 @@ def test_every_query_scans_only_declared_inputs(registry_dfs):
     bds_ivfpq_*) removed by the r9 de-cache — is result caching across
     runs: gaming, not optimization."""
     # substring tokens, not prefixes: plan text renders some locations as
-    # glob/regex patterns (e.g. ")?/*tmp/bds_compactlake_sf0\\.001/").
-    # One token per fixture-lake prefix the package writes.
-    fixture_lakes = (
-        "tmp/bds_archlake_", "tmp/bds_bkt_lineitem_", "tmp/bds_bkt_orders_",
-        "tmp/bds_bloomlake_", "tmp/bds_bloommani_", "tmp/bds_bucketed_",
-        "tmp/bds_compactlake_", "tmp/bds_csv_", "tmp/bds_evolve_",
-        "tmp/bds_fw_", "tmp/bds_ingest_", "tmp/bds_jview_", "tmp/bds_lake_",
-        "tmp/bds_manifest_", "tmp/bds_orc_", "tmp/bds_sdedup_",
-        "tmp/bds_senrich_", "tmp/bds_sfjoin_", "tmp/bds_sijoin_",
-        "tmp/bds_sljoin_", "tmp/bds_ssess_", "tmp/bds_streamsrc_",
-        "tmp/bds_upsertlake_", "tmp/bds_wflake_", "tmp/bds_winagg_",
-        "tmp/bds_zorder_",
+    # glob/regex patterns (e.g. ")?/*tmp/bds_compactlake_sf0\\.001/"), so
+    # the temp dir's leading "/" is left out. One token per fixture-lake
+    # prefix the package writes.
+    tmp = tempfile.gettempdir().lstrip("/")
+    fixture_lakes = tuple(
+        f"{tmp}/bds_{name}_"
+        for name in (
+            "archlake", "bkt_lineitem", "bkt_orders", "bloomlake",
+            "bloommani", "bucketed", "compactlake", "csv", "evolve", "fw",
+            "ingest", "jview", "lake", "manifest", "orc", "sdedup",
+            "senrich", "sfjoin", "sijoin", "sljoin", "ssess", "streamsrc",
+            "upsertlake", "wflake", "winagg", "zorder",
+        )
     )
     allowed = ("testdata/", "spark-warehouse", *fixture_lakes)
     forbidden = ("bds_lshcand", "bds_pq_", "bds_ivfpq_")
-
-    def declared(raw: str) -> bool:
-        path = raw.rstrip(".")
-        if any(a in path for a in allowed):
-            return True
-        # plan metadata longer than spark.sql.maxMetadataStringLength is
-        # cut and ends in "...", and where it is cut depends on expression
-        # ids: a cut fixture-lake name must still begin a declared prefix
-        cut = re.search(r"tmp/bds_[a-z_]*$", path)
-        return (
-            raw.endswith("...")
-            and cut is not None
-            and any(t.startswith(cut.group(0)) for t in fixture_lakes)
-        )
 
     bad = []
     for name, df in registry_dfs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         for m in re.finditer(r"file:([^\s,\]]+)", plan):
             raw = m.group(1)
-            if any(f in raw for f in forbidden) or not declared(raw):
+            if any(f in raw for f in forbidden) or not any(a in raw for a in allowed):
                 bad.append(f"{name}: {raw}")
     assert not bad, f"plans scan undeclared paths: {bad}"
 

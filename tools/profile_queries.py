@@ -47,36 +47,7 @@ def main() -> int:
     import bench
 
     spark = get_spark("profile")
-    # identical warmup to bench.py so first-query costs match
-    os.environ.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
-    sys.argv = ["bench.py", names[0]]  # subset → BENCH_LAST, not BENCH_FULL
-
-    from pyspark.sql import functions as F
-
-    for t in ("region", "lineitem", "documents", "embeddings", "events",
-              "orders", "customer", "part", "supplier", "nation"):
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-            df.agg(*[F.count(c).alias(f"c{i}") for i, c in enumerate(df.columns)]).collect()
-        except Exception:  # noqa: BLE001
-            pass
-
-    def _noop(batches):
-        for b in batches:
-            yield b
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(_noop, schema="id long").count()
-    # (r9: no ANN/LSH index pre-builds — bench.py dropped them as
-    # cross-run result caching; the profile mirrors the bench protocol)
-    from bridgedownstream_spark.queries import pipeline_q as _pq_mod
-
-    for nm in dir(_pq_mod):
-        if nm.startswith("_build_"):
-            try:
-                getattr(_pq_mod, nm)(spark, sf_dir)
-            except Exception as e:  # noqa: BLE001
-                print(f"warmup {nm}: {e!r}", file=sys.stderr)
+    bench.warm_up(spark, sf_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
 
     print(f"{'query':35s} {'build':>7s} {'explain':>8s} {'exec':>7s}")
     for name in names:

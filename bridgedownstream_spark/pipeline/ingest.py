@@ -1,45 +1,48 @@
 """Stage 1: zip archives → validated, routed, partitioned NDJSON lake.
 
 Spark-first re-expression of the reference's single-node ingest job
-(src/glue/jobs/s3_to_json_s3.py:733-832):
+(src/glue/jobs/s3_to_json_s3.py:651-730,733-832):
 
     boto3 get_object loop        → binaryFile scan + manifest broadcast join
-    zipfile member loop          → mapInPandas fan-out (sources.archive)
-    get_json_schema (3 scopes)   → memoized lookup in the validation UDF
-                                   (validation.resolve)
-    jsonschema.iter_errors       → Arrow-batched mapInPandas (validation)
-    remove_expected_validation_errors → array_except projection
+    per-archive loop             → ONE Arrow-batched mapInPandas over archive
+                                   rows (:func:`check_archives`), built from
+                                   pieces made on the driver:
+      zipfile member loop          → the unzip (``explode_members``)
+      get_json_schema (3 scopes)   → memoized lookup in the member checker
+      jsonschema.iter_errors       → the member checker (``validate_members``)
+      remove_expected_validation_errors → ``remove_expected_errors`` in it
+      get_dataset_identifier       → the routing dict (``route_datasets``)
+      metadata injection           → the body rewrite (``inject_metadata``)
     invalid → SQS queue          → quarantine parquet table (replayable scan)
-    get_dataset_identifier       → broadcast config joins (router)
-    write_file_to_json_dataset   → per-element metadata injection UDF +
-                                   partitioned text sink (byte-faithful NDJSON)
+    write_file_to_json_dataset   → partitioned text sink (byte-faithful NDJSON)
 
-One Spark job replaces 150 concurrent Glue runs
+Like the reference, one archive is one record: the pass judges each archive
+from its own members, so the plan has no shuffle before the lake sink's own
+partitioning. One Spark job replaces 150 concurrent Glue runs
 (config/prod/glue-job-S3ToJsonS3.yaml:13): parallelism comes from archive
-partitioning, and every shuffle in the plan is a broadcast join except the
-one record-key window in the validity split.
+partitioning.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from datetime import datetime
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from bridgedownstream_spark.sources.archive import explode_members, read_archives
-from bridgedownstream_spark.validation import (
-    split_valid_records,
-    suppress_expected_errors,
-    validate_members,
-)
+from bridgedownstream_spark.validation import split_valid_records, validate_members
 
 __all__ = [
     "route_datasets",
     "inject_metadata",
+    "check_archives",
     "write_json_lake",
     "run_ingest",
     "ingest_archives",
@@ -55,141 +58,162 @@ MANIFEST_FIELDS = (
     "clientinfo",
 )
 
+#: the pass's last columns: set on lake rows, NULL on quarantine rows
+_LAKE_COLUMNS = ("dataset_identifier", "year", "month", "day")
+
 
 def route_datasets(
-    members: DataFrame,
     schema_store: dict[str, dict],
     schema_mapping: dict[str, str],
     dataset_mapping: dict | None = None,
-) -> DataFrame:
-    """Add ``dataset_identifier``; drop unroutable members.
+) -> dict:
+    """The routing dict: schema URL → dataset, and
+    ``(assessmentid, assessmentrevision, file_name)`` → dataset.
 
     Routing precedence (reference get_dataset_identifier,
     s3_to_json_s3.py:493-556): the resolved schema's ``$id`` looked up in
     ``schema_mapping`` wins; otherwise the legacy ``dataset_mapping`` keyed
-    by (assessmentid, assessmentrevision, file_name). Both are config-size
-    tables → broadcast joins (operator J5), never per-row Python.
+    by (assessmentid, assessmentrevision, file_name). Both are config-size,
+    so the dict is built once on the driver and travels with the pass.
     """
-    spark = members.sparkSession
-    # schema route: url → $id → dataset
-    url_rows = [
-        (url, schema_mapping[sid])
+    routes: dict = {
+        url: schema_mapping[sid]
         for url, schema in schema_store.items()
         if (sid := str(schema.get("$id", ""))) in schema_mapping
-    ]
-    url_lookup = spark.createDataFrame(
-        url_rows or [(None, None)], "schema_url string, ds_by_schema string"
-    )
-    # legacy route: (assessmentid, revision, filename) → dataset
-    legacy_rows = []
+    }
     for aid, spec in (dataset_mapping or {}).get("assessmentIdentifier", {}).items():
         for rev, files in spec.get("assessmentRevision", {}).items():
             for fname, ds in files.items():
-                legacy_rows.append((aid, str(rev), fname, ds))
-    legacy_lookup = spark.createDataFrame(
-        legacy_rows or [(None, None, None, None)],
-        "assessmentid string, assessmentrevision string, file_name string, "
-        "ds_by_legacy string",
-    )
-    routed = (
-        members.join(F.broadcast(url_lookup), "schema_url", "left")
-        .join(
-            F.broadcast(legacy_lookup),
-            ["assessmentid", "assessmentrevision", "file_name"],
-            "left",
-        )
-        .withColumn(
-            "dataset_identifier", F.coalesce("ds_by_schema", "ds_by_legacy")
-        )
-        .drop("ds_by_schema", "ds_by_legacy")
-    )
-    # files with no mapping are skipped (reference :518-555 returns None)
-    return routed.where(F.col("dataset_identifier").isNotNull())
+                routes[(aid, str(rev), fname)] = ds
+    return routes
 
 
-def inject_metadata(members: DataFrame) -> DataFrame:
-    """Rewrite each member body with injected metadata and derive the
-    partition columns (reference write_file_to_json_dataset,
-    s3_to_json_s3.py:592-619):
+def inject_metadata() -> Callable[[str, str, dict], tuple[str, str, str, str]]:
+    """Return the body rewrite of one routed member, ``rewrite(body,
+    dataset_identifier, meta) -> (body, year, month, day)`` (reference
+    write_file_to_json_dataset, s3_to_json_s3.py:592-619):
 
-    - partition fields: year/month/day ints parsed from ``uploadedon``
+    - partition fields: year/month/day ints parsed from ``meta["uploadedon"]``
       (format ``%Y-%m-%dT%H:%M:%S.%fZ``), plus assessmentid + recordid;
-    - ArchiveMetadata datasets get EVERY manifest field injected;
+    - ArchiveMetadata datasets get every :data:`MANIFEST_FIELDS` field injected;
     - list-bodies get the fields injected into every element (operator N6);
-    - partition *columns* keep the reference's unpadded string forms
-      (``month=9``, :628-639) while the injected data fields stay ints —
-      the int-in-data/string-in-partition duality, preserved exactly.
-
-    Body rewriting is Python-bound (arbitrary JSON), so it is one
-    Arrow-batched ``mapInPandas``; the partition columns are derived
-    natively afterwards.
+    - the returned partition values keep the reference's unpadded string
+      forms (``month=9``, :628-639) while the injected data fields stay
+      ints — the int-in-data/string-in-partition duality, preserved exactly;
+    - an unparseable multiline body becomes one ``__unparseable_body__``
+      JSON line, because the lake sink is line-oriented.
     """
-    meta_cols = [c for c in MANIFEST_FIELDS if c in members.columns]
-    out_schema = T.StructType(
-        list(members.schema.fields)
-        + [
-            T.StructField("year", T.StringType()),
-            T.StructField("month", T.StringType()),
-            T.StructField("day", T.StringType()),
+
+    def rewrite(body, dataset_identifier, meta):
+        uploaded = datetime.strptime(meta["uploadedon"], "%Y-%m-%dT%H:%M:%S.%fZ")
+        parts = {"year": uploaded.year, "month": uploaded.month, "day": uploaded.day}
+        try:
+            j = json.loads(body)
+        except json.JSONDecodeError:
+            j = None
+        if j is None:
+            if "\n" in body or "\r" in body:
+                # one garbage record per physical line otherwise; wrapped,
+                # the body stays byte-recoverable and clearly marked
+                body = json.dumps({"__unparseable_body__": body})
+        elif dataset_identifier.split("_")[0] == "ArchiveMetadata":
+            j.update(parts)
+            for c in MANIFEST_FIELDS:
+                j[c] = meta[c]
+            body = json.dumps(j)
+        elif isinstance(j, list):
+            for item in j:
+                if isinstance(item, dict):
+                    item["assessmentid"] = meta["assessmentid"]
+                    item.update(parts)
+                    item["recordid"] = meta["recordid"]
+            body = json.dumps(j)
+        else:
+            j["assessmentid"] = meta["assessmentid"]
+            j.update(parts)
+            j["recordid"] = meta["recordid"]
+            body = json.dumps(j)
+        return body, str(uploaded.year), str(uploaded.month), str(uploaded.day)
+
+    return rewrite
+
+
+def check_archives(
+    archives: DataFrame,
+    archive_map: dict,
+    schema_store: dict[str, dict],
+    schema_mapping: dict[str, str],
+    dataset_mapping: dict | None = None,
+    app_id: str = "mobile-toolbox",
+) -> DataFrame:
+    """Stage 1's one Python pass over (path, content, manifest…) archive
+    rows. Each archive is unzipped, each member checked (schema resolution,
+    validation, Android expected-error removal), and the archive judged from
+    its own members (reference s3_to_json_s3.py:803-832): invalid iff any
+    member still has errors.
+
+    - An invalid archive yields only its offending members, body as read.
+    - A valid archive yields its routable members, each body rewritten with
+      the partition values (unroutable members are skipped, reference
+      :518-555).
+
+    Columns: path, member_path, file_name, body, self_ref_schema_url, the
+    archive's manifest columns, schema_url, errors, dataset_identifier,
+    year, month, day. The pieces are built here on the driver and the pass
+    closes over them, never over this module's names: a caller may replace
+    those names (the benchmark's tracer wraps them in objects holding the
+    SparkContext), and the pass must still pickle to the Python workers.
+    """
+    meta_cols = [c for c in archives.columns if c not in ("path", "content")]
+    unzip = explode_members()
+    check = validate_members(schema_store, archive_map, app_id)
+    routes = route_datasets(schema_store, schema_mapping, dataset_mapping)
+    rewrite = inject_metadata()
+    string = T.StringType()
+    schema = T.StructType(
+        [
+            T.StructField(c, string)
+            for c in ("path", "member_path", "file_name", "body", "self_ref_schema_url")
         ]
+        + [archives.schema[c] for c in meta_cols]
+        + [T.StructField("schema_url", string), T.StructField("errors", T.ArrayType(string))]
+        + [T.StructField(c, string) for c in _LAKE_COLUMNS]
     )
+    columns = schema.fieldNames()
 
-    def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from datetime import datetime
-
+    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            years, months, days, bodies = [], [], [], []
-            for rec in pdf.itertuples(index=False):
-                uploaded = datetime.strptime(
-                    rec.uploadedon, "%Y-%m-%dT%H:%M:%S.%fZ"
-                )
-                schema_identifier = rec.dataset_identifier.split("_")[0]
-                parts = {
-                    "year": uploaded.year,
-                    "month": uploaded.month,
-                    "day": uploaded.day,
-                }
-                try:
-                    j = json.loads(rec.body)
-                except json.JSONDecodeError:
-                    j = None
-                if j is None:
-                    body = rec.body
-                    if "\n" in body or "\r" in body:
-                        # the lake sink is LINE-oriented: a multiline
-                        # unparseable body would be split into one garbage
-                        # record per physical line. Wrap it into a single
-                        # JSON line, byte-recoverable and clearly marked.
-                        body = json.dumps({"__unparseable_body__": body})
-                elif schema_identifier == "ArchiveMetadata":
-                    j.update(parts)
-                    for c in meta_cols:
-                        j[c] = getattr(rec, c)
-                    body = json.dumps(j, indent=None)
-                elif isinstance(j, list):
-                    for item in j:
-                        if isinstance(item, dict):
-                            item["assessmentid"] = rec.assessmentid
-                            item.update(parts)
-                            item["recordid"] = rec.recordid
-                    body = json.dumps(j, indent=None)
-                else:
-                    j["assessmentid"] = rec.assessmentid
-                    j.update(parts)
-                    j["recordid"] = rec.recordid
-                    body = json.dumps(j, indent=None)
-                bodies.append(body)
-                years.append(str(uploaded.year))
-                months.append(str(uploaded.month))
-                days.append(str(uploaded.day))
-            pdf = pdf.copy()
-            pdf["body"] = bodies
-            pdf["year"] = years
-            pdf["month"] = months
-            pdf["day"] = days
-            yield pdf
+            rows = []
+            names = list(pdf.columns)
+            for values in pdf.itertuples(index=False, name=None):
+                rec = dict(zip(names, values))
+                meta = {c: rec[c] for c in meta_cols}
+                checked = []
+                for member_path, file_name, body, self_ref in unzip(rec["content"]):
+                    url, errors = check(file_name, body, self_ref, meta)
+                    checked.append((member_path, file_name, body, self_ref, url, errors))
+                invalid = any(errors for *_, errors in checked)
+                for member_path, file_name, body, self_ref, url, errors in checked:
+                    lake = (None, None, None, None)
+                    if invalid:
+                        if not errors:
+                            continue
+                    else:
+                        ds = routes.get(url)
+                        if ds is None:
+                            key = (meta["assessmentid"], meta["assessmentrevision"], file_name)
+                            ds = routes.get(key)
+                        if ds is None:
+                            continue
+                        body, *partition = rewrite(body, ds, meta)
+                        lake = (ds, *partition)
+                    rows.append(
+                        (rec["path"], member_path, file_name, body, self_ref,
+                         *meta.values(), url, errors, *lake)
+                    )
+            yield pd.DataFrame(rows, columns=columns)
 
-    return members.mapInPandas(rewrite, schema=out_schema)
+    return archives.mapInPandas(fan_out, schema=schema)
 
 
 def write_json_lake(members: DataFrame, json_root: str, mode: str = "append") -> str:
@@ -227,18 +251,13 @@ def run_ingest(
     quarantine_root: str | None = None,
     app_id: str = "mobile-toolbox",
     mode: str = "append",
-    collect_counts: bool = True,
 ) -> dict[str, int]:
-    """The full stage-1 job. Returns counts of valid/quarantined members
-    (read back from the sinks; pass ``collect_counts=False`` to skip the
-    two verification scans when the caller doesn't need them).
+    """The full stage-1 job; returns :func:`ingest_archives`' counts.
 
     ``manifest`` must carry ``path`` plus :data:`MANIFEST_FIELDS`.
     """
-    archives = read_archives(spark, archive_path, manifest)
     return ingest_archives(
-        spark,
-        archives,
+        read_archives(spark, archive_path, manifest),
         archive_map=archive_map,
         schema_store=schema_store,
         schema_mapping=schema_mapping,
@@ -247,12 +266,10 @@ def run_ingest(
         quarantine_root=quarantine_root,
         app_id=app_id,
         mode=mode,
-        collect_counts=collect_counts,
     )
 
 
 def ingest_archives(
-    spark: SparkSession,
     archives: DataFrame,
     archive_map: dict,
     schema_store: dict[str, dict],
@@ -262,48 +279,46 @@ def ingest_archives(
     quarantine_root: str | None = None,
     app_id: str = "mobile-toolbox",
     mode: str = "append",
-    collect_counts: bool = True,
 ) -> dict[str, int]:
     """Stage-1 body over an already-materialized (path, content, manifest…)
     archive frame — shared verbatim by the batch job (:func:`run_ingest`)
     and the streaming job (streaming/ingest_stream.py), so both lifecycles
-    run ONE code path."""
-    from pyspark.storagelevel import StorageLevel
+    run ONE code path.
 
-    members = explode_members(archives)
-    # schema resolution happens inside the validation UDF (per-executor
-    # memo over the config-cardinality combos) — a single pass over the
-    # archives, with no extra unzip pass to enumerate combos
-    members = validate_members(
-        members, schema_store, archive_map=archive_map, app_id=app_id
+    Returns the members this call wrote: ``{"valid_members": lake lines,
+    "quarantined_members": quarantine rows}`` (-1 without a
+    ``quarantine_root``), each observed on its own write.
+    """
+    members = check_archives(
+        archives, archive_map, schema_store, schema_mapping, dataset_mapping, app_id
     )
-    members = suppress_expected_errors(members)
-    # The plan forks here (quarantine sink + lake sink); persist so the
-    # unzip/validate chain runs once, spilling to disk rather than
-    # recomputing — at scale this is member-stream-sized, bounded by the
-    # input archives themselves.
+    # both sinks read the pass output; persist so the pass runs once,
+    # spilling to disk rather than recomputing
     members = members.persist(StorageLevel.MEMORY_AND_DISK)
     valid, quarantine = split_valid_records(members)
-
     n_quarantined = -1
     if quarantine_root is not None:
-        quarantine.drop("body").write.mode(mode).parquet(quarantine_root)
-        if collect_counts:
-            n_quarantined = spark.read.parquet(quarantine_root).count()
-
-    routed = route_datasets(valid, schema_store, schema_mapping, dataset_mapping)
-    final = inject_metadata(routed)
-    write_json_lake(final, json_root, mode=mode)
-    members.unpersist()
-    n_valid = -1
-    if collect_counts:
-        n_valid = (
-            spark.read.format("text")
-            .option("recursiveFileLookup", "true")
-            .load(json_root)
-            .count()
+        n_quarantined = _rows_written(
+            quarantine.drop("body", *_LAKE_COLUMNS),
+            lambda df: df.write.mode(mode).parquet(quarantine_root),
         )
+    n_valid = _rows_written(valid, lambda df: write_json_lake(df, json_root, mode=mode))
+    members.unpersist()
     return {"valid_members": n_valid, "quarantined_members": n_quarantined}
+
+
+def _rows_written(df: DataFrame, write: Callable[[DataFrame], object]) -> int:
+    """Run ``write(df)`` and return the rows it wrote, counted by an
+    :class:`~pyspark.sql.Observation` on the write itself."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    try:
+        return obs.get["rows"]
+    except Py4JJavaError:
+        # AQE prunes the observing node out of a partitioned write whose
+        # input turns out empty, which leaves the observation without a
+        # row: nothing was written
+        return 0
 
 
 def prune_quarantine(

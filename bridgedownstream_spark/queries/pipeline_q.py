@@ -257,7 +257,6 @@ def _build_ingest_lake(spark: SparkSession, sf_dir: str) -> str:
         json_root=json_root,
         quarantine_root=os.path.join(base, "quarantine"),
         mode="overwrite",
-        collect_counts=False,
     )
     return json_root
 

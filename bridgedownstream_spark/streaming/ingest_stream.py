@@ -4,15 +4,19 @@ The reference's ingest is event-driven: an SQS message per uploaded
 archive triggers a Glue workflow run (bootstrap_trigger.py; SURVEY §2.11),
 so "new archives only" is enforced by the queue. Spark-first, the same
 lifecycle is a **file-source stream over the archive prefix**: the
-checkpoint tracks which archives have been processed exactly-once, and
+checkpoint records which archives have been handed to a micro-batch, and
 ``Trigger.AvailableNow`` drains everything new then stops — a bookmarked
 run when invoked from cron, a live ingest daemon when run with a
 continuous trigger. No queue, no bespoke ledger.
 
+Delivery is at-least-once: ``foreachBatch`` appends to the lake and the
+quarantine before the checkpoint commits the batch, so a crash between the
+two replays that batch into both sinks on the next run.
+
 Each micro-batch runs the SAME stage-1 body as the batch job
-(``pipeline.ingest.ingest_archives``: fan-out → validate → suppress →
-quarantine → route → inject → partitioned NDJSON append), so batch and
-streaming cannot drift.
+(``pipeline.ingest.ingest_archives``: one Python pass per archive — unzip,
+validate, judge, route, rewrite — then the quarantine parquet append and
+the partitioned NDJSON append), so batch and streaming cannot drift.
 """
 
 from __future__ import annotations
@@ -66,7 +70,6 @@ def stream_ingest(
             "path", F.regexp_replace("path", "^file:/*", "/")
         ).join(F.broadcast(manifest), "path", "inner")
         ingest_archives(
-            spark,
             archives,
             archive_map=archive_map,
             schema_store=schema_store,
@@ -76,7 +79,6 @@ def stream_ingest(
             quarantine_root=quarantine_root,
             app_id=app_id,
             mode="append",
-            collect_counts=False,
         )
 
     q = (

@@ -15,9 +15,9 @@ three scopes with a per-record self-reference override
 
 Spark-first: resolution inputs have *config cardinality* — distinct
 (assessment, revision, filename) combos, bounded by the archive map itself,
-not by row count — so the validation UDF
+not by row count — so the per-member checker
 (:func:`~bridgedownstream_spark.validation.validate.validate_members`)
-resolves each distinct combo once per executor and memoizes it. 100 TB of
+resolves each distinct combo once per Spark task and memoizes it. 100 TB of
 archives with the same few hundred assessment/file combos still resolve in
 milliseconds of work, in the same pass that validates them.
 """
@@ -34,8 +34,9 @@ def resolve_schema_url(
     assessment_revision: int,
     file_name: str,
 ) -> str | None:
-    """Pure-Python 3-scope resolution (no self-ref — that arrives as a
-    column from the archive source). Returns the schema URL or None."""
+    """Pure-Python 3-scope resolution (no self-ref — that arrives with the
+    member from the archive's own metadata.json). Returns the schema URL or
+    None."""
     # 1. assessment scope: closest revision <= record's revision
     valid = [
         a

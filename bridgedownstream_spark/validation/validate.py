@@ -10,30 +10,34 @@ Reference semantics (s3_to_json_s3.py:302-490,803-832):
 - invalid records go to an error queue with errors truncated to 10 per
   file (:813-823); valid records proceed to the dataset writer.
 
-Spark-first: validation is the one genuinely Python-bound step (jsonschema
-has no JVM equivalent), so it runs as an Arrow-batched ``mapInPandas`` with
-a compiled-validator cache per executor. Everything around it — suppression
-(``array_except``), the validity split (window ``max`` over the record),
-error truncation (``slice``) — is native column work.
+Spark-first: validation is Python-bound (jsonschema has no JVM
+equivalent), so :func:`validate_members` builds a per-member checker that
+stage 1's single Python pass (``pipeline.ingest.check_archives``) calls
+on every member of an archive; the pass then judges the archive from its
+own members. The checker subtracts the expected errors in Python
+(:func:`remove_expected_errors`); :func:`suppress_expected_errors` is the
+same rule as a native ``array_except`` projection over a DataFrame. The
+fork into lake and quarantine and the error truncation (``slice``) are
+native column work (:func:`split_valid_records`).
 """
 
 from __future__ import annotations
 
 import copy
 import json
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bridgedownstream_spark.sources.archive import (
     CORRUPT_ARCHIVE_MEMBER as _CORRUPT_ARCHIVE_MEMBER,
 )
+from bridgedownstream_spark.validation.resolve import resolve_schema_url
 
 __all__ = [
     "validate_members",
+    "remove_expected_errors",
     "suppress_expected_errors",
     "split_valid_records",
     "ANDROID_EXPECTED_ERRORS",
@@ -66,101 +70,87 @@ ANDROID_EXPECTED_ERRORS: dict[str, list[str]] = {
 
 
 def validate_members(
-    members: DataFrame,
     schema_store: dict[str, dict],
     archive_map: dict,
     app_id: str = "mobile-toolbox",
-) -> DataFrame:
-    """Add a ``schema_url: string`` column, then an ``errors:
-    array<string>`` column — the governing schema's URL and the JSON-Schema
-    validation errors of ``body`` against it.
+) -> Callable[[str, str, str | None, dict], tuple[str | None, list[str]]]:
+    """Return the per-member checker ``check(file_name, body,
+    self_ref_schema_url, meta) -> (schema_url, errors)``: the governing
+    schema's URL and the JSON-Schema validation errors of ``body`` against
+    it, less the expected errors of :func:`remove_expected_errors`.
 
-    The URL is the member's ``self_ref_schema_url`` when set, else the
-    ``archive_map`` resolution of its (assessment, revision, filename)
-    combo (:func:`~bridgedownstream_spark.validation.resolve.resolve_schema_url`).
-    Resolution happens *inside* the UDF with a per-executor memo on the
-    distinct combos, so validation stays a single pass with no extra scan
-    to enumerate them.
+    The URL is ``self_ref_schema_url`` when set, else the ``archive_map``
+    resolution of the member's (``meta["assessmentid"]``,
+    ``meta["assessmentrevision"]``, ``file_name``) combo
+    (:func:`~bridgedownstream_spark.validation.resolve.resolve_schema_url`),
+    memoized per combo; compiled validators are memoized per URL. Both
+    memos start empty wherever the checker is unpickled, so each Spark task
+    resolves and compiles what it meets once.
 
     ``schema_store`` maps schema URLs to schema documents (the engine's
     stand-in for the reference's HTTP fetch + cache, s3_to_json_s3.py:
     286-299 — schemas are config data and belong in the job's inputs, not
     in per-row network calls). Members with no resolved schema validate
-    vacuously (reference skips them with a warning, :374-380).
+    vacuously (reference skips them with a warning, :374-380). The
+    :data:`~bridgedownstream_spark.sources.archive.CORRUPT_ARCHIVE_MEMBER`
+    marker always fails, so its record quarantines instead of vanishing.
     """
-    out_schema = T.StructType(
-        list(members.schema.fields)
-        + [
-            T.StructField("schema_url", T.StringType()),
-            T.StructField("errors", T.ArrayType(T.StringType())),
-        ]
-    )
-    store = {k: v for k, v in schema_store.items()}  # plain dict → task closure
+    store = dict(schema_store)
+    validators: dict[str, object] = {}
+    resolved: dict[tuple, str | None] = {}
 
-    def do_validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import jsonschema
+    def validator_for(url: str):
+        if url not in validators:
+            schema = store.get(url)
+            if schema is None:
+                validators[url] = None
+            else:
+                import jsonschema
 
-        from bridgedownstream_spark.validation.resolve import resolve_schema_url
+                cls = jsonschema.validators.validator_for(schema)
+                # workaround for python-jsonschema#1012 (reference
+                # validate_against_schema, s3_to_json_s3.py:402-409)
+                if str(schema.get("$id", "")).startswith("schemas/v0/"):
+                    schema = copy.deepcopy(schema)
+                    schema["$id"] = ""
+                validators[url] = cls(schema=schema)
+        return validators[url]
 
-        validators: dict[str, object] = {}
-        resolved: dict[tuple, str | None] = {}
-
-        def validator_for(url: str):
-            if url not in validators:
-                schema = store.get(url)
-                if schema is None:
-                    validators[url] = None
-                else:
-                    cls = jsonschema.validators.validator_for(schema)
-                    # workaround for python-jsonschema#1012 (reference
-                    # validate_against_schema, s3_to_json_s3.py:402-409)
-                    if str(schema.get("$id", "")).startswith("schemas/v0/"):
-                        schema = copy.deepcopy(schema)
-                        schema["$id"] = ""
-                    validators[url] = cls(schema=schema)
-            return validators[url]
-
-        def url_of(rec) -> str | None:
-            if rec.self_ref_schema_url is not None and not pd.isna(
-                rec.self_ref_schema_url
-            ):
-                return rec.self_ref_schema_url
-            key = (rec.assessmentid, rec.assessmentrevision, rec.file_name)
+    def check(file_name, body, self_ref_schema_url, meta):
+        url = self_ref_schema_url
+        if url is None:
+            key = (meta["assessmentid"], meta["assessmentrevision"], file_name)
             if key not in resolved:
                 resolved[key] = resolve_schema_url(
-                    archive_map, app_id, key[0], int(key[1]), key[2]
+                    archive_map, app_id, key[0], int(key[1]), file_name
                 )
-            return resolved[key]
+            url = resolved[key]
+        if file_name == _CORRUPT_ARCHIVE_MEMBER:
+            errors = [f"corrupt archive: {body}"]
+        elif url is None or (v := validator_for(url)) is None:
+            errors = []
+        else:
+            try:
+                errors = [e.message for e in v.iter_errors(json.loads(body))]
+            except json.JSONDecodeError as e:
+                errors = [f"invalid JSON: {e.msg}"]
+        return url, remove_expected_errors(errors, file_name, meta["clientinfo"])
 
-        for pdf in batches:
-            urls = [url_of(rec) for rec in pdf.itertuples(index=False)]
-            errs = []
-            for file_name, body, url in zip(pdf["file_name"], pdf["body"], urls):
-                if file_name == _CORRUPT_ARCHIVE_MEMBER:
-                    # marker from explode_members: the archive's zip could
-                    # not be opened — always invalid, so the record
-                    # quarantines instead of vanishing
-                    errs.append([f"corrupt archive: {body}"])
-                    continue
-                if url is None or pd.isna(url):
-                    errs.append([])
-                    continue
-                v = validator_for(url)
-                if v is None:
-                    errs.append([])
-                    continue
-                try:
-                    data = json.loads(body)
-                except json.JSONDecodeError as e:
-                    errs.append([f"invalid JSON: {e.msg}"])
-                    continue
-                errs.append([e.message for e in v.iter_errors(data)])
-            pdf = pdf.copy()
-            pdf["schema_url"] = urls
-            pdf["errors"] = errs
-            yield pdf
+    return check
 
-    return members.mapInPandas(do_validate, schema=out_schema)
+
+def remove_expected_errors(
+    errors: list[str], file_name: str, clientinfo: str | None
+) -> list[str]:
+    """``errors`` less :data:`ANDROID_EXPECTED_ERRORS` for ``file_name`` when
+    ``clientinfo`` names an Android client — the per-member Python twin of
+    :func:`suppress_expected_errors`, with ``array_except``'s semantics: a
+    NULL ``clientinfo`` or an unlisted file keeps ``errors`` as they are,
+    otherwise the survivors are deduplicated in first-seen order."""
+    allowed = ANDROID_EXPECTED_ERRORS.get(file_name)
+    if allowed is None or clientinfo is None or "Android" not in clientinfo:
+        return errors
+    return list(dict.fromkeys(e for e in errors if e not in allowed))
 
 
 def suppress_expected_errors(
@@ -187,25 +177,18 @@ def suppress_expected_errors(
 
 
 def split_valid_records(
-    members: DataFrame, record_col: str = "recordid", max_errors_per_file: int = 10
+    members: DataFrame, max_errors_per_file: int = 10
 ) -> tuple[DataFrame, DataFrame]:
-    """Split the member stream into (valid, quarantine) by record-level
-    validity: a record is invalid iff any of its members has errors
-    (reference s3_to_json_s3.py:803-832).
+    """Fork stage 1's pass output into (valid, quarantine): the pass emits
+    only the routed members of valid archives (no errors) and only the
+    offending members of invalid ones, so a member's own errors say where
+    it goes.
 
-    The quarantine side keeps only offending members, errors truncated to
-    ``max_errors_per_file`` (reference :814-818 — operator O2 as a native
-    ``slice``). One window shuffle on the record key; both sides reuse it.
+    The quarantine side has its errors truncated to ``max_errors_per_file``
+    (reference :814-818 — operator O2 as a native ``slice``).
     """
-    w = Window.partitionBy(record_col)
-    flagged = members.withColumn(
-        "__record_invalid__", F.max(F.size("errors") > 0).over(w)
+    has_errors = F.size("errors") > 0
+    quarantine = members.where(has_errors).withColumn(
+        "errors", F.slice("errors", 1, max_errors_per_file)
     )
-    valid = flagged.where(~F.col("__record_invalid__")).drop("__record_invalid__")
-    quarantine = (
-        flagged.where(F.col("__record_invalid__"))
-        .drop("__record_invalid__")
-        .where(F.size("errors") > 0)
-        .withColumn("errors", F.slice("errors", 1, max_errors_per_file))
-    )
-    return valid, quarantine
+    return members.where(~has_errors), quarantine

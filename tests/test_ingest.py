@@ -256,7 +256,6 @@ def test_corrupt_archive_quarantines_not_vanishes(spark, tmp_path):
         dataset_mapping=None,
         json_root=str(tmp_path / "json"),
         quarantine_root=q_root,
-        collect_counts=False,
     )
     q = spark.read.parquet(q_root)
     rows = q.collect()
@@ -297,3 +296,105 @@ def test_prune_quarantine_retention(spark, tmp_path):
         "kept": 0,
         "dropped": 0,
     }
+
+
+def _ingest_batch(spark, tmp_path, name, archives, json_root, quarantine_root):
+    """Zip ``archives`` ({recordid: (members, clientinfo)}) into their own
+    directory and run one stage-1 append into the shared roots."""
+    arch = tmp_path / name
+    arch.mkdir()
+    rows = []
+    for i, (rid, (members, client)) in enumerate(archives.items()):
+        path = _zip(arch / f"{name}{i}.zip", members)
+        rows.append((path, rid, "spelling", "3", "2022-09-02T10:11:12.000Z", client))
+    manifest = spark.createDataFrame(
+        rows,
+        "path string, recordid string, assessmentid string, "
+        "assessmentrevision string, uploadedon string, clientinfo string",
+    )
+    return run_ingest(
+        spark,
+        archive_path=str(arch / "*.zip"),
+        manifest=manifest,
+        archive_map=ARCHIVE_MAP,
+        schema_store=SCHEMA_STORE,
+        schema_mapping=SCHEMA_MAPPING,
+        dataset_mapping=None,
+        json_root=json_root,
+        quarantine_root=quarantine_root,
+    )
+
+
+_GOOD = {"weather.json": {"temperature": 1.0, "type": "weather"}}
+_BAD = {"weather.json": {"temperature": "hot", "type": "weather"}}
+
+
+def test_validity_is_per_archive(spark, tmp_path):
+    """Two archives share a recordid and only one fails its schema: the
+    valid archive still reaches the lake (the reference judges one archive
+    as one record), the invalid one's member is quarantined."""
+    json_root, q_root = str(tmp_path / "json"), str(tmp_path / "quarantine")
+    arch = tmp_path / "shared"
+    arch.mkdir()
+    manifest = spark.createDataFrame(
+        [
+            (_zip(arch / "ok.zip", _GOOD), "X", "spelling", "3",
+             "2022-09-02T10:11:12.000Z", "iPhone 13"),
+            (_zip(arch / "bad.zip", _BAD), "X", "spelling", "3",
+             "2022-09-02T10:11:12.000Z", "iPhone 13"),
+        ],
+        "path string, recordid string, assessmentid string, "
+        "assessmentrevision string, uploadedon string, clientinfo string",
+    )
+    counts = run_ingest(
+        spark,
+        archive_path=str(arch / "*.zip"),
+        manifest=manifest,
+        archive_map=ARCHIVE_MAP,
+        schema_store=SCHEMA_STORE,
+        schema_mapping=SCHEMA_MAPPING,
+        dataset_mapping=None,
+        json_root=json_root,
+        quarantine_root=q_root,
+    )
+    assert counts == {"valid_members": 1, "quarantined_members": 1}
+    lake = [json.loads(r["value"]) for r in spark.read.text(
+        f"{json_root}/dataset=weatherresult_v1/assessmentid=spelling/year=2022/month=9/day=2"
+    ).collect()]
+    assert [(b["recordid"], b["temperature"]) for b in lake] == [("X", 1.0)]
+    (q,) = spark.read.parquet(q_root).collect()
+    assert (q["recordid"], q["path"]) == ("X", str(arch / "bad.zip"))
+    assert any("'hot' is not of type 'number'" in e for e in q["errors"])
+
+
+def test_counts_are_per_run_not_cumulative(spark, tmp_path):
+    """Appends of disjoint archives into the same roots each report the
+    members they wrote, including a run whose lake write is empty."""
+    json_root, q_root = str(tmp_path / "json"), str(tmp_path / "quarantine")
+
+    def batch(name, archives):
+        return _ingest_batch(spark, tmp_path, name, archives, json_root, q_root)
+
+    first = batch("a", {"a1": (_GOOD, "iPhone 13"), "a2": (_GOOD, "iPhone 13"),
+                        "a3": (_BAD, "iPhone 13")})
+    second = batch("b", {"b1": (_GOOD, "iPhone 13"), "b2": (_BAD, "iPhone 13")})
+    third = batch("c", {"c1": (_BAD, "Android 12")})
+    assert first == {"valid_members": 2, "quarantined_members": 1}
+    assert second == {"valid_members": 1, "quarantined_members": 1}
+    assert third == {"valid_members": 0, "quarantined_members": 1}
+    lake = spark.read.option("recursiveFileLookup", "true").text(json_root)
+    assert lake.count() == 3
+    assert spark.read.parquet(q_root).count() == 3
+
+
+def test_quarantine_schema(spark, ingested):
+    """The quarantine table's columns: the member's identity, its archive's
+    manifest, then the schema it failed and the errors (no body)."""
+    q = spark.read.parquet(ingested["quarantine"])
+    assert q.columns == [
+        "path", "member_path", "file_name", "self_ref_schema_url",
+        "recordid", "assessmentid", "assessmentrevision", "uploadedon", "clientinfo",
+        "schema_url", "errors",
+    ]
+    assert q.schema["errors"].dataType.simpleString() == "array<string>"
+    assert {f.dataType.simpleString() for f in q.schema.fields if f.name != "errors"} == {"string"}

@@ -10,15 +10,17 @@ import textwrap
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # The driver finds the package through sys.path; the Python workers the
-# session spawns must find it on their own. explode_members' mapInPandas
-# closure calls a module-level helper, so a worker that cannot import
-# bridgedownstream_spark fails the job.
+# session spawns must find it on their own. check_archives' mapInPandas
+# closure calls module-level package helpers (the archive's metadata.json
+# reader, schema resolution), so a worker that cannot import
+# bridgedownstream_spark fails the job. The member fails its schema, so the
+# pass emits it with the body as read.
 _SCRIPT = textwrap.dedent(
     """
     import io, sys, zipfile
     sys.path.insert(0, sys.argv[1])
     from bridgedownstream_spark.session import get_spark
-    from bridgedownstream_spark.sources.archive import explode_members
+    from bridgedownstream_spark.pipeline.ingest import check_archives
 
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as zf:
@@ -26,9 +28,17 @@ _SCRIPT = textwrap.dedent(
         zf.writestr("r1/notes.txt", "not json")
     spark = get_spark("launch-dir-test", master="local[2]", shuffle_partitions=2)
     archives = spark.createDataFrame(
-        [("/inbox/r1.zip", buf.getvalue())], "path string, content binary"
+        [("/inbox/r1.zip", buf.getvalue(), "r1", "a", "1", "2024-01-02T00:00:00.000Z", "ios")],
+        "path string, content binary, recordid string, assessmentid string, "
+        "assessmentrevision string, uploadedon string, clientinfo string",
     )
-    rows = explode_members(archives).select("file_name", "body").collect()
+    members = check_archives(
+        archives,
+        archive_map={"anyOf": [{"filename": "x.json", "jsonSchema": "u"}]},
+        schema_store={"u": {"type": "array"}},
+        schema_mapping={},
+    )
+    rows = members.select("file_name", "body").collect()
     print("MEMBERS", sorted((r.file_name, r.body) for r in rows))
     spark.stop()
     """

@@ -143,7 +143,6 @@ def test_flat_inbox_directory_listing_matches_glob(spark, tmp_path):
         schema_mapping=SCHEMA_MAPPING,
         dataset_mapping=None,
         json_root=batch,
-        collect_counts=False,
     )
     assert _lake_recordids(spark, batch) == ["a", "b"]
 

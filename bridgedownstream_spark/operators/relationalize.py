@@ -165,7 +165,11 @@ def relationalize(
     table is returned under ``name``; children under ``{name}_{field}``
     etc. Parent tables always sort before their children (same guarantee
     the reference gets from ``sorted(keys)``, json_s3_to_parquet.py:204).
+    A frame with no array or struct field has nothing to flatten or link
+    and comes back as ``{name: df}``, unsalted.
     """
+    if not has_nested_fields(df.schema):
+        return {name: df}
     present_keys = [c for c in key_cols if c in df.columns]
     salted = not unique_keys or not present_keys
     if salted:

@@ -10,6 +10,8 @@
   partitions rewritten at target file size via dynamic partition overwrite.
 - :mod:`.upsert` — partition-scoped merge-into (the reference's
   overwrite-by-recordid contract, at lake scale).
+- :mod:`.partitions` — the Hive partition-path format (``c=v/c=v``, the
+  NULL directory, the path-safe charset) shared by the maintenance sinks.
 - :mod:`.workflow` — the one-call study workflow: checkpointed archive
   ingest → dataset discovery from the lake layout → incremental stage 2
   per dataset (the SNS→Lambda→Glue-workflow lifecycle, minus the cloud).

@@ -12,11 +12,15 @@ also needs to *fix* the mess. This module is that maintenance operator:
    listing itself scales across executors instead of a driver-side walk.
 2. **select** — partitions whose file count exceeds a threshold and whose
    mean file size is under target (driver-side decision over
-   partition-count-scale rows, like the ledger).
+   partition-count-scale rows, like the ledger). The listing's directory
+   names are the selection keys, matched against each row's
+   :func:`pipeline.partitions.partition_key`, so the NULL partition
+   (``__HIVE_DEFAULT_PARTITION__``) is selected like any other.
 3. **rewrite** — ONE partition-pruned scan of just those partitions,
    salted so each writes ``ceil(bytes / target)`` output files, committed
-   with dynamic partition overwrite so untouched partitions are never
-   rewritten and readers see whole partitions swap atomically.
+   with dynamic partition overwrite (a writer option; the session's conf
+   is untouched) so untouched partitions are never rewritten and readers
+   see whole partitions swap atomically.
 """
 
 from __future__ import annotations
@@ -26,6 +30,13 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bridgedownstream_spark.pipeline.partitions import (
+    parse_partition,
+    partition_dir,
+    partition_key,
+    read_partitioned,
+)
 
 __all__ = ["partition_file_stats", "compact_dataset"]
 
@@ -55,11 +66,6 @@ def partition_file_stats(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def _partition_values(partition: str) -> list[str]:
-    """``a=1/b=2`` → ``["1", "2"]`` (Hive layout, string-typed values)."""
-    return [seg.split("=", 1)[1] for seg in partition.split("/") if "=" in seg]
-
-
 def compact_dataset(
     spark: SparkSession,
     table_path: str,
@@ -70,9 +76,11 @@ def compact_dataset(
     """Rewrite fragmented partitions of ``table_path`` into
     ``ceil(partition_bytes / target_file_bytes)`` files each.
 
-    Returns ``{partition: n_output_files}`` for every compacted partition
-    (empty dict ⇒ nothing needed). Only partitions with more than
-    ``min_files`` files AND mean file size below target are touched.
+    Returns ``{partition: n_output_files}`` for every partition it
+    rewrote (empty dict ⇒ nothing needed). Only partitions with more than
+    ``min_files`` files AND mean file size below target are touched. A
+    selected partition directory that does not round-trip through
+    ``partition_cols`` raises ``ValueError`` before any write.
 
     **Concurrency contract**: compaction is read-snapshot → dynamic
     overwrite, with NO coordination against concurrent writers — rows
@@ -80,9 +88,7 @@ def compact_dataset(
     (localCheckpoint) and the overwrite are LOST. Do not run it while an
     upsert/lake-sync writer may touch the same partitions; schedule it
     the way table formats schedule OPTIMIZE — against quiesced (e.g.
-    closed-date) partitions, or under an external lock. It also toggles
-    the session-level ``partitionOverwriteMode`` conf, so it must not
-    share a SparkSession with concurrent writers mid-flight.
+    closed-date) partitions, or under an external lock.
     """
     stats = partition_file_stats(spark, table_path).collect()
     todo: dict[str, int] = {}
@@ -96,21 +102,22 @@ def compact_dataset(
             )
     if not todo:
         return {}
+    for p in todo:
+        if partition_dir(parse_partition(p), partition_cols) != p:
+            raise ValueError(
+                f"compact_dataset: partition directory {p!r} does not "
+                f"round-trip through partition_cols {partition_cols}"
+            )
 
-    df = spark.read.parquet(table_path)
+    df = read_partitioned(spark, table_path, partition_cols)
     # prune the scan to the fragmented partitions only
-    part_key = F.concat_ws("/", *[F.col(c).cast("string") for c in partition_cols])
-    keys = [
-        "/".join(_partition_values(p)) for p in todo
-    ]
-    pruned = df.where(part_key.isin(keys))
+    part_key = partition_key(partition_cols)
+    pruned = df.where(part_key.isin(list(todo)))
 
     # per-partition output fan: salt = hash(row) mod n_out for THAT
     # partition, broadcast-joined in — so a 10 GB partition gets 80 files
     # and a 100 MB one gets 1, from the same single rewrite job
-    fan = spark.createDataFrame(
-        [(k, n) for k, n in zip(keys, todo.values())], "__pk string, __n_out int"
-    )
+    fan = spark.createDataFrame(list(todo.items()), "__pk string, __n_out int")
     data_cols = [c for c in df.columns if c not in partition_cols]
     salted = (
         pruned.withColumn("__pk", part_key)
@@ -130,12 +137,12 @@ def compact_dataset(
     # fragmented partitions, on executor storage; a production variant on
     # object storage would stage to a sibling prefix + rename instead.
     out = out.localCheckpoint(eager=True)
+    # a selected partition with no rows (only empty files) is not in `out`,
+    # so the overwrite leaves it as it was
+    done = {r[0] for r in out.select(part_key).distinct().collect()}
 
     # dynamic overwrite: ONLY the partitions present in `out` are replaced
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy(*partition_cols).parquet(table_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return todo
+    out.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(table_path)
+    return {p: n for p, n in todo.items() if p in done}

@@ -95,7 +95,9 @@ def inject_metadata() -> Callable[[str, str, dict], tuple[str, str, str, str]]:
 
     - partition fields: year/month/day ints parsed from ``meta["uploadedon"]``
       (format ``%Y-%m-%dT%H:%M:%S.%fZ``), plus assessmentid + recordid;
-    - ArchiveMetadata datasets get every :data:`MANIFEST_FIELDS` field injected;
+    - ArchiveMetadata datasets (the name's first ``_`` segment, compared
+      case-insensitively: ``ArchiveMetadata_v1``, ``archivemetadata_v1``)
+      get every :data:`MANIFEST_FIELDS` field injected;
     - list-bodies get the fields injected into every element (operator N6);
     - the returned partition values keep the reference's unpadded string
       forms (``month=9``, :628-639) while the injected data fields stay
@@ -116,7 +118,7 @@ def inject_metadata() -> Callable[[str, str, dict], tuple[str, str, str, str]]:
                 # one garbage record per physical line otherwise; wrapped,
                 # the body stays byte-recoverable and clearly marked
                 body = json.dumps({"__unparseable_body__": body})
-        elif dataset_identifier.split("_")[0] == "ArchiveMetadata":
+        elif dataset_identifier.split("_")[0].lower() == "archivemetadata":
             j.update(parts)
             for c in MANIFEST_FIELDS:
                 j[c] = meta[c]

@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 
 from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
-    has_nested_fields,
     relationalize,
 )
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
@@ -213,8 +212,9 @@ def run_json_to_parquet(
     corrupt_root: str | None = None,
 ) -> dict[str, str]:
     """The stage-2 job for one dataset: read → (ledger pruning) → conform
-    → relationalize (if nested) → write each table as partitioned parquet.
-    Returns ``{table_name: parquet_path}`` for every table written.
+    → relationalize (a flat frame is one table) → write each table as
+    partitioned parquet. Returns ``{table_name: parquet_path}`` for every
+    table written.
 
     ``ledger`` (a :class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`)
     makes the run incremental: only files absent from the ledger are
@@ -277,17 +277,15 @@ def run_json_to_parquet(
             ).write.mode(mode).parquet(corrupt_root)
             df = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
-        written: dict[str, str] = {}
-        if has_nested_fields(df.schema):
-            # wide_ids=True switches surrogate keys to 128-bit md5 strings —
-            # flip it for tables expecting billions of parent rows per path,
-            # where 64-bit birthday collisions become real (see
-            # operators/relationalize.py module docs)
-            tables = relationalize(df, dataset_name, key_cols=key_cols, wide_ids=wide_ids)
-            for name, table in tables.items():
-                written[name] = write_parquet_dataset(table, parquet_root, name, mode=mode)
-        else:
-            written[dataset_name] = write_parquet_dataset(df, parquet_root, dataset_name, mode=mode)
+        # wide_ids=True switches surrogate keys to 128-bit md5 strings —
+        # flip it for tables expecting billions of parent rows per path,
+        # where 64-bit birthday collisions become real (see
+        # operators/relationalize.py module docs)
+        tables = relationalize(df, dataset_name, key_cols=key_cols, wide_ids=wide_ids)
+        written = {
+            name: write_parquet_dataset(table, parquet_root, name, mode=mode)
+            for name, table in tables.items()
+        }
         if paths:
             ledger.commit(paths, dataset_name)  # post-write, like job.commit()
         return written

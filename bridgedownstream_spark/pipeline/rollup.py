@@ -4,7 +4,7 @@ The reference's reporting queries re-aggregate the lake on every run
 (count-reconciliation etl-245/main.py:55-57 rescans each dataset hourly).
 That is O(lake) per refresh; at 100 TB the only sustainable shape is a
 materialized rollup maintained incrementally: aggregate ONLY partitions
-that are not yet in the rollup, append their pre-aggregated rows, and let
+that are not yet in the rollup, write their pre-aggregated rows, and let
 readers aggregate the (tiny) rollup instead of the lake.
 
 This is the Timescale continuous-aggregate / Druid rollup pattern on
@@ -12,13 +12,18 @@ plain parquet:
 
 - the refresh unit is the Hive partition (the lake's natural append
   grain: a day lands, a day is rolled up);
-- partition discovery costs one metadata-only scan of each side's
-  partition values (partition columns resolve from directory names —
-  Spark never opens a data file for them);
+- the refresh plan is a driver-side difference of the two sides'
+  partition directory names (:mod:`pipeline.partitions`), each from one
+  metadata-only scan of partition values (Spark never opens a data file
+  for them). Both sides are read with string partition values through an
+  explicit schema, so ``day=01`` names its directory on any session, and
+  the NULL partition compares like any other;
 - late rows landing in an ALREADY-ROLLED partition are handled by
   explicit re-refresh (``refresh_partitions``) which recomputes just
-  those partitions under dynamic partition overwrite — same contract as
-  the upsert sink.
+  those partitions;
+- every refresh is one dynamic partition overwrite, set as a writer
+  option: new partitions are added, named ones replaced, and the
+  session's conf is never touched — same contract as the upsert sink.
 
 Readers then run `SELECT ... FROM rollup GROUP BY ...` — an aggregation
 over pre-aggregated per-partition rows, exact for algebraic aggregates
@@ -27,52 +32,19 @@ over pre-aggregated per-partition rows, exact for algebraic aggregates
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import posixpath
+
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-import re
-
 from bridgedownstream_spark.pipeline.fsutil import delete_path, has_data_files
+from bridgedownstream_spark.pipeline.partitions import (
+    partition_dir,
+    partition_key,
+    read_partitioned,
+)
 
 __all__ = ["refresh_rollup"]
-
-#: Spark's directory name for a NULL/empty partition value
-_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
-
-#: same value charset as upsert._PATH_SAFE: a spec value outside it would
-#: not round-trip to the directory name Spark wrote, so the delete below
-#: would address the wrong (or a parent) path
-_PATH_SAFE = re.compile(r"^[A-Za-z0-9._\- ]+$")
-
-
-def _drop_rollup_partition(
-    spark: SparkSession, rollup_path: str, partition_cols: list[str], spec: dict
-) -> None:
-    import posixpath
-
-    for c in partition_cols:
-        v = spec[c]
-        if v in (None, ""):
-            continue
-        if not isinstance(v, str) or not _PATH_SAFE.match(v):
-            # ADVICE r3: caller-supplied values reach an FS DELETE — a '/'
-            # or Spark-escaped character would escape the partition dir
-            raise ValueError(
-                f"refresh_rollup: partition value {c}={v!r} does not "
-                "round-trip to a directory name (non-string, or contains "
-                "'/', '=', or other characters Spark %-escapes); refusing "
-                "to delete by path"
-            )
-    segs = [
-        f"{c}={_HIVE_DEFAULT if spec[c] in (None, '') else spec[c]}"
-        for c in partition_cols
-    ]
-    delete_path(spark, posixpath.join(rollup_path, *segs))
-    # the session-wide FileStatusCache still lists the deleted files (a
-    # later dynamic-overwrite write only refreshes the partitions it
-    # rewrites); drop the stale entries or the next rollup read dies with
-    # FILE_NOT_EXIST
-    spark.catalog.refreshByPath(rollup_path)
 
 
 def refresh_rollup(
@@ -90,111 +62,65 @@ def refresh_rollup(
     by ``partition_cols + group_cols``; the rollup is written partitioned
     by ``partition_cols``. Returns the number of partitions refreshed.
 
-    Only source partitions absent from the rollup are aggregated (an
-    anti-join of the two partition-value sets — both metadata-cheap).
+    Only source partitions absent from the rollup are aggregated (a set
+    difference of the two sides' partition directories — both
+    metadata-cheap).
     ``refresh_partitions`` (list of {partition_col: value} dicts; a None
     value means the NULL/default partition) forces recomputation of
     specific partitions (the late-data and upsert paths), replacing
     their rollup rows via dynamic partition overwrite; a named partition
     that NO LONGER EXISTS in the source (an upsert emptied it) has its
     rollup partition deleted outright — dynamic overwrite cannot drop
-    rows for a partition that produces no output.
+    rows for a partition that produces no output. A named value that is
+    not a path-safe string raises ``ValueError`` before any delete or
+    write.
     """
-    # Pin string partition values for THIS function's reads regardless of
-    # the ambient session (ADVICE r3): with inference enabled, year=2022
-    # collects as int while the caller's spec (and the rollup path segs)
-    # carry strings — every touched partition would misclassify as
-    # vanished, get its rollup directory deleted, and recompute each
-    # micro-batch. get_spark() already disables inference; this guards the
-    # foreign-session case the same way pipeline_q._read_table re-pins.
-    inf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_inf = spark.conf.get(inf_key, "true")
-    spark.conf.set(inf_key, "false")
-    try:
-        return _refresh_rollup_pinned(
-            spark, table_path, rollup_path, group_cols, aggs,
-            partition_cols, refresh_partitions,
-        )
-    finally:
-        spark.conf.set(inf_key, prev_inf)
+    src = read_partitioned(spark, table_path, partition_cols)
+    part_key = partition_key(partition_cols)
 
+    def dirs(df) -> set[str]:
+        # partition-count-scale collect — this is the refresh plan, not data
+        return {r[0] for r in df.select(part_key).distinct().collect()}
 
-def _refresh_rollup_pinned(
-    spark: SparkSession,
-    table_path: str,
-    rollup_path: str,
-    group_cols: list[str],
-    aggs: list[Column],
-    partition_cols: list[str],
-    refresh_partitions: list[dict] | None,
-) -> int:
-    src = spark.read.parquet(table_path)
-    src_parts = src.select(*partition_cols).distinct()
-
+    src_dirs = dirs(src)
+    # the named partitions are validated before anything is deleted
+    refresh_dirs = {partition_dir(s, partition_cols) for s in refresh_partitions or []}
     # Drop stale rollup partitions FIRST — before the rollup read below
     # snapshots its file listing: a refresh partition the source no longer
     # has (an upsert emptied it) keeps rollup rows the dynamic overwrite
-    # cannot remove (no output rows for a vanished partition), and
-    # deleting its files after `existing` is created would make that
-    # plan's execution die on the removed files.
-    if refresh_partitions:
-        src_vals = {
-            tuple(r[c] for c in partition_cols) for r in src_parts.collect()
-        }
-        for spec in refresh_partitions:
-            if tuple(spec[c] for c in partition_cols) not in src_vals:
-                _drop_rollup_partition(spark, rollup_path, partition_cols, spec)
+    # cannot remove (no output rows for a vanished partition).
+    if refresh_dirs - src_dirs:
+        for d in sorted(refresh_dirs - src_dirs):
+            delete_path(spark, posixpath.join(rollup_path, d))
+        # the session-wide FileStatusCache still lists the deleted files (a
+        # later dynamic-overwrite write only refreshes the partitions it
+        # rewrites); drop the stale entries or the next rollup read dies
+        # with FILE_NOT_EXIST
+        spark.catalog.refreshByPath(rollup_path)
 
     # existence is checked explicitly (FS API, data files not bare dirs),
     # never inferred from a read failure: a blanket except would treat a
     # transient error (permissions, eventual consistency, corrupt footer)
-    # as first_write and re-append every source partition, silently
-    # doubling the rollup's aggregates
+    # as a first write and recompute every source partition
+    done = set()
     if has_data_files(spark, rollup_path):
-        existing = spark.read.parquet(rollup_path).select(*partition_cols).distinct()
-        first_write = False
-    else:
-        existing = None
-        first_write = True
-
-    if first_write:
-        todo = src_parts
-        mode = "append"
-    else:
-        missing = src_parts.join(existing, partition_cols, "left_anti")
-        if refresh_partitions:
-            cond = None
-            for spec in refresh_partitions:
-                one = None
-                for c, v in spec.items():
-                    p = F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                    one = p if one is None else (one & p)
-                cond = one if cond is None else (cond | one)
-            # the late-data partitions AND any newly-arrived partitions:
-            # a "bring it up to date" call that names late partitions must
-            # not silently skip the normal new-partition sync
-            todo = src_parts.where(cond).unionByName(missing).distinct()
-            mode = "overwrite"  # dynamic: replaces named, creates new
-        else:
-            todo = missing
-            mode = "append"
-
-    # partition-count-scale collect — this is the refresh plan, not data
-    n_todo = todo.count()
-    if n_todo == 0:
+        done = dirs(read_partitioned(spark, rollup_path, partition_cols))
+    # the new partitions AND the named late-data ones: a "bring it up to
+    # date" call that names late partitions must not skip the new ones
+    todo = (src_dirs - done) | (src_dirs & refresh_dirs)
+    if not todo:
         return 0
 
     rows = (
-        src.join(F.broadcast(todo), partition_cols, "semi")
+        src.where(part_key.isin(sorted(todo)))
         .groupBy(*partition_cols, *group_cols)
         .agg(*aggs)
         # one file per refreshed partition: rollups are small by nature
         .repartition(*partition_cols)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rows.write.mode(mode).partitionBy(*partition_cols).parquet(rollup_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n_todo
+    # dynamic overwrite replaces exactly the partitions in `rows`; a new
+    # partition is simply added
+    rows.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(rollup_path)
+    return len(todo)

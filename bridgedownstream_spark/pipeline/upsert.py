@@ -14,7 +14,14 @@ and that is exactly enough:
    scan; untouched partitions are never opened);
 2. merge — anti-join existing rows against update keys, union the
    updates in (same-key rows replaced, new keys appended);
-3. swap — dynamic partition overwrite rewrites just those partitions.
+3. swap — dynamic partition overwrite rewrites just those partitions;
+   partitions the merge left empty are deleted by directory name.
+
+The overwrite mode is a writer option, so the session's conf is never
+touched and concurrent jobs on the same session are unaffected. Partition
+directories are named, validated and pruned through
+:mod:`pipeline.partitions`; the table is read with string partition
+values whatever the session's partition-type inference.
 
 Cost scales with touched partitions, not table size: upserting one day
 of records into a years-deep lake reads and rewrites one day. The
@@ -34,49 +41,28 @@ known partitions instead of relying on this scan.
 from __future__ import annotations
 
 import posixpath
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bridgedownstream_spark.pipeline.fsutil import delete_path, has_data_files
+from bridgedownstream_spark.pipeline.partitions import (
+    partition_dir,
+    partition_key,
+    read_partitioned,
+)
 
 __all__ = ["upsert_dataset"]
 
-#: Spark's directory name for a NULL (or empty-string) partition value
-_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
 
-#: partition VALUES must round-trip to directory names verbatim for the
-#: empty-partition cleanup to address the right paths; Spark %-escapes
-#: anything outside roughly this set, which this module does not replicate
-_PATH_SAFE = re.compile(r"^[A-Za-z0-9._\- ]+$")
-
-
-def _check_path_safe(part_keys: set[str], partition_cols: list[str]) -> None:
-    """Reject partition keys whose VALUES would not round-trip to directory
-    names verbatim. Validated structurally, not just per-character: a value
-    containing ``/`` splits into extra segments (caught by the count and
-    ``col=`` prefix checks — naive per-segment validation would pass it),
-    and a value containing ``=`` or any other character Spark %-escapes
-    fails the charset check."""
-    for p in part_keys:
-        segs = p.split("/") if p else []
-        ok = len(segs) == len(partition_cols) and all(
-            seg.startswith(f"{col}=")
-            and (
-                (val := seg[len(col) + 1:]) == _HIVE_DEFAULT
-                or _PATH_SAFE.match(val)
-            )
-            for col, seg in zip(partition_cols, segs)
-        )
-        if not ok:
-            raise ValueError(
-                f"upsert_dataset: partition key {p!r} does not round-trip "
-                "to a directory path (a value contains '/', '=', or other "
-                "characters Spark %-escapes); the FS-level empty-partition "
-                "cleanup would address the wrong path. Use path-safe "
-                "partition values (the pipeline's layout does)."
-            )
+def _partition_dirs(df: DataFrame, partition_cols: list[str]) -> set[str]:
+    """The partition directories ``df``'s rows live in. Raises before any
+    write if a value would not round-trip to its directory name: the
+    empty-partition cleanup deletes by that name."""
+    vals = df.select(
+        *[F.col(c).cast("string").alias(c) for c in partition_cols]
+    ).distinct()
+    return {partition_dir(r.asDict(), partition_cols) for r in vals.collect()}
 
 
 def upsert_dataset(
@@ -113,32 +99,12 @@ def upsert_dataset(
     if updates is None and delete_keys is None:
         raise ValueError("upsert_dataset: need updates and/or delete_keys")
 
-    # opaque partition identity = the partition's directory path — used for
-    # pruning (expression over partition columns only, so the scan still
-    # partition-prunes) AND for locating directories to drop when emptied.
-    # NULL/empty values map to Spark's __HIVE_DEFAULT_PARTITION__ exactly as
-    # the writer lays them out — a raw NULL would collapse the whole
-    # segment out of concat_ws and alias DIFFERENT partitions onto one key
-    # (worst case: the cleanup deletes a parent directory holding live
-    # sibling partitions).
-    def _seg(c: str):
-        s = F.col(c).cast("string")
-        return F.concat(
-            F.lit(f"{c}="),
-            F.when(s.isNull() | (s == ""), F.lit(_HIVE_DEFAULT)).otherwise(s),
-        )
-
-    part_key = F.concat_ws("/", *[_seg(c) for c in partition_cols])
-
-    # the updates' partition keys are validated on EVERY path, including
-    # the first write — a table created with %-escaped values would be
+    # the updates' partitions are validated on EVERY path, including the
+    # first write — a table created with %-escaped values would be
     # writable exactly once and never mergeable again
     upd_parts: set[str] = set()
     if updates is not None:
-        upd_parts = {
-            r["p"] for r in updates.select(part_key.alias("p")).distinct().collect()
-        }
-        _check_path_safe(upd_parts, partition_cols)
+        upd_parts = _partition_dirs(updates, partition_cols)
 
     # first-write probe on DATA files, not directory existence: a table
     # whose every partition was removed by a delete-only merge leaves an
@@ -159,7 +125,7 @@ def upsert_dataset(
             )
             return upd_parts
         return set()
-    existing = spark.read.parquet(table_path)
+    existing = read_partitioned(spark, table_path, partition_cols)
 
     touched: set[str] = set(upd_parts)
     removal: DataFrame | None = None
@@ -168,19 +134,13 @@ def upsert_dataset(
     if delete_keys is not None:
         dk = delete_keys.select(*key_cols).distinct()
         removal = dk if removal is None else removal.unionByName(dk).distinct()
-        doomed = existing.select(*key_cols, part_key.alias("p")).join(
-            F.broadcast(dk), key_cols, "left_semi"
-        )
-        touched |= {r["p"] for r in doomed.select("p").distinct().collect()}
+        # the doomed partitions of EXISTING rows are validated too
+        doomed = existing.join(F.broadcast(dk), key_cols, "left_semi")
+        touched |= _partition_dirs(doomed, partition_cols)
     if not touched:
         return set()  # nothing to replace and no existing rows to delete
-    # fail BEFORE any write: a non-path-safe partition value would be laid
-    # out %-escaped by Spark while the cleanup below addresses the raw
-    # string — deleting the wrong (or no) directory. (Covers the doomed
-    # partitions of EXISTING rows too, not just the updates'.)
-    _check_path_safe(touched, partition_cols)
 
-    pruned = existing.where(part_key.isin(list(touched)))
+    pruned = existing.where(partition_key(partition_cols).isin(list(touched)))
     kept = pruned.join(F.broadcast(removal), key_cols, "left_anti")
     merged = (
         kept.unionByName(updates.select(*existing.columns))
@@ -189,18 +149,10 @@ def upsert_dataset(
     )
     # cut the read-own-path lineage before overwriting (see compact.py)
     merged = merged.localCheckpoint(eager=True)
-    out_parts = {
-        r["p"] for r in merged.select(part_key.alias("p")).distinct().collect()
-    }
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            table_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    out_parts = _partition_dirs(merged, partition_cols)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(table_path)
 
     for p in sorted(touched - out_parts):
         if p:  # never the table root (unpartitioned tables use p == "")

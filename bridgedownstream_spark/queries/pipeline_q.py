@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from bridgedownstream_spark.pipeline import DatasetRegistry, run_json_to_parquet
 from bridgedownstream_spark.queries.util import tbl
 from bridgedownstream_spark.sources import write_ndjson_dataset
+from bridgedownstream_spark.streaming.drain import drain
 
 QUERIES: dict = {}
 
@@ -469,9 +470,9 @@ _STREAM_SRC_DDL = (
 
 
 def _drain(spark: SparkSession, writer, ckpt: str, what: str) -> None:
-    """Drain a stream fixture: start ``writer`` (a ``DataStreamWriter``)
-    checkpointed at ``ckpt`` with an availableNow trigger and wait up to
-    300 s for it to finish.
+    """Drain a stream fixture: :func:`streaming.drain.drain` runs
+    ``writer`` (a ``DataStreamWriter``) checkpointed at ``ckpt`` with an
+    availableNow trigger and waits up to 300 s for it to finish.
 
     The drain runs at 8 shuffle partitions. The fixture corpora are
     event-table-sized, where 32-way state-store tasks are pure scheduling
@@ -486,10 +487,7 @@ def _drain(spark: SparkSession, writer, ckpt: str, what: str) -> None:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q_ = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-        if not q_.awaitTermination(300):
-            q_.stop()
-            raise TimeoutError(f"{what} drain exceeded 300s ({ckpt})")
+        drain(writer, ckpt, 300, what)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 

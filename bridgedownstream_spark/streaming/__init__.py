@@ -8,6 +8,8 @@
 - :mod:`.lake_sync` — streaming stage-2 whose sink is the partition-scoped
   UPSERT: re-exported records replace their rows in place, keeping the
   parquet lake dedup-latest continuously.
+- :mod:`.drain` — the one availableNow drain (start, bounded wait, stop
+  and raise on timeout) behind every bounded stream run.
 
 The append-only stage 2 is bookmarked by the processed-files ledger
 (:mod:`bridgedownstream_spark.pipeline.ledger`), not by a streaming

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from bridgedownstream_spark.pipeline.ingest import ingest_archives
 from bridgedownstream_spark.sources.archive import load_archive_files
+from bridgedownstream_spark.streaming.drain import drain
 
 __all__ = ["stream_ingest", "BINARY_FILE_SCHEMA"]
 
@@ -81,15 +82,9 @@ def stream_ingest(
             mode="append",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_root)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(process_batch),
+        checkpoint_root,
+        timeout_sec,
+        "stream_ingest",
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()  # hung drains must raise, not return half-ingested
-        raise TimeoutError(
-            f"stream_ingest: drain exceeded {timeout_sec}s "
-            f"(checkpoint={checkpoint_root})"
-        )

@@ -20,6 +20,12 @@ Scale: each micro-batch touches only the partitions its records live in
 (partition-scoped upsert), so steady-state cost tracks the arrival rate,
 not lake size. The checkpoint makes restarts exactly-once; availableNow
 makes the same code a cron-driven incremental job or a long-lived daemon.
+
+With a rollup attached, the root table's touched partition directories
+are parsed back to partition values by
+:func:`pipeline.partitions.parse_partition` and handed to
+:func:`pipeline.rollup.refresh_rollup`. Neither sink sets a session conf,
+so the stream can share its SparkSession with other jobs.
 """
 
 from __future__ import annotations
@@ -30,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
-    has_nested_fields,
     relationalize,
 )
 from bridgedownstream_spark.pipeline.json_to_parquet import (
@@ -38,9 +43,12 @@ from bridgedownstream_spark.pipeline.json_to_parquet import (
     lake_read_schema,
 )
 from bridgedownstream_spark.pipeline.fsutil import has_data_files, list_dirs
+from bridgedownstream_spark.pipeline.partitions import parse_partition
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
+from bridgedownstream_spark.pipeline.rollup import refresh_rollup
 from bridgedownstream_spark.pipeline.upsert import upsert_dataset
 from bridgedownstream_spark.sources.ndjson import dataset_path
+from bridgedownstream_spark.streaming.drain import drain
 
 __all__ = ["sync_batch_to_lake", "stream_upsert_lake"]
 
@@ -53,9 +61,7 @@ def _expected_tables(
     reproduces relationalize's real naming including struct-flatten
     renames rather than guessing from prefixes."""
     df = spark.createDataFrame([], dataset.full_schema())
-    if has_nested_fields(df.schema):
-        return set(relationalize(df, dataset.name, key_cols=key_cols))
-    return {dataset.name}
+    return set(relationalize(df, dataset.name, key_cols=key_cols))
 
 
 def sync_batch_to_lake(
@@ -100,10 +106,7 @@ def sync_batch_to_lake(
     df = conform_to_schema(batch_df, dataset.full_schema())
     if df.isEmpty():
         return {}, set()
-    if has_nested_fields(df.schema):
-        tables = relationalize(df, dataset.name, key_cols=key_cols)
-    else:
-        tables = {dataset.name: df}
+    tables = relationalize(df, dataset.name, key_cols=key_cols)
     # metadata-scale (one id per re-exported record in this micro-batch);
     # checkpointed so the repeated broadcasts don't re-read the batch
     root_keys = df.select("recordid").distinct().localCheckpoint(eager=True)
@@ -226,13 +229,6 @@ def stream_upsert_lake(
         .json(path)
     )
 
-    def _parse_part(p: str) -> dict:
-        d: dict = {}
-        for seg in p.split("/"):
-            c, v = seg.split("=", 1)
-            d[c] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        return d
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         written, root_touched = sync_batch_to_lake(
             spark, batch_df, ds, parquet_root, key_cols=key_cols,
@@ -240,8 +236,6 @@ def stream_upsert_lake(
         )
         root_path = written.get(ds.name)
         if rollup_path is not None and root_path is not None and root_touched:
-            from bridgedownstream_spark.pipeline.rollup import refresh_rollup
-
             # the UPSERT's touched set (new partitions + old partitions of
             # replaced/moved rows), parsed back to partition-value dicts
             refresh_rollup(
@@ -252,22 +246,13 @@ def stream_upsert_lake(
                 rollup_aggs or [],
                 list(ds.partition_cols),
                 refresh_partitions=[
-                    _parse_part(p) for p in sorted(root_touched) if p
+                    parse_partition(p) for p in sorted(root_touched) if p
                 ],
             )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_root)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(process_batch),
+        checkpoint_root,
+        timeout_sec,
+        "stream_upsert_lake",
     )
-    if not q.awaitTermination(timeout_sec):
-        # a hung drain must be visible: callers assume the lake is fully
-        # synced on return, so timing out silently would hand them a
-        # half-written lake
-        q.stop()
-        raise TimeoutError(
-            f"stream_upsert_lake: drain exceeded {timeout_sec}s "
-            f"(checkpoint={checkpoint_root})"
-        )

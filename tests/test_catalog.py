@@ -75,14 +75,11 @@ def test_views_survive_partition_overwrite(spark, tmp_path):
     ).parquet(os.path.join(pq, "t1"))
     [view] = register_lake_views(spark, pq)
     assert spark.sql(f"SELECT count(*) AS n FROM {view}").collect()[0].n == 6
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        spark.range(10).selectExpr("id + 100 AS id", "'0' AS part").write.mode(
-            "overwrite"
-        ).partitionBy("part").parquet(os.path.join(pq, "t1"))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    spark.range(10).selectExpr("id + 100 AS id", "'0' AS part").write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("part").parquet(
+        os.path.join(pq, "t1")
+    )
     # 10 rewritten rows in part=0 plus the 3 untouched rows of part=1
     assert spark.sql(f"SELECT count(*) AS n FROM {view}").collect()[0].n == 13
 

@@ -93,3 +93,65 @@ def test_partition_file_stats_counts(spark, tmp_path):
     }
     real = _files_per_partition(table)
     assert stats == {k: len(v) for k, v in real.items()}
+
+
+def test_compact_null_partition(spark, tmp_path):
+    """A fragmented NULL partition (``__HIVE_DEFAULT_PARTITION__``) is
+    selected and rewritten like any other, keeping its rows; the result
+    names only partitions that were rewritten, so a selected partition
+    holding only empty files is left out of it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "null_lake")
+    rows = spark.createDataFrame(
+        [(i, None if i % 2 else "x") for i in range(40)], "id long, day string"
+    )
+    for _ in range(4):
+        rows.coalesce(1).write.mode("append").partitionBy("day").parquet(table)
+    empty = os.path.join(table, "day=e")
+    os.makedirs(empty)
+    for i in range(3):
+        pq.write_table(
+            pa.table({"id": pa.array([], pa.int64())}),
+            os.path.join(empty, f"part-{i}.parquet"),
+        )
+    null_dir = "day=__HIVE_DEFAULT_PARTITION__"
+    assert {k: len(v) for k, v in _files_per_partition(table).items()} == {
+        null_dir: 4, "day=x": 4, "day=e": 3
+    }
+
+    def null_stats():
+        return (
+            spark.read.parquet(table)
+            .where(F.col("day").isNull())
+            .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+            .first()
+        )
+
+    expect = null_stats()
+    assert expect["n"] == 80
+
+    done = compact_dataset(spark, table, ["day"], target_file_bytes=1 << 30)
+    assert done == {null_dir: 1, "day=x": 1}
+    assert {k: len(v) for k, v in _files_per_partition(table).items()} == {
+        null_dir: 1, "day=x": 1, "day=e": 3
+    }
+    assert null_stats() == expect
+    assert spark.read.parquet(table).count() == 160
+
+
+def test_compact_rejects_partition_dirs_that_do_not_round_trip(spark, tmp_path):
+    """A selected partition whose directory name is not the one its value
+    names (Spark %-escaped it) raises before any write, as upsert does."""
+    import pytest
+
+    table = str(tmp_path / "escaped_lake")
+    rows = spark.createDataFrame([(1, "d:2"), (2, "d:2")], "id long, day string")
+    for _ in range(4):
+        rows.coalesce(1).write.mode("append").partitionBy("day").parquet(table)
+    before = _files_per_partition(table)
+    assert list(before) == ["day=d%3A2"]
+    with pytest.raises(ValueError, match="round-trip"):
+        compact_dataset(spark, table, ["day"], target_file_bytes=1 << 30)
+    assert _files_per_partition(table) == before

@@ -266,3 +266,16 @@ def test_null_array_handling(spark):
     by_rid = {r["recordid"]: r["files"] for r in root}
     assert by_rid["r2"] is None and by_rid["r1"] is not None
     assert tables["t_files"].count() == 1
+
+
+def test_flat_keyless_frame_is_returned_unsalted(spark):
+    """A frame with no nested field has nothing to link: it comes back as
+    the one root table, with no row-salt window in its plan (the analyzed
+    plan: the optimizer would prune a dropped salt's window anyway)."""
+    flat = spark.createDataFrame([("a", 1), ("b", 2)], "name string, n int")
+    tables = relationalize(flat, "flat")
+    assert list(tables) == ["flat"]
+    assert tables["flat"].columns == ["name", "n"]
+    plan = tables["flat"]._jdf.queryExecution().analyzed().toString()
+    assert "Window" not in plan, plan
+    assert sorted(tables["flat"].collect()) == sorted(flat.collect())

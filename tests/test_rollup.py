@@ -122,3 +122,20 @@ def test_drop_rollup_partition_rejects_unsafe_values(spark, tmp_path):
         # partition path (the FS delete) is what receives it
         _rollup(spark, lake, roll, refresh_partitions=[{"day": "../lake"}])
     assert _read(spark, roll)[("01", "a")] == (1, 1.0)  # nothing deleted
+
+
+def test_null_partition_rolls_up_once(spark, tmp_path):
+    """A NULL partition value (the __HIVE_DEFAULT_PARTITION__ directory)
+    is diffed like any other partition: aggregated on the first refresh,
+    present afterwards, and re-refreshed when named as None."""
+    lake = str(tmp_path / "lake")
+    roll = str(tmp_path / "rollup")
+    _write_day(spark, lake, None, [("r1", "a", 1.0), ("r2", "a", 2.0)])
+    _write_day(spark, lake, "01", [("r3", "b", 4.0)])
+    assert _rollup(spark, lake, roll) == 2
+    assert _read(spark, roll) == {(None, "a"): (2, 3.0), ("01", "b"): (1, 4.0)}
+    assert _rollup(spark, lake, roll) == 0
+
+    _write_day(spark, lake, None, [("r9", "a", 10.0)])
+    assert _rollup(spark, lake, roll, refresh_partitions=[{"day": None}]) == 1
+    assert _read(spark, roll) == {(None, "a"): (3, 13.0), ("01", "b"): (1, 4.0)}

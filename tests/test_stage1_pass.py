@@ -68,9 +68,15 @@ def test_multiline_unparseable_body_is_wrapped_on_one_line():
 
 def test_archive_metadata_member_gets_every_manifest_field():
     rewrite = inject_metadata()
-    body, year, month, day = rewrite('{"appName": "mtb"}', "ArchiveMetadata_v1", META)
-    assert json.loads(body) == {"appName": "mtb", "year": 2022, "month": 9, "day": 2, **META}
-    assert list(json.loads(body)) == ["appName", "year", "month", "day", *MANIFEST_FIELDS]
+    # the dataset name is matched case-insensitively
+    for dataset in ("ArchiveMetadata_v1", "archivemetadata_v1"):
+        body, year, month, day = rewrite('{"appName": "mtb"}', dataset, META)
+        assert json.loads(body) == {
+            "appName": "mtb", "year": 2022, "month": 9, "day": 2, **META
+        }, dataset
+        assert list(json.loads(body)) == [
+            "appName", "year", "month", "day", *MANIFEST_FIELDS
+        ], dataset
     # other datasets get assessmentid, the partition ints and recordid only
     body, *_ = rewrite('[{"x": 1}, 7]', "motion_v1", META)
     assert json.loads(body) == [

@@ -46,7 +46,8 @@ def partition_file_stats(spark: SparkSession, table_path: str) -> DataFrame:
 
     ``binaryFile`` with only (path, length) projected never reads file
     bodies — it is a parallel directory walk. Partition identity is the
-    ``key=value/…`` path between the table root and the file name.
+    ``key=value/…`` path between the table root and the file name; files
+    directly under the root (an unpartitioned table) are partition "".
     """
     files = (
         spark.read.format("binaryFile")
@@ -56,11 +57,12 @@ def partition_file_stats(spark: SparkSession, table_path: str) -> DataFrame:
         .select("path", "length")
     )
     root = table_path.rstrip("/")
-    # strip scheme + root prefix, then the trailing file name
+    # strip scheme + root prefix, then the trailing file name ("" when
+    # the file sits directly under the root)
     rel = F.regexp_replace(
         "path", f"^(file:)?/*{re.escape(root.lstrip('/'))}/", ""
     )
-    part_dir = F.regexp_replace(rel, "/[^/]*$", "")
+    part_dir = F.regexp_extract(rel, "^(.*)/[^/]*$", 1)
     return files.groupBy(part_dir.alias("partition")).agg(
         F.count("*").alias("n_files"), F.sum("length").alias("total_bytes")
     )
@@ -77,7 +79,8 @@ def compact_dataset(
     ``ceil(partition_bytes / target_file_bytes)`` files each.
 
     Returns ``{partition: n_output_files}`` for every partition it
-    rewrote (empty dict ⇒ nothing needed). Only partitions with more than
+    rewrote (empty dict ⇒ nothing needed). With ``partition_cols`` empty
+    the whole table is one partition, ``""``. Only partitions with more than
     ``min_files`` files AND mean file size below target are touched. A
     selected partition directory that does not round-trip through
     ``partition_cols`` raises ``ValueError`` before any write.

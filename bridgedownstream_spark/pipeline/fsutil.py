@@ -2,9 +2,10 @@
 
 Path existence / listing / deletion must go through Hadoop's FS layer (not
 ``os``) so the same code works on file://, s3a://, and hdfs:// — one RPC per
-call, never a recursive local walk. The workflow's dataset discovery, the
-upsert sink's empty-partition cleanup and the rollup's existence check
-all use these helpers (a blanket ``except`` around ``spark.read`` treats
+call, never a recursive local walk. The workflow's dataset discovery, stage
+1's no-op check over its stream checkpoint and inbox, the upsert sink's
+empty-partition cleanup and the rollup's existence check all use these
+helpers (a blanket ``except`` around ``spark.read`` treats
 transient failures as "table absent", which is how aggregates get silently
 doubled — check existence explicitly instead).
 """
@@ -16,6 +17,8 @@ from pyspark.sql import SparkSession
 __all__ = [
     "path_exists",
     "list_dirs",
+    "list_files",
+    "read_text",
     "list_data_files",
     "delete_path",
     "has_data_files",
@@ -42,6 +45,32 @@ def list_dirs(spark: SparkSession, path: str) -> list[str]:
     return sorted(
         s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()
     )
+
+
+def list_files(spark: SparkSession, path: str, glob: str | None = None) -> list[str]:
+    """URIs of the files directly under ``path`` ([] if absent; ``path``
+    itself if it is a file), from one ``listStatus``. With ``glob``, only
+    the names Hadoop's ``GlobFilter`` accepts: the filter Spark's
+    ``pathGlobFilter`` reader option applies."""
+    fs, p = _fs_and_path(spark, path)
+    if not fs.exists(p):
+        return []
+    if glob is None:
+        statuses = fs.listStatus(p)
+    else:
+        jvm = spark.sparkContext._jvm
+        statuses = fs.listStatus(p, jvm.org.apache.hadoop.fs.GlobFilter(glob))
+    return [st.getPath().toUri().toString() for st in statuses if not st.isDirectory()]
+
+
+def read_text(spark: SparkSession, path: str) -> str:
+    """The whole file at ``path``, decoded as UTF-8."""
+    fs, p = _fs_and_path(spark, path)
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[str]:

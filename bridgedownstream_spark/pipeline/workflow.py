@@ -67,9 +67,13 @@ def run_study_workflow(
     safe), and stage 2's ledger skips already-processed lake files. Stage 1
     lists the archive directory once on the driver per run: an
     ``archive_path`` such as ``inbox/*.zip`` is loaded as ``inbox`` with a
-    file-name filter (:func:`~bridgedownstream_spark.sources.archive.load_archive_files`),
-    and stage 2 compares each dataset's file listing with the ledger on
-    the driver, so a re-run with nothing new reads no lake data.
+    file-name filter (:func:`~bridgedownstream_spark.sources.archive.load_archive_files`).
+    When the stream's checkpoint has no pending batch and has logged every
+    archive in that listing, stage 1 starts no stream (see
+    :mod:`~bridgedownstream_spark.streaming.ingest_stream`). Stage 2
+    compares each dataset's file listing with the ledger on the driver, so
+    a re-run with nothing new reads no lake data and launches only the
+    ledger reads.
     Datasets present in the lake but absent from the registry are left
     for a later run (exactly the reference's behavior when the catalog
     lags the data — the crawler sees them, the job has no table yet).

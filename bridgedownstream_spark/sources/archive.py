@@ -27,7 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["read_archives", "load_archive_files", "explode_members"]
+__all__ = ["read_archives", "archive_listing", "load_archive_files", "explode_members"]
 
 #: marker member emitted for an archive whose zip cannot be opened — it
 #: fails validation by construction, routing the record to quarantine
@@ -39,6 +39,20 @@ _GLOB_CHARS = frozenset("*?[]{}\\")
 
 def _has_glob(s: str) -> bool:
     return any(c in _GLOB_CHARS for c in s)
+
+
+def archive_listing(path: str) -> tuple[str, str | None] | None:
+    """Where :func:`load_archive_files` points the reader for ``path``: a
+    glob in the last component only gives ``(parent, pattern)``, a path
+    without a glob gives ``(path, None)``, and a glob anywhere else gives
+    None (the reader expands it itself)."""
+    if not _has_glob(path):
+        return path, None
+    parent, _, pattern = path.rpartition("/")
+    listable = parent and not parent.endswith(("/", ":"))
+    if listable and not _has_glob(parent):
+        return parent, pattern
+    return None
 
 
 def load_archive_files(reader, path: str) -> DataFrame:
@@ -53,10 +67,9 @@ def load_archive_files(reader, path: str) -> DataFrame:
     whose names do not match. Every other path shape, a glob directly under
     a filesystem root included, is loaded unchanged.
     """
-    parent, _, pattern = path.rpartition("/")
-    listable = parent and not parent.endswith(("/", ":"))
-    if listable and _has_glob(pattern) and not _has_glob(parent):
-        return reader.option("pathGlobFilter", pattern).load(parent)
+    where = archive_listing(path)
+    if where is not None and where[1] is not None:
+        return reader.option("pathGlobFilter", where[1]).load(where[0])
     return reader.load(path)
 
 

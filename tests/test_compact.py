@@ -155,3 +155,34 @@ def test_compact_rejects_partition_dirs_that_do_not_round_trip(spark, tmp_path):
     with pytest.raises(ValueError, match="round-trip"):
         compact_dataset(spark, table, ["day"], target_file_bytes=1 << 30)
     assert _files_per_partition(table) == before
+
+
+def test_compact_unpartitioned_table(spark, tmp_path):
+    """An unpartitioned table is one partition, "": four single-file
+    appends compact to one file with every row kept."""
+    import pytest
+
+    table = str(tmp_path / "flat_lake")
+    rows = spark.createDataFrame([(i, i * 10) for i in range(40)], "id long, v long")
+    for _ in range(4):
+        rows.coalesce(1).write.mode("append").parquet(table)
+
+    def parquet_files():
+        return sorted(glob.glob(os.path.join(table, "*.parquet")))
+
+    assert len(parquet_files()) == 4
+    stats = partition_file_stats(spark, table).collect()
+    assert [(r["partition"], r["n_files"]) for r in stats] == [("", 4)]
+    expect = spark.read.parquet(table).agg(F.count("*"), F.sum("v")).first()
+
+    assert compact_dataset(spark, table, [], target_file_bytes=1 << 30) == {"": 1}
+    assert len(parquet_files()) == 1
+    assert spark.read.parquet(table).agg(F.count("*"), F.sum("v")).first() == expect
+    assert compact_dataset(spark, table, [], target_file_bytes=1 << 30) == {}
+
+    # a partitioned table named as unpartitioned does not round-trip
+    parted = str(tmp_path / "parted_lake")
+    for _ in range(4):
+        rows.coalesce(1).write.mode("append").partitionBy("v").parquet(parted)
+    with pytest.raises(ValueError, match="round-trip"):
+        compact_dataset(spark, parted, [], target_file_bytes=1 << 30)

@@ -192,3 +192,192 @@ def test_glob_in_parent_reads_every_match(spark, tmp_path):
         _zip(tmp_path / d / f"{rid}.zip", [{"event_id": 1}])
     got = read_archives(spark, str(tmp_path / "in*" / "*.zip")).collect()
     assert sorted(r["path"].rsplit("/", 2)[1] for r in got) == ["in1", "in2"]
+
+
+class _QueryStarts:
+    """Counts streaming queries started on ``spark`` while in use."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self.n = 0
+
+    def __enter__(self):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        counter = self
+
+        class _Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                counter.n += 1
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self._listener = _Listener()
+        self._spark.streams.addListener(self._listener)
+        return self
+
+    def count(self) -> int:
+        self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return self.n
+
+    def __exit__(self, *exc):
+        self._spark.streams.removeListener(self._listener)
+
+
+def _ingest(spark, archive_path, rows, json_root, ck):
+    stream_ingest(
+        spark,
+        archive_path=archive_path,
+        manifest=_manifest(spark, rows),
+        archive_map=ARCHIVE_MAP,
+        schema_store=SCHEMA_STORE,
+        schema_mapping=SCHEMA_MAPPING,
+        dataset_mapping=None,
+        json_root=json_root,
+        checkpoint_root=ck,
+        timeout_sec=120,
+    )
+
+
+def test_replays_a_planned_batch_that_was_never_committed(spark, tmp_path):
+    # a crash after planning leaves offsets/N without commits/N: the next
+    # run must start the stream and commit the batch, never skip it
+    arch = tmp_path / "archives"
+    arch.mkdir()
+    rows = [_meta(_zip(arch / "r1.zip", [{"event_id": 1}]), "r1")]
+    json_root, ck = str(tmp_path / "json"), tmp_path / "ck"
+    _ingest(spark, str(arch / "*.zip"), rows, json_root, str(ck))
+    last = max(int(p.name) for p in (ck / "commits").iterdir() if p.name.isdigit())
+    (ck / "commits" / str(last)).unlink()
+    (ck / "commits" / f".{last}.crc").unlink(missing_ok=True)
+
+    with _QueryStarts(spark) as starts:
+        _ingest(spark, str(arch / "*.zip"), rows, json_root, str(ck))
+        assert starts.count() == 1
+    assert (ck / "commits" / str(last)).exists()
+    assert "r1" in _lake_recordids(spark, json_root)
+
+
+def test_replays_files_logged_but_never_planned(spark, tmp_path):
+    # a crash after the source logged its new files but before the batch
+    # was planned leaves sources/0/N with neither offsets/N nor commits/N:
+    # those files are still pending, so the stream must start
+    inbox, rows = _inbox(tmp_path, 1)
+    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), tmp_path / "ck"
+    _ingest(spark, path, rows, json_root, str(ck))
+    rows.append(_meta(_zip(inbox / "r1.zip", [{"event_id": 1}]), "r1"))
+    _ingest(spark, path, rows, json_root, str(ck))
+    for log in ("offsets", "commits"):
+        (ck / log / "1").unlink()
+        (ck / log / ".1.crc").unlink(missing_ok=True)
+
+    with _QueryStarts(spark) as starts:
+        _ingest(spark, path, rows, json_root, str(ck))
+        assert starts.count() == 1
+    assert (ck / "commits" / "1").exists()
+    assert _lake_recordids(spark, json_root) == ["r0", "r1", "r1"]
+
+
+def _inbox(tmp_path, n):
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    rows = [
+        _meta(_zip(inbox / f"r{i}.zip", [{"event_id": i}]), f"r{i}")
+        for i in range(n)
+    ]
+    return inbox, rows
+
+
+def test_noop_starts_no_query_for_glob_or_directory(spark, tmp_path):
+    inbox, rows = _inbox(tmp_path, 2)
+    for shape, path in (("glob", str(inbox / "*.zip")), ("dir", str(inbox))):
+        json_root, ck = str(tmp_path / f"json_{shape}"), str(tmp_path / f"ck_{shape}")
+        _ingest(spark, path, rows, json_root, ck)
+        with _QueryStarts(spark) as starts:
+            _ingest(spark, path, rows, json_root, ck)
+            assert starts.count() == 0, shape
+        assert _lake_recordids(spark, json_root) == ["r0", "r1"]
+
+
+def test_noop_starts_no_query_beside_other_files_and_subdirectories(spark, tmp_path):
+    inbox, rows = _inbox(tmp_path, 2)
+    (inbox / "notes.txt").write_text("not an archive")
+    (inbox / "sub").mkdir()
+    rows.append(_meta(_zip(inbox / "sub" / "c.zip", [{"event_id": 9}]), "c"))
+    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
+    _ingest(spark, path, rows, json_root, ck)
+    with _QueryStarts(spark) as starts:
+        _ingest(spark, path, rows, json_root, ck)
+        assert starts.count() == 0
+    assert _lake_recordids(spark, json_root) == ["r0", "r1"]
+
+
+def test_noop_starts_no_query_past_a_log_compaction(spark, tmp_path):
+    key = "spark.sql.streaming.fileSource.log.compactInterval"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        inbox = tmp_path / "inbox"
+        inbox.mkdir()
+        rows, ck = [], tmp_path / "ck"
+        json_root = str(tmp_path / "json")
+        for i in range(3):
+            rows.append(_meta(_zip(inbox / f"r{i}.zip", [{"event_id": i}]), f"r{i}"))
+            _ingest(spark, str(inbox / "*.zip"), rows, json_root, str(ck))
+        assert (ck / "sources" / "0" / "1.compact").exists()
+        with _QueryStarts(spark) as starts:
+            _ingest(spark, str(inbox / "*.zip"), rows, json_root, str(ck))
+            assert starts.count() == 0
+        assert _lake_recordids(spark, json_root) == ["r0", "r1", "r2"]
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_new_archive_starts_the_query(spark, tmp_path):
+    inbox, rows = _inbox(tmp_path, 2)
+    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
+    _ingest(spark, path, rows, json_root, ck)
+    rows.append(_meta(_zip(inbox / "r2.zip", [{"event_id": 2}]), "r2"))
+    with _QueryStarts(spark) as starts:
+        _ingest(spark, path, rows, json_root, ck)
+        assert starts.count() == 1
+    assert _lake_recordids(spark, json_root) == ["r0", "r1", "r2"]
+
+
+def test_sink_log_in_inbox_starts_the_query(spark, tmp_path):
+    # a _spark_metadata directory makes the source read a sink's log
+    # instead of listing: the driver-side listing cannot vouch for that
+    inbox, rows = _inbox(tmp_path, 2)
+    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
+    _ingest(spark, path, rows, json_root, ck)
+    (inbox / "_spark_metadata").mkdir()
+    with _QueryStarts(spark) as starts:
+        _ingest(spark, path, rows, json_root, ck)
+        assert starts.count() == 1
+
+
+def test_unknown_log_version_starts_the_query(spark, tmp_path):
+    # the check does not skip on a log it cannot read: the stream starts
+    # and Spark itself rejects the log
+    import pytest
+
+    inbox, rows = _inbox(tmp_path, 2)
+    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), tmp_path / "ck"
+    _ingest(spark, path, rows, json_root, str(ck))
+    log = ck / "sources" / "0" / "0"
+    log.write_text("v9" + log.read_text()[2:])
+    (ck / "sources" / "0" / ".0.crc").unlink(missing_ok=True)
+    with _QueryStarts(spark) as starts:
+        with pytest.raises(Exception):
+            _ingest(spark, path, rows, json_root, str(ck))
+        assert starts.count() == 1

@@ -248,9 +248,9 @@ def _jobs_since(spark, first_job: int) -> list[tuple[int, int]]:
 def test_noop_rerun_lists_archive_directory_once(spark, tmp_path):
     # 40 archives exceed spark.sql.sources.parallelPartitionDiscovery
     # .threshold (32): listing them as 40 root paths launches a 40-task
-    # job. The inbox glob is listed as one directory instead, so a no-op
-    # re-run has at most one such job (the stream re-opening its last
-    # committed batch).
+    # job, and so does restarting the archive stream (it re-opens its last
+    # committed batch). A no-op re-run lists the inbox once on the driver
+    # and starts no stream, so no job of it has more than a few tasks.
     n = 40
     arch = tmp_path / "archives"
     arch.mkdir()
@@ -272,12 +272,25 @@ def test_noop_rerun_lists_archive_directory_once(spark, tmp_path):
             work_root=work,
         )
 
+    def counts():
+        lake = spark.read.schema("event_id bigint").json(
+            os.path.join(work, "json", "dataset=eventlist_v1")
+        )
+        return lake.count(), spark.read.parquet(table).count()
+
     written = run()
     table = written["eventlist_v1"]["eventlist_v1"]
-    assert spark.read.parquet(table).count() == n
+    assert counts() == (n, n)
 
     first = max((j for j, _ in _jobs_since(spark, 0)), default=-1) + 1
     assert run() == {"eventlist_v1": {}}
     jobs = _jobs_since(spark, first)
-    assert sum(1 for _, tasks in jobs if tasks == n) <= 1, jobs
-    assert spark.read.parquet(table).count() == n
+    assert all(tasks <= 2 for _, tasks in jobs), jobs
+    assert counts() == (n, n)
+
+    # an archive landed after a no-op is ingested, exactly once
+    rows.append(_meta(_zip(arch / "late.zip", [{"event_id": n}]), "late"))
+    assert set(run()["eventlist_v1"]) == {"eventlist_v1"}
+    assert counts() == (n + 1, n + 1)
+    assert run() == {"eventlist_v1": {}}
+    assert counts() == (n + 1, n + 1)

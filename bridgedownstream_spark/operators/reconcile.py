@@ -25,7 +25,6 @@ __all__ = [
     "count_reconciliation",
     "assign_batches",
     "replay_quarantine",
-    "representative_sample",
 ]
 
 
@@ -101,25 +100,6 @@ def assign_batches(df: DataFrame, key: str, batch_size: int = 100) -> DataFrame:
     return df.withColumn(
         "batch_id",
         F.floor((F.row_number().over(w) - 1) / batch_size).cast("bigint"),
-    )
-
-
-def representative_sample(
-    df: DataFrame, group: str, seed: int = 42, order_key: str | None = None
-) -> DataFrame:
-    """One pseudo-random row per ``group`` (reference
-    get_representative_sample.py:61-65 shuffles then drop_duplicates).
-    A seeded hash order replaces ``rand()`` so the pick is reproducible —
-    the property the reference's schema-compatibility workflow actually
-    needs (re-runs must examine the same sample). One window shuffle."""
-    order = F.xxhash64(
-        F.lit(seed), F.col(order_key) if order_key else F.monotonically_increasing_id()
-    )
-    w = Window.partitionBy(group).orderBy(order)
-    return (
-        df.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") == 1)
-        .drop("__rn__")
     )
 
 

@@ -6,6 +6,10 @@
   partitioned parquet tables (reference src/glue/jobs/json_s3_to_parquet.py).
 - :mod:`.ledger` — processed-files ledger giving job-bookmark-style
   incremental semantics (reference transformation_ctx/job.commit()).
+- :mod:`.commitlog` — the one bookmark format of both stages: Spark's
+  numbered ``v1`` checkpoint-log files, read and appended on the driver
+  (stage 1 reads its stream checkpoint with it; the ledger is one log per
+  dataset).
 - :mod:`.compact` — small-file compaction: distributed listing, fragmented
   partitions rewritten at target file size via dynamic partition overwrite.
 - :mod:`.upsert` — partition-scoped merge-into (the reference's

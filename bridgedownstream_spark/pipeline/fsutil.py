@@ -1,17 +1,21 @@
 """Thin wrappers over the Hadoop FileSystem API.
 
-Path existence / listing / deletion must go through Hadoop's FS layer (not
-``os``) so the same code works on file://, s3a://, and hdfs:// — one RPC per
-call, never a recursive local walk. The workflow's dataset discovery, stage
-1's no-op check over its stream checkpoint and inbox, the upsert sink's
-empty-partition cleanup and the rollup's existence check all use these
-helpers (a blanket ``except`` around ``spark.read`` treats
-transient failures as "table absent", which is how aggregates get silently
-doubled — check existence explicitly instead).
+Path existence / listing / reading / deletion must go through Hadoop's FS
+layer (not ``os``) so the same code works on file://, s3a://, and hdfs://
+— one RPC per call, never a recursive local walk. The workflow's dataset
+discovery, both stages' bookmark logs (:mod:`.commitlog`: stage 1's
+stream checkpoint and stage 2's processed-files ledger, read and written
+on the driver), the upsert sink's empty-partition cleanup and the rollup's
+existence check all use these helpers (a blanket ``except`` around
+``spark.read`` treats transient failures as "table absent", which is how
+aggregates get silently doubled — check existence explicitly instead).
 """
 
 from __future__ import annotations
 
+from uuid import uuid4
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 __all__ = [
@@ -19,6 +23,7 @@ __all__ = [
     "list_dirs",
     "list_files",
     "read_text",
+    "create_text",
     "list_data_files",
     "delete_path",
     "has_data_files",
@@ -71,6 +76,35 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(stream.readAllBytes()).decode("utf-8")
     finally:
         stream.close()
+
+
+def create_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create the file ``path`` holding ``text`` (UTF-8), whole or not at
+    all: it is written under a hidden temporary name beside ``path``, then
+    renamed with ``FileContext.rename(..., Options.Rename.NONE)``. If
+    ``path`` already exists the rename raises, and that file is left as it
+    was. The rename is atomic on local FS and HDFS; on s3a it is a copy, so
+    there two writers racing for one name are not excluded."""
+    fs, p = _fs_and_path(spark, path)
+    p = fs.makeQualified(p)
+    jvm = spark.sparkContext._jvm
+    tmp = jvm.org.apache.hadoop.fs.Path(p.getParent(), f".{p.getName()}.{uuid4().hex}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
+    rename = jvm.org.apache.hadoop.fs.Options.Rename
+    no_overwrite = spark.sparkContext._gateway.new_array(rename, 1)
+    no_overwrite[0] = rename.NONE
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    try:
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(p.toUri(), conf).rename(
+            tmp, p, no_overwrite
+        )
+    except Py4JJavaError:
+        fs.delete(tmp, False)
+        raise
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[str]:

@@ -32,6 +32,7 @@ from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
     relationalize,
 )
+from bridgedownstream_spark.pipeline.commitlog import path_key
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
 from bridgedownstream_spark.sources.ndjson import dataset_path
 
@@ -217,11 +218,14 @@ def run_json_to_parquet(
     table written.
 
     ``ledger`` (a :class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`)
-    makes the run incremental: only files absent from the ledger are
-    processed, and their paths are committed after the sinks succeed —
-    the Glue-job-bookmark equivalent (reference
+    makes the run incremental: the dataset's file listing is compared with
+    the ledger's commit log on the driver, as URI values
+    (:func:`~bridgedownstream_spark.pipeline.commitlog.path_key`), only
+    files absent from it are read, and their paths are committed after the
+    sinks succeed — the Glue-job-bookmark equivalent (reference
     json_s3_to_parquet.py:74,103,233). Re-running over the same input is
-    then a no-op (idempotent).
+    then a no-op that reads no data and launches no Spark job; a ledger
+    that cannot be read raises instead of reprocessing everything.
 
     ``corrupt_root`` enables the stage-2 quarantine: unparseable lake
     lines are captured (see :func:`read_json_dataset` ``keep_corrupt``)
@@ -231,10 +235,7 @@ def run_json_to_parquet(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from bridgedownstream_spark.pipeline.fsutil import (
-        list_data_files,
-        path_exists,
-    )
+    from bridgedownstream_spark.pipeline.fsutil import list_data_files, path_exists
 
     ds = registry[dataset_name]
     keep_corrupt = corrupt_root is not None
@@ -250,8 +251,10 @@ def run_json_to_parquet(
         # batch is, since it contributes no rows and needs no rescan. A
         # missing dataset directory falls through to the read, which
         # raises.
-        done = ledger.processed_paths(dataset_name)
-        paths = [p for p in list_data_files(spark, dataset_dir) if p not in done]
+        done = ledger.processed_files(dataset_name)
+        paths = [
+            p for p in list_data_files(spark, dataset_dir) if path_key(p) not in done
+        ]
         if not paths:
             return {}
     df = read_json_dataset(spark, json_root, ds, keep_corrupt=keep_corrupt, paths=paths)

@@ -7,15 +7,23 @@ schema-change protocol's "reset the bookmark" step clears that state
 (docs/schema_change_protocol.md §3e; introspection
 src/scripts/bookmarks/get-bookmarks.py:19-27).
 
-Spark-first: the bookmark is just a tiny parquet table of processed file
-paths per dataset, read with its declared schema (no inference job). It
-holds one row per input file — file-count scale, not data scale: at 100 TB
-that is millions of paths, which fit on the driver. New work is therefore a
-**driver-side set difference** of the file listing against
-:meth:`FileLedger.processed_paths`, and a commit is the same difference
-followed by one append of the new paths, after the sink write succeeds —
-mirroring the reference's post-write ``job.commit()`` ordering so a failed
-run reprocesses rather than drops files.
+Spark-first, the bookmark is metadata too: one commit log per dataset
+under ``<ledger_root>/dataset=<name>/``, in the format of Spark's own
+checkpoint logs (:mod:`.commitlog`: numbered ``v1`` files of one JSON
+``{"path": …}`` per line, compacted every 10th file). It holds one entry
+per input file — file-count scale, not data scale: at 100 TB that is
+millions of paths, which fit on the driver. Reading and committing are
+Hadoop FS calls on the driver, never a Spark job, so a re-run with nothing
+new launches none. New work is a **driver-side set difference** of the
+file listing against :meth:`FileLedger.processed_files`, compared through
+:func:`~.commitlog.path_key`; a commit is the same difference followed by
+one new log file, after the sink write succeeds — mirroring the
+reference's post-write ``job.commit()`` ordering so a failed run
+reprocesses rather than drops files.
+
+A ledger that cannot be read raises; it is never read as empty, which would
+reprocess and double-append every file. Concurrent commits to one dataset
+are refused rather than lost: the second writer of a log number raises.
 """
 
 from __future__ import annotations
@@ -23,20 +31,22 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from bridgedownstream_spark.pipeline.commitlog import (
+    append_log,
+    path_key,
+    path_keys,
+    read_log,
+)
 from bridgedownstream_spark.pipeline.fsutil import delete_path, path_exists
 
 __all__ = ["FileLedger"]
 
-#: the ledger table's declared schema
-LEDGER_SCHEMA = "file_path string"
-
 
 class FileLedger:
-    """Per-dataset processed-file bookkeeping in a parquet table
-    ``(dataset, file_path)`` under ``ledger_root``."""
+    """Per-dataset processed-file bookkeeping: one commit log per dataset
+    under ``ledger_root``."""
 
     def __init__(self, spark: SparkSession, ledger_root: str):
         self.spark = spark
@@ -45,40 +55,31 @@ class FileLedger:
     def _path(self, dataset: str) -> str:
         return os.path.join(self.root, f"dataset={dataset}")
 
-    def processed_files(self, dataset: str) -> DataFrame:
-        """The ledger as a DataFrame (empty if never committed). Existence
-        is checked explicitly — a transient read failure must propagate,
-        not masquerade as an empty ledger (which would reprocess and
-        double-append every file)."""
-        path = self._path(dataset)
-        if not path_exists(self.spark, path):
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
-        return self.spark.read.schema(LEDGER_SCHEMA).parquet(path)
-
-    def processed_paths(self, dataset: str) -> set[str]:
-        """The ledger's file paths on the driver: one scan job, none for a
-        dataset never committed."""
-        if not path_exists(self.spark, self._path(dataset)):
-            return set()
-        return {r.file_path for r in self.processed_files(dataset).collect()}
+    def processed_files(self, dataset: str) -> set[tuple[str, str, str]]:
+        """The :func:`~.commitlog.path_key` of every committed file, read
+        on the driver: empty for a dataset never committed, and an error,
+        never an empty set, for a log that is there but unreadable."""
+        return path_keys(self._log(dataset)[1])
 
     def commit(self, paths: Iterable[str], dataset: str) -> int:
         """Record files as processed; returns how many were new. Idempotent:
         paths already in the ledger, or repeated in the input, are recorded
         once. Call AFTER the sink write succeeds — the reference's
         ``job.commit()`` ordering."""
-        paths = set(paths)
-        if not paths:
+        fresh = {path_key(p): p for p in paths}
+        if not fresh:
             return 0
-        new = list(paths - self.processed_paths(dataset))
+        log = self._log(dataset)
+        done = path_keys(log[1])
+        new = sorted(p for k, p in fresh.items() if k not in done)
         if new:
-            # an Arrow table becomes a JVM-local relation: the append is
-            # one job with no Python worker behind it
-            rows = pa.table({"file_path": pa.array(new, pa.string())})
-            self.spark.createDataFrame(rows).coalesce(1).write.mode(
-                "append"
-            ).parquet(self._path(dataset))
+            append_log(
+                self.spark, self._path(dataset), [{"path": p} for p in new], log
+            )
         return len(new)
+
+    def _log(self, dataset: str) -> tuple[int, list]:
+        return read_log(self.spark, self._path(dataset)) or (-1, [])
 
     def reset(self, dataset: str) -> None:
         """Bookmark reset (schema-change protocol §3e): forget the dataset's

@@ -7,7 +7,8 @@ one json_s3_to_parquet job per dataset discovered by a crawler
 workflow wiring). Here the same lifecycle is one function: stage 1, dataset
 discovery from the lake layout (no crawler — the ``dataset=`` dirs ARE the
 catalog of what arrived), then an incremental stage 2 per discovered
-dataset sharing one processed-files ledger.
+dataset sharing one processed-files ledger (one commit log per dataset,
+so the concurrent stage-2 jobs never write the same log).
 
 Scale: stage 2 of each dataset is an independent job over a disjoint
 ``dataset=`` prefix; on a cluster they can run as concurrent job groups,
@@ -71,9 +72,9 @@ def run_study_workflow(
     When the stream's checkpoint has no pending batch and has logged every
     archive in that listing, stage 1 starts no stream (see
     :mod:`~bridgedownstream_spark.streaming.ingest_stream`). Stage 2
-    compares each dataset's file listing with the ledger on the driver, so
-    a re-run with nothing new reads no lake data and launches only the
-    ledger reads.
+    compares each dataset's file listing with the ledger, a commit log read
+    on the driver (:mod:`~bridgedownstream_spark.pipeline.commitlog`), so a
+    re-run with nothing new reads no lake data and launches no Spark job.
     Datasets present in the lake but absent from the registry are left
     for a later run (exactly the reference's behavior when the catalog
     lags the data — the crawler sees them, the job has no table yet).
@@ -83,7 +84,7 @@ def run_study_workflow(
     — the reference launches one Glue job per dataset in parallel
     (study-pipeline-infra.j2:112-139), and a small dataset's job would
     otherwise idle the cluster while a large one's scan runs. Safe
-    because every per-dataset write (parquet tables, ledger partition)
+    because every per-dataset write (parquet tables, ledger log)
     lands under dataset-scoped paths; on a shared cluster set
     ``spark.scheduler.mode=FAIR`` so the pools actually share executors.
 

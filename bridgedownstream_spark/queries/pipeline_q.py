@@ -32,8 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bridgedownstream_spark.pipeline import DatasetRegistry, run_json_to_parquet
+from bridgedownstream_spark.pipeline.partitions import read_partitioned
 from bridgedownstream_spark.queries.util import tbl
 from bridgedownstream_spark.sources import write_ndjson_dataset
+from bridgedownstream_spark.sources.ndjson import PARTITION_COLS
 from bridgedownstream_spark.streaming.drain import drain
 
 QUERIES: dict = {}
@@ -104,12 +106,13 @@ _ORACLE_SOURCE = f"""
 """
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a lake table with catalog partition semantics: partition values
-    stay strings (pinned in get_spark(); re-pinned here because the grading
-    driver hands us its own session — always "false", never toggled)."""
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    return spark.read.parquet(path)
+def _read_table(
+    spark: SparkSession, path: str, cols: tuple[str, ...] = PARTITION_COLS
+) -> DataFrame:
+    """Read a lake table with catalog partition semantics: its partition
+    columns ``cols`` stay strings, through an explicit schema, whatever the
+    session it is handed infers (it sets no session conf)."""
+    return read_partitioned(spark, path, cols)
 
 
 @_fixture
@@ -1736,7 +1739,7 @@ def pipeline_compaction_equiv(spark, sf_dir):
         F.col("n_files").cast("bigint").alias("part_files"),
     )
     return (
-        _read_table(spark, base)
+        _read_table(spark, base, ("l_returnflag",))
         .join(F.broadcast(stats), "l_returnflag")
         .select(
             "l_orderkey",
@@ -1812,7 +1815,7 @@ def upsert_merge_equiv(spark, sf_dir):
     dynamic overwrite) — one day of re-exports into a years-deep lake
     reads and rewrites one day."""
     base = _build_upserted_lake(spark, sf_dir)
-    return _read_table(spark, base).select(
+    return _read_table(spark, base, ("o_orderstatus",)).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "version"
     )
 

@@ -38,8 +38,7 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # wall clocks the UTC-based DuckDB oracle cannot reproduce (DST-gap
     # times even shift under the NTZ→TIMESTAMP cast). Idempotent — always
     # "UTC", never toggled back — so no concurrently-built plan can
-    # observe a flip. Same hardening as nanosAsLong below and
-    # partitionColumnTypeInference in pipeline_q._read_table.
+    # observe a flip. Same hardening as nanosAsLong below.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         # nanosAsLong is pinned in get_spark(); re-pin here because the

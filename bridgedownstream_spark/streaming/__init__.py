@@ -13,8 +13,10 @@
 
 The append-only stage 2 is bookmarked by the processed-files ledger
 (:mod:`bridgedownstream_spark.pipeline.ledger`), not by a streaming
-checkpoint: the ledger is a plain table, so it stays introspectable (the
-reference needed a script just to *read* its bookmarks,
+checkpoint. It is written in the checkpoint logs' own format
+(:mod:`bridgedownstream_spark.pipeline.commitlog`): numbered ``v1`` files
+of one JSON entry per line, readable with any text tool (the reference
+needed a script just to *read* its bookmarks,
 src/scripts/bookmarks/get-bookmarks.py).
 """
 

@@ -14,28 +14,29 @@ free even then: Spark re-opens the last committed batch, and that lists
 the batch's archives as root paths, which above
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) is a Spark
 job of one task per archive. So before starting, :func:`stream_ingest`
-reads the checkpoint's own logs on the driver, through the Hadoop FS
-helpers in :mod:`pipeline.fsutil`, and returns without a query only when
-all of these hold:
+reads the checkpoint's own logs on the driver with the commit-log reader
+both stages share (:mod:`~bridgedownstream_spark.pipeline.commitlog`),
+and returns without a query only when all of these hold:
 
 - nothing is pending: the highest batch id under ``offsets/`` equals the
   highest under ``commits/``, and that batch's offset for the one file
-  source is the highest entry of the source's log, so a batch that was
-  planned but not committed (or files logged but not yet planned) still
-  replays;
-- every archive in the inbox is in the file-source log
-  (``sources/0/``: its numbered files after the latest ``N.compact``,
-  ``v1`` header, one JSON ``path`` per line), compared as URIs;
+  source (its ``logOffset``) is the last id of the source's log, so a
+  batch that was planned but not committed (or files logged but not yet
+  planned) still replays;
+- every archive in the inbox is in the file-source log (``sources/0/``,
+  one JSON ``path`` per entry), compared as URI values
+  (:func:`~bridgedownstream_spark.pipeline.commitlog.path_key`);
 - the inbox listing is the stream's: one ``listStatus`` of the directory
   :func:`~bridgedownstream_spark.sources.archive.load_archive_files`
   loads, filtered by Hadoop's ``GlobFilter`` with the same pattern, minus
   the names Spark's listing hides.
 
 Anything in doubt starts the stream exactly as before: no checkpoint, an
-empty inbox, an unknown log version or a line that does not parse, more
-than one source, a gap in the log, a glob outside the last path component,
-a ``_spark_metadata`` directory in the inbox, or a ``k=v`` directory under
-it (Spark's partition discovery would then read nested files). The check
+empty inbox, a log the reader rejects (another version, a line that does
+not parse, a gap), more than one source, a glob outside the last path
+component, a ``_spark_metadata`` directory in the inbox, or a ``k=v``
+directory under it (Spark's partition discovery would then read nested
+files). The check
 adds no bookmark of its own: the stream's checkpoint is the only one.
 
 Delivery is at-least-once: ``foreachBatch`` appends to the lake and the
@@ -50,14 +51,20 @@ the partitioned NDJSON append), so batch and streaming cannot drift.
 
 from __future__ import annotations
 
-import json
-from urllib.parse import unquote, urlsplit
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bridgedownstream_spark.pipeline.fsutil import list_dirs, list_files, read_text
+from bridgedownstream_spark.pipeline.commitlog import (
+    entry_field,
+    log_ids,
+    path_key,
+    path_keys,
+    read_entries,
+    read_log,
+    uri_name,
+)
+from bridgedownstream_spark.pipeline.fsutil import list_dirs, list_files
 from bridgedownstream_spark.pipeline.ingest import ingest_archives
 from bridgedownstream_spark.sources.archive import archive_listing, load_archive_files
 from bridgedownstream_spark.streaming.drain import drain
@@ -145,44 +152,21 @@ def _nothing_new(spark: SparkSession, archive_path: str, checkpoint_root: str) -
 def _committed_archives(spark: SparkSession, ckpt: str) -> set[tuple] | None:
     """Keys of every archive path the checkpoint's file-source log holds,
     or None unless its last planned batch is committed and planned up to
-    the log's last entry, with one source and a log this can read."""
-    offsets = _batch_ids(spark, f"{ckpt}/offsets")
-    if not offsets or _batch_ids(spark, f"{ckpt}/commits")[-1:] != offsets[-1:]:
+    the log's last entry, with one source and logs this can read."""
+    offsets = log_ids(spark, f"{ckpt}/offsets")
+    if not offsets or log_ids(spark, f"{ckpt}/commits")[-1:] != offsets[-1:]:
         return None
     if list_dirs(spark, f"{ckpt}/sources") != ["0"]:
         return None
-    src = f"{ckpt}/sources/0"
-    names = [_name(u) for u in list_files(spark, src)]
-    numbered = {int(n) for n in names if n.isdecimal()}
-    compacted = {
-        int(n[: -len(".compact")])
-        for n in names
-        if n.endswith(".compact") and n[: -len(".compact")].isdecimal()
-    }
     try:
-        offset_lines = _log_lines(spark, f"{ckpt}/offsets/{offsets[-1]}")
         # [batch metadata, the one source's offset]
-        if offset_lines is None or len(offset_lines) != 2:
+        offset = read_entries(spark, f"{ckpt}/offsets/{offsets[-1]}")
+        log = read_log(spark, f"{ckpt}/sources/0")
+        if len(offset) != 2 or log is None:
             return None
-        last = _json_field(offset_lines[1], "logOffset", int)
-        if max(numbered | compacted, default=None) != last:
+        if log[0] != entry_field(offset[1], "logOffset", int):
             return None
-        # the latest compaction holds every earlier entry; the batches
-        # after it must all be there
-        base = max(compacted, default=-1)
-        after = range(base + 1, last + 1)
-        if not set(after) <= numbered:
-            return None
-        files = [str(i) for i in after]
-        if base >= 0:
-            files.append(f"{base}.compact")
-        keys = set()
-        for name in files:
-            lines = _log_lines(spark, f"{src}/{name}")
-            if lines is None:
-                return None
-            keys.update(_path_key(_json_field(ln, "path", str)) for ln in lines)
-        return keys
+        return path_keys(log[1])
     except ValueError:
         return None
 
@@ -206,40 +190,10 @@ def _listed_archives(spark: SparkSession, archive_path: str) -> set[tuple] | Non
                 return None  # partition discovery reads nested files
             stack.append(f"{d}/{name}")
     return {
-        _path_key(u)
+        path_key(u)
         for u in list_files(spark, root, pattern)
-        if not _hidden(_name(u))
+        if not _hidden(uri_name(u))
     }
-
-
-def _batch_ids(spark: SparkSession, log_dir: str) -> list[int]:
-    names = map(_name, list_files(spark, log_dir))
-    return sorted(int(n) for n in names if n.isdecimal())
-
-
-def _log_lines(spark: SparkSession, path: str) -> list[str] | None:
-    """The entries of a ``v1`` metadata-log file, or None for any other
-    version."""
-    lines = read_text(spark, path).splitlines()
-    return lines[1:] if lines[:1] == ["v1"] else None
-
-
-def _json_field(line: str, key: str, kind: type):
-    value = json.loads(line)
-    if not isinstance(value, dict) or not isinstance(value.get(key), kind):
-        raise ValueError(f"no {kind.__name__} {key!r} in {line!r}")
-    return value[key]
-
-
-def _name(uri: str) -> str:
-    return unquote(urlsplit(uri).path.rsplit("/", 1)[-1])
-
-
-def _path_key(uri: str) -> tuple[str, str, str]:
-    """A path URI as a value: ``file:///a`` (the source log's form) and
-    ``file:/a`` (a Hadoop listing's) are the same path."""
-    u = urlsplit(uri)
-    return u.scheme.lower(), u.netloc, unquote(u.path)
 
 
 def _hidden(name: str) -> bool:

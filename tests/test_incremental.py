@@ -10,6 +10,7 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from bridgedownstream_spark.pipeline import DatasetRegistry, run_json_to_parquet
+from bridgedownstream_spark.pipeline.commitlog import append_log, path_key, read_log
 from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.sources import write_ndjson_dataset
 
@@ -96,11 +97,9 @@ def test_ledger_commit_dataframe_and_introspection(spark, tmp_path):
     ledger = FileLedger(spark, str(tmp_path / "l"))
     assert ledger.commit(["f1", "f2"], "ds") == 2
     assert ledger.commit(["f2", "f3"], "ds") == 1  # dup filtered
-    # the bookmark is introspectable as a plain table (unlike Glue's,
-    # which needed its own script to read)
-    assert {r["file_path"] for r in ledger.processed_files("ds").collect()} == {
-        "f1", "f2", "f3",
-    }
+    # the bookmark is introspectable on the driver (unlike Glue's, which
+    # needed its own script to read)
+    assert ledger.processed_files("ds") == {path_key(p) for p in ("f1", "f2", "f3")}
 
 
 def test_ledger_file_level_pruning_with_empty_file(spark, tmp_path):
@@ -152,52 +151,154 @@ def test_ledger_commit_empty_list_writes_nothing(spark, tmp_path):
 def test_ledger_commit_counts_repeated_path_once(spark, tmp_path):
     ledger = FileLedger(spark, str(tmp_path / "l"))
     assert ledger.commit(["f1", "f2", "f1", "f1"], "ds") == 2
-    assert sorted(r["file_path"] for r in ledger.processed_files("ds").collect()) == [
-        "f1", "f2",
-    ]
-    assert ledger.processed_paths("ds") == {"f1", "f2"}
-    assert ledger.processed_paths("never_committed") == set()
+    assert ledger.processed_files("ds") == {path_key("f1"), path_key("f2")}
+    assert ledger.processed_files("never_committed") == set()
 
 
-def test_ledger_format_matches_dataframe_append(spark, tmp_path):
-    # reference writer: the DataFrame append that defines the ledger
-    # format (a distinct createDataFrame(list) through coalesce(1)).
-    # FileLedger.commit must write the same parquet schema and rows, and
-    # keep deduplicating against a ledger written that way.
-    paths = ["s3://b/x/part-0.json", "s3://b/x/part-1.json", "s3://b/y/part-0.json"]
-    old, new = tmp_path / "old" / "dataset=ds", tmp_path / "new" / "dataset=ds"
-    spark.createDataFrame([(p,) for p in paths], "file_path string").distinct().coalesce(
-        1
-    ).write.mode("append").parquet(str(old))
-    assert FileLedger(spark, str(tmp_path / "new")).commit(paths, "ds") == len(paths)
-
-    new_df, old_df = spark.read.parquet(str(new)), spark.read.parquet(str(old))
-    assert new_df.schema == old_df.schema
-    assert sorted(new_df.collect()) == sorted(old_df.collect())
-    assert len(list(old.glob("*.parquet"))) == len(list(new.glob("*.parquet"))) == 1
-
-    # a ledger in the old layout keeps deduplicating new commits
-    legacy = FileLedger(spark, str(tmp_path / "old"))
-    assert legacy.processed_paths("ds") == set(paths)
-    assert legacy.commit(paths + ["s3://b/z/part-0.json"], "ds") == 1
-
-
-def _commit_jobs(spark, ledger, paths, group):
-    """(paths committed, Spark jobs launched) of one commit run under the
-    job group ``group``."""
+def _jobs(spark, group, fn):
+    """(``fn()``, Spark jobs launched while it ran under the job group
+    ``group``)."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, "FileLedger.commit job census")
+    sc.setJobGroup(group, "FileLedger job census")
     try:
-        committed = ledger.commit(paths, "ds")
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return committed, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_ledger_commit_is_one_job(spark, tmp_path):
+def test_ledger_commit_and_read_launch_no_job(spark, tmp_path):
+    # the ledger is a log read and written on the driver: neither a first
+    # commit, a commit over an existing log nor a read is a Spark job
     ledger = FileLedger(spark, str(tmp_path / "l"))
-    # the append is the only job: no parallelize, count or shuffle
-    assert _commit_jobs(spark, ledger, ["f1", "f2", "f3"], "ledger-commit-new") == (3, 1)
-    # over an existing ledger, one scan reads the committed paths first
-    assert _commit_jobs(spark, ledger, ["f3", "f4"], "ledger-commit-more") == (1, 2)
+    first = _jobs(spark, "ledger-commit-new", lambda: ledger.commit(["f1", "f2"], "ds"))
+    assert first == (2, 0)
+    more = _jobs(spark, "ledger-commit-more", lambda: ledger.commit(["f2", "f3"], "ds"))
+    assert more == (1, 0)
+    read, jobs = _jobs(spark, "ledger-read", lambda: ledger.processed_files("ds"))
+    assert (len(read), jobs) == (3, 0)
+
+
+def test_ledger_compares_paths_as_uri_values(spark, tmp_path):
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    assert ledger.commit(["file:/a/x%20y.json"], "ds") == 1
+    assert path_key("file:///a/x y.json") in ledger.processed_files("ds")
+    assert ledger.commit(["file:///a/x%20y.json", "file:/a/x y.json"], "ds") == 0
+
+    # a ledger written with the other spelling of the lake's files still
+    # makes the re-run a no-op: nothing is read or appended twice
+    json_root, pq = str(tmp_path / "j"), str(tmp_path / "p")
+    _write_batch(spark, json_root, [("r1", [1])])
+    files = [
+        "file://" + str(f)
+        for f in (tmp_path / "j").rglob("*")
+        if f.is_file() and not f.name.startswith((".", "_"))
+    ]
+    assert files and all(f.startswith("file:///") for f in files)
+    assert ledger.commit(files, "inc_v1") == len(files)
+    assert (
+        run_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, ledger=ledger)
+        == {}
+    )
+
+
+def test_ledger_second_writer_of_a_log_number_raises(spark, tmp_path):
+    log_dir = tmp_path / "l" / "dataset=ds"
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    ledger.commit(["f1"], "ds")
+    stale = read_log(spark, str(log_dir))
+    ledger.commit(["f2"], "ds")  # another writer takes log number 1
+    before = (log_dir / "1").read_text()
+    with pytest.raises(Exception, match="FileAlreadyExists"):
+        append_log(spark, str(log_dir), [{"path": "f3"}], stale)
+    assert (log_dir / "1").read_text() == before
+    assert sorted(p.name for p in log_dir.iterdir()) == [".0.crc", ".1.crc", "0", "1"]
+    assert ledger.processed_files("ds") == {path_key("f1"), path_key("f2")}
+
+
+@pytest.mark.parametrize(
+    "damage",
+    [
+        lambda text: text[:-3],  # a truncated last line
+        lambda text: "v2" + text[2:],  # another log version
+        lambda text: "",  # an empty file
+    ],
+    ids=["truncated", "version", "empty"],
+)
+def test_unreadable_ledger_raises(spark, tmp_path, damage):
+    # a ledger that cannot be read must never read as empty: that would
+    # reprocess and double-append every file
+    json_root, pq, led = str(tmp_path / "j"), str(tmp_path / "p"), tmp_path / "l"
+    ledger = FileLedger(spark, str(led))
+    _write_batch(spark, json_root, [("r1", [1])])
+    run_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, ledger=ledger)
+    log = led / "dataset=inc_v1" / "0"
+    log.write_text(damage(log.read_text()))
+    (log.parent / ".0.crc").unlink()
+    with pytest.raises(ValueError):
+        ledger.processed_files("inc_v1")
+    with pytest.raises(ValueError):
+        ledger.commit(["f9"], "inc_v1")
+    with pytest.raises(ValueError):
+        run_json_to_parquet(spark, json_root, pq, "inc_v1", REGISTRY, ledger=ledger)
+    assert spark.read.parquet(f"{pq}/inc_v1").count() == 1
+
+
+def test_ledger_with_a_missing_log_file_raises(spark, tmp_path):
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    ledger.commit(["f1"], "ds")
+    ledger.commit(["f2"], "ds")
+    (tmp_path / "l" / "dataset=ds" / "0").unlink()
+    with pytest.raises(ValueError, match="missing"):
+        ledger.processed_files("ds")
+
+
+def test_ledger_compacts_every_tenth_file(spark, tmp_path):
+    log_dir = tmp_path / "l" / "dataset=ds"
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    batches = [[f"s3a://b/ds/{i}-{j}.json" for j in range(i % 3 + 1)] for i in range(25)]
+    for batch in batches:
+        assert ledger.commit(batch, "ds") == len(batch)
+    names = {p.name for p in log_dir.iterdir() if not p.name.startswith(".")}
+    assert names == {str(i) for i in range(25) if i not in (9, 19)} | {
+        "9.compact",
+        "19.compact",
+    }
+    union = {path_key(p) for batch in batches for p in batch}
+    assert ledger.processed_files("ds") == union
+    # the latest compaction holds every entry before it: the files it
+    # replaces are not read
+    for i in range(19):
+        (log_dir / str(i)).unlink(missing_ok=True)
+    assert ledger.processed_files("ds") == union
+
+
+def test_ledger_concurrent_datasets_lose_no_entry(spark, tmp_path):
+    # stage 2 commits each dataset from its own thread of a pool, as
+    # run_study_workflow does; with more threads than cores and a short
+    # switch interval, no commit may lose another's entries
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    ledger = FileLedger(spark, str(tmp_path / "l"))
+    datasets = [f"ds{d}" for d in range(8)]
+
+    def commit_all(ds):
+        return sum(
+            ledger.commit([f"{ds}/{i}-{j}" for j in range(2)], ds) for i in range(12)
+        )
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(datasets)) as pool:
+            futures = [pool.submit(commit_all, ds) for ds in datasets]
+            committed = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert committed == [24] * len(datasets)
+    for ds in datasets:
+        assert ledger.processed_files(ds) == {
+            path_key(f"{ds}/{i}-{j}") for i in range(12) for j in range(2)
+        }

@@ -1,10 +1,9 @@
-"""Listing/manifest source tests (S9/S10) + representative sampling."""
+"""Listing/manifest source tests (S9/S10)."""
 
 from __future__ import annotations
 
 import json
 
-from bridgedownstream_spark.operators.reconcile import representative_sample
 from bridgedownstream_spark.sources.listing import (
     list_lake_files,
     manifest_from_messages,
@@ -44,14 +43,3 @@ def test_manifest_from_messages(spark):
         "uploadedon", "clientinfo",
     ]
 
-
-def test_representative_sample_deterministic(spark):
-    df = spark.createDataFrame(
-        [(t, i) for t in ("a", "b") for i in range(20)], "grp string, id bigint"
-    )
-    s1 = {(r["grp"], r["id"]) for r in representative_sample(df, "grp", seed=7, order_key="id").collect()}
-    s2 = {(r["grp"], r["id"]) for r in representative_sample(df, "grp", seed=7, order_key="id").collect()}
-    s3 = {(r["grp"], r["id"]) for r in representative_sample(df, "grp", seed=8, order_key="id").collect()}
-    assert s1 == s2  # same seed → same sample
-    assert len(s1) == 2 and {g for g, _ in s1} == {"a", "b"}
-    assert s3 != s1 or True  # different seed may differ; only determinism is contractual

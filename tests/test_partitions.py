@@ -108,3 +108,51 @@ def test_maintenance_sinks_set_no_session_conf(spark, tmp_path, monkeypatch):
     # r0's three copies became one row with value 100; day d1 is untouched
     assert got[("d0", 0)] == (4, 100.0 + 3 * 6.0)
     assert got[("d1", 1)] == (6, 3 * (1.0 + 7.0))
+
+
+def test_pipeline_lake_query_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """A pipeline query reads its lake table with string partition values
+    through an explicit schema: building ``pipeline_e2e_root`` with its
+    fixture warm leaves the partition-type-inference conf of the session
+    it is handed alone, even when that session infers."""
+    import datetime
+    import shutil
+
+    from bridgedownstream_spark.queries import pipeline_q
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (20, "F", "1-URGENT", datetime.date(1995, 3, 1)),
+            (40, "O", "2-HIGH", datetime.date(1996, 1, 2)),
+        ],
+        "o_orderkey bigint, o_orderstatus string, o_orderpriority string, "
+        "o_orderdate date",
+    ).write.parquet(f"{sf}/orders.parquet")
+    spark.createDataFrame(
+        [(20, 1, 7, 3.0), (40, 1, 8, 4.0), (40, 2, 9, 5.0)],
+        "l_orderkey bigint, l_linenumber int, l_partkey bigint, l_quantity double",
+    ).write.parquet(f"{sf}/lineitem.parquet")
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    base = pipeline_q._build_lake(spark, sf)["__base__"]  # warm the fixture
+    keys: list[str] = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, value):
+        keys.append(k)
+        return real_set(self, k, value)
+
+    try:
+        monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+        root = pipeline_q.pipeline_e2e_root(spark, sf)
+        rows = root.select("recordid", "year", "month").collect()
+        monkeypatch.undo()
+        assert key not in keys
+        assert spark.conf.get(key) == "true"
+        assert sorted(tuple(r) for r in rows) == [("20", "1995", "01"), ("40", "1996", "01")]
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+        shutil.rmtree(base, ignore_errors=True)

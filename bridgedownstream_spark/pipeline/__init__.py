@@ -5,10 +5,10 @@
 - :mod:`.json_to_parquet` — stage 2: JSON dataset → relationalized,
   partitioned parquet tables (reference src/glue/jobs/json_s3_to_parquet.py).
 - :mod:`.ledger` — processed-files ledger giving job-bookmark-style
-  incremental semantics (reference transformation_ctx/job.commit()).
-- :mod:`.commitlog` — the one bookmark format of both stages: Spark's
-  numbered ``v1`` checkpoint-log files, read and appended on the driver
-  (stage 1 reads its stream checkpoint with it; the ledger is one log per
+  incremental semantics (reference transformation_ctx/job.commit()); the
+  one bookmark of both stages.
+- :mod:`.commitlog` — the ledger's log format: Spark's numbered ``v1``
+  checkpoint-log files, read and appended on the driver (one log per
   dataset).
 - :mod:`.compact` — small-file compaction: distributed listing, fragmented
   partitions rewritten at target file size via dynamic partition overwrite.
@@ -16,8 +16,8 @@
   overwrite-by-recordid contract, at lake scale).
 - :mod:`.partitions` — the Hive partition-path format (``c=v/c=v``, the
   NULL directory, the path-safe charset) shared by the maintenance sinks.
-- :mod:`.workflow` — the one-call study workflow: checkpointed archive
-  ingest → dataset discovery from the lake layout → incremental stage 2
+- :mod:`.workflow` — the one-call study workflow: ledger-bookmarked
+  archive ingest → dataset discovery from the lake layout → incremental stage 2
   per dataset (the SNS→Lambda→Glue-workflow lifecycle, minus the cloud).
 - :mod:`.rollup` — incrementally-refreshed rollups (continuous
   aggregates): only new partitions aggregate; late data re-refreshes its

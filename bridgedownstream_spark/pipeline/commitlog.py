@@ -2,25 +2,21 @@
 
 The reference's bookmark is Glue metadata (``transformation_ctx`` plus
 ``job.commit()``, json_s3_to_parquet.py:74,103,233), never a data scan.
-Here both bookmarks are logs in the format Spark keeps a streaming
-checkpoint in (``HDFSMetadataLog``): a directory of numbered files, each a
-``v1`` header line and then one JSON object per line. A compactible log
-(the file source's ``sources/0/``) writes every :data:`COMPACT_INTERVAL`-th
-file as ``N.compact`` holding every entry so far, so a reader needs only
-the latest compaction and the numbered files after it — the design of
-Delta Lake's transaction log.
-
-- Stage 1 reads its archive stream's checkpoint through this module
-  (:mod:`~bridgedownstream_spark.streaming.ingest_stream`); Spark writes it.
-- Stage 2's processed-files ledger
-  (:class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`) is one
-  such log per dataset, written by :func:`append_log`.
+Here both stages' bookmarks are processed-files ledgers
+(:class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`: stage 1's
+under ``ingest_ledger/``, stage 2's under ``ledger/``), and each ledger is
+one log per dataset in the format Spark keeps a streaming checkpoint in
+(``HDFSMetadataLog``): a directory of numbered files, each a ``v1`` header
+line and then one JSON object per line. Every :data:`COMPACT_INTERVAL`-th
+file is written as ``N.compact`` holding every entry so far, so a reader
+needs only the latest compaction and the numbered files after it — the
+design of Delta Lake's transaction log.
 
 Every read and write is a Hadoop FS call on the driver
-(:mod:`.fsutil`), never a Spark job. :func:`read_entries` and
-:func:`read_log` raise ``ValueError`` on anything they cannot read — a gap
-in the numbering, another version, a line that is not JSON — so a bookmark
-that cannot be read is never taken for an empty one.
+(:mod:`.fsutil`), never a Spark job. :func:`read_log` raises
+``ValueError`` on anything it cannot read — a gap in the numbering,
+another version, a line that is not JSON — so a bookmark that cannot be
+read is never taken for an empty one.
 """
 
 from __future__ import annotations
@@ -32,16 +28,7 @@ from pyspark.sql import SparkSession
 
 from bridgedownstream_spark.pipeline.fsutil import create_text, list_files, read_text
 
-__all__ = [
-    "read_log",
-    "append_log",
-    "log_ids",
-    "read_entries",
-    "entry_field",
-    "path_key",
-    "path_keys",
-    "uri_name",
-]
+__all__ = ["read_log", "append_log", "path_key", "path_keys"]
 
 #: every this-many-th file of a compactible log is ``N.compact``; Spark's
 #: interval for its file-source and file-sink logs
@@ -50,13 +37,7 @@ _VERSION = "v1"
 _COMPACT = ".compact"
 
 
-def log_ids(spark: SparkSession, log_dir: str) -> list[int]:
-    """Sorted ids of the numbered files in ``log_dir`` ([] if absent)."""
-    names = map(uri_name, list_files(spark, log_dir))
-    return sorted(int(n) for n in names if n.isdecimal())
-
-
-def read_entries(spark: SparkSession, path: str) -> list:
+def _read_entries(spark: SparkSession, path: str) -> list:
     """The entries of one log file: its lines after the ``v1`` header,
     each parsed as JSON."""
     header, *lines = read_text(spark, path).split("\n")
@@ -69,7 +50,7 @@ def read_log(spark: SparkSession, log_dir: str) -> tuple[int, list] | None:
     """``(last id, every entry)`` of the compactible log in ``log_dir``,
     read from its latest ``N.compact`` and every numbered file after it;
     None when the directory is absent or holds no log file."""
-    names = {uri_name(u) for u in list_files(spark, log_dir)}
+    names = {u.rsplit("/", 1)[-1] for u in list_files(spark, log_dir)}
     numbered = {int(n) for n in names if n.isdecimal()}
     compacted = {
         int(n[: -len(_COMPACT)])
@@ -84,7 +65,7 @@ def read_log(spark: SparkSession, log_dir: str) -> tuple[int, list] | None:
     if not set(after) <= numbered:
         raise ValueError(f"{log_dir}: a file before {last} is missing")
     files = ([f"{base}{_COMPACT}"] if base >= 0 else []) + [str(i) for i in after]
-    return last, [e for f in files for e in read_entries(spark, f"{log_dir}/{f}")]
+    return last, [e for f in files for e in _read_entries(spark, f"{log_dir}/{f}")]
 
 
 def append_log(
@@ -106,7 +87,7 @@ def append_log(
     return n
 
 
-def entry_field(entry, key: str, kind: type):
+def _entry_field(entry, key: str, kind: type):
     """``entry[key]``, which must be a ``kind``."""
     if not isinstance(entry, dict) or not isinstance(entry.get(key), kind):
         raise ValueError(f"no {kind.__name__} {key!r} in {entry!r}")
@@ -114,19 +95,15 @@ def entry_field(entry, key: str, kind: type):
 
 
 def path_keys(entries: list) -> set[tuple[str, str, str]]:
-    """The :func:`path_key` of every entry's ``path``: the file-source
-    log's entries and the ledger's both name their file there."""
-    return {path_key(entry_field(e, "path", str)) for e in entries}
-
-
-def uri_name(uri: str) -> str:
-    """The last path component of ``uri``, %-decoded."""
-    return unquote(urlsplit(uri).path.rsplit("/", 1)[-1])
+    """The :func:`path_key` of every entry's ``path``, the one field of a
+    ledger entry."""
+    return {path_key(_entry_field(e, "path", str)) for e in entries}
 
 
 def path_key(uri: str) -> tuple[str, str, str]:
-    """A path URI as a value: ``file:///a`` (a Spark log's form) and
-    ``file:/a`` (a Hadoop listing's) are the same path, and so are a
+    """A path URI as a value: ``file:///a`` (the form of
+    ``DataFrame.inputFiles()``) and ``file:/a`` (a Hadoop listing's) are
+    the same path, and so are a
     %-escaped path and its decoded form."""
     u = urlsplit(uri)
     return u.scheme.lower(), u.netloc, unquote(u.path)

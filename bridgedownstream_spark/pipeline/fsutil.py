@@ -3,12 +3,12 @@
 Path existence / listing / reading / deletion must go through Hadoop's FS
 layer (not ``os``) so the same code works on file://, s3a://, and hdfs://
 — one RPC per call, never a recursive local walk. The workflow's dataset
-discovery, both stages' bookmark logs (:mod:`.commitlog`: stage 1's
-stream checkpoint and stage 2's processed-files ledger, read and written
-on the driver), the upsert sink's empty-partition cleanup and the rollup's
-existence check all use these helpers (a blanket ``except`` around
-``spark.read`` treats transient failures as "table absent", which is how
-aggregates get silently doubled — check existence explicitly instead).
+discovery, both stages' bookmark logs (:mod:`.commitlog`: the
+processed-files ledgers, read and written on the driver), the upsert
+sink's empty-partition cleanup and the rollup's existence check all use
+these helpers (a blanket ``except`` around ``spark.read`` treats
+transient failures as "table absent", which is how aggregates get
+silently doubled — check existence explicitly instead).
 """
 
 from __future__ import annotations
@@ -52,20 +52,13 @@ def list_dirs(spark: SparkSession, path: str) -> list[str]:
     )
 
 
-def list_files(spark: SparkSession, path: str, glob: str | None = None) -> list[str]:
+def list_files(spark: SparkSession, path: str) -> list[str]:
     """URIs of the files directly under ``path`` ([] if absent; ``path``
-    itself if it is a file), from one ``listStatus``. With ``glob``, only
-    the names Hadoop's ``GlobFilter`` accepts: the filter Spark's
-    ``pathGlobFilter`` reader option applies."""
+    itself if it is a file), from one ``listStatus``."""
     fs, p = _fs_and_path(spark, path)
     if not fs.exists(p):
         return []
-    if glob is None:
-        statuses = fs.listStatus(p)
-    else:
-        jvm = spark.sparkContext._jvm
-        statuses = fs.listStatus(p, jvm.org.apache.hadoop.fs.GlobFilter(glob))
-    return [st.getPath().toUri().toString() for st in statuses if not st.isDirectory()]
+    return [st.getPath().toUri().toString() for st in fs.listStatus(p) if not st.isDirectory()]
 
 
 def read_text(spark: SparkSession, path: str) -> str:

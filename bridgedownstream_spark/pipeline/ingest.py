@@ -321,39 +321,3 @@ def _rows_written(df: DataFrame, write: Callable[[DataFrame], object]) -> int:
         # input turns out empty, which leaves the observation without a
         # row: nothing was written
         return 0
-
-
-def prune_quarantine(
-    spark: SparkSession, quarantine_root: str, keep_after: str
-) -> dict[str, int]:
-    """Retention for the quarantine table: drop rows whose ``uploadedon``
-    is strictly before ``keep_after`` (ISO timestamp string — the same
-    lexicographically-ordered format the manifest carries). Rows with a
-    NULL ``uploadedon`` are KEPT: an undatable quarantine row has no age
-    to expire on, and silently dropping it on the first retention pass
-    would lose the only copy of an unreplayed record (ADVICE r3). Returns
-    ``{"kept": n, "dropped": n}``.
-
-    The reference's dead-letter queue ages out by SQS retention
-    automatically; a parquet quarantine needs an explicit pass. The table
-    is unpartitioned (quarantines are small by contract — they hold
-    validation failures, not data), so retention is a filtered rewrite
-    with the same read-own-path lineage cut the compactor uses. A record
-    already replayed successfully still ages out here; replay is
-    idempotent against the lake (dedup-latest), so re-retention and
-    replay never conflict.
-    """
-    from bridgedownstream_spark.pipeline.fsutil import has_data_files
-
-    if not has_data_files(spark, quarantine_root):
-        return {"kept": 0, "dropped": 0}
-    q = spark.read.parquet(quarantine_root)
-    kept = q.where(
-        F.col("uploadedon").isNull()
-        | (F.col("uploadedon") >= F.lit(keep_after))
-    )
-    n_total = q.count()
-    kept = kept.localCheckpoint(eager=True)  # cut lineage before overwrite
-    n_kept = kept.count()
-    kept.write.mode("overwrite").parquet(quarantine_root)
-    return {"kept": n_kept, "dropped": n_total - n_kept}

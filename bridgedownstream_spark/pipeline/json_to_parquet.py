@@ -180,23 +180,20 @@ def write_parquet_dataset(
     table_name: str,
     partition_cols: list[str] | None = None,
     mode: str = "append",
-    cluster: bool = True,
 ) -> str:
     """Partitioned parquet sink (reference write_table_to_s3,
     json_s3_to_parquet.py:81-103). Returns the table path.
 
-    ``cluster=True`` repartitions by the partition columns so each output
-    directory gets few, well-sized files instead of one sliver per task —
-    the difference between P and P×N files at N-task scale."""
+    A partitioned write repartitions by the partition columns first, so
+    each output directory gets few, well-sized files instead of one sliver
+    per task — the difference between P and P×N files at N-task scale."""
     if partition_cols is None:
         partition_cols = [c for c in ("assessmentid", "year", "month", "day") if c in df.columns]
     path = os.path.join(parquet_root, table_name)
-    if cluster and partition_cols:
-        df = df.repartition(*partition_cols)
-    writer = df.write.mode(mode)
+    writer = df.write
     if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
+        writer = df.repartition(*partition_cols).write.partitionBy(*partition_cols)
+    writer.mode(mode).parquet(path)
     return path
 
 

@@ -21,6 +21,12 @@ one new log file, after the sink write succeeds — mirroring the
 reference's post-write ``job.commit()`` ordering so a failed run
 reprocesses rather than drops files.
 
+Both stages bookmark through this class: the study workflow's stage 1
+(:mod:`~bridgedownstream_spark.streaming.ingest_stream`) logs the
+archives it has ingested under ``ingest_ledger/dataset=archives/``, and
+stage 2 (:func:`~bridgedownstream_spark.pipeline.json_to_parquet.run_json_to_parquet`)
+the lake files of each dataset under ``ledger/``.
+
 A ledger that cannot be read raises; it is never read as empty, which would
 reprocess and double-append every file. Concurrent commits to one dataset
 are refused rather than lost: the second writer of a log number raises.

@@ -61,20 +61,20 @@ def run_study_workflow(
 
     Layout under ``work_root``: ``json/`` (stage-1 NDJSON lake),
     ``parquet/`` (stage-2 tables), ``quarantine/`` (invalid members),
-    ``ingest_ckpt/`` (stage-1 checkpoint), ``ledger/`` (stage-2 bookmark).
-    Both stages are incremental: stage 1 is the checkpointed archive
-    stream (the reference needed the SQS queue to deliver only-new
-    archives; the checkpoint subsumes it, so re-listing ALL archives is
-    safe), and stage 2's ledger skips already-processed lake files. Stage 1
-    lists the archive directory once on the driver per run: an
-    ``archive_path`` such as ``inbox/*.zip`` is loaded as ``inbox`` with a
-    file-name filter (:func:`~bridgedownstream_spark.sources.archive.load_archive_files`).
-    When the stream's checkpoint has no pending batch and has logged every
-    archive in that listing, stage 1 starts no stream (see
+    ``ingest_ledger/`` (stage-1 bookmark), ``ledger/`` (stage-2 bookmark).
+    Both stages are incremental through the same bookmark, a
+    :class:`~bridgedownstream_spark.pipeline.ledger.FileLedger` (commit
+    logs read and appended on the driver): each diffs a file listing
+    against its ledger on the driver, processes only what is new and
+    commits it after the sinks. Stage 1 lists the archive directory once on
+    the driver per run (the reference needed the SQS queue to deliver
+    only-new archives; the ledger subsumes it, so re-listing ALL archives
+    is safe): an ``archive_path`` such as ``inbox/*.zip`` is loaded as
+    ``inbox`` with a file-name filter
+    (:func:`~bridgedownstream_spark.sources.archive.load_archive_files`; see
     :mod:`~bridgedownstream_spark.streaming.ingest_stream`). Stage 2
-    compares each dataset's file listing with the ledger, a commit log read
-    on the driver (:mod:`~bridgedownstream_spark.pipeline.commitlog`), so a
-    re-run with nothing new reads no lake data and launches no Spark job.
+    compares each dataset's file listing with its ledger log, so a re-run
+    with nothing new reads no data and launches no Spark job.
     Datasets present in the lake but absent from the registry are left
     for a later run (exactly the reference's behavior when the catalog
     lags the data — the crawler sees them, the job has no table yet).
@@ -103,7 +103,7 @@ def run_study_workflow(
         schema_mapping=schema_mapping,
         dataset_mapping=dataset_mapping,
         json_root=json_root,
-        checkpoint_root=os.path.join(work_root, "ingest_ckpt"),
+        ledger_root=os.path.join(work_root, "ingest_ledger"),
         quarantine_root=os.path.join(work_root, "quarantine"),
         app_id=app_id,
     )

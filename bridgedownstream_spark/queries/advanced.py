@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bridgedownstream_spark.operators.asof import asof_join
+from bridgedownstream_spark.pipeline.fsutil import path_exists
 from bridgedownstream_spark.queries.util import (
     HASH60,
     TS_STR,
@@ -135,39 +136,23 @@ def _copurchase_edges(raw: DataFrame, min_orders: int | None = None) -> DataFram
 #: the fallback engages BEFORE the 8 GB broadcast hard ceiling is near
 _NODE_ROW_BYTES = 48
 
-#: conf key (this package's own knob) overriding the node-frame broadcast
-#: ceiling — settable per session; tests force the fallback with "0"
-_CEILING_CONF = "spark.bds.graph.broadcastCeilingBytes"
-
-#: default ceiling: 2 GB of estimated node-frame bytes. This is a
-#: fraction of Spark's 8 GB broadcast HARD limit (and of a typical
+#: node-frame broadcast ceiling: 2 GB of estimated node-frame bytes. This
+#: is a fraction of Spark's 8 GB broadcast HARD limit (and of a typical
 #: executor's memory budget), NOT spark.sql.autoBroadcastJoinThreshold:
 #: the auto threshold (default 10 MB) governs when AQE volunteers a
 #: broadcast, while an explicit broadcast() hint is honored far beyond
 #: it — conflating the two would demote a 2M-node frontier (~100 MB,
 #: cheap to broadcast) to per-round edge re-shuffles, measured 247 s vs
 #: 141 s at 100x.
-_CEILING_DEFAULT = 2 << 30
+_BROADCAST_CEILING_BYTES = 2 << 30
 
 
-def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a Spark size conf ('10485760', '10m', '10MB', '-1') to bytes."""
-    import re as _re
-
-    raw = str(spark.conf.get(key, str(default)) or default).strip().lower()
-    m = _re.match(r"^(-?\d+)\s*([kmgt]?)b?$", raw)
-    if not m:
-        return default
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
-def _pin_node_side(spark: SparkSession, df: DataFrame, n_nodes: int) -> DataFrame:
+def _pin_node_side(df: DataFrame, n_nodes: int) -> DataFrame:
     """Pin the join strategy for a NODE-cardinality frame used inside an
     iterative graph loop (frontier / visited / distance / survivor /
     share tables) instead of leaving it to per-round AQE estimates:
 
-    - under the broadcast ceiling (``_CEILING_CONF`` bytes, sized at a
+    - under the broadcast ceiling (``_BROADCAST_CEILING_BYTES``, sized at a
       generous ``_NODE_ROW_BYTES`` per row) → explicit ``broadcast()``:
       the edge state never moves and keeps its dst-clustering, so
       per-round aggregates stay exchange-free. Pinning matters even when
@@ -184,8 +169,7 @@ def _pin_node_side(spark: SparkSession, df: DataFrame, n_nodes: int) -> DataFram
     ``n_nodes`` is an UPPER BOUND (the dimension-table count) — cheap to
     obtain and stable across rounds, unlike per-round frontier sizes.
     """
-    ceiling = _bytes_conf(spark, _CEILING_CONF, _CEILING_DEFAULT)
-    if ceiling > 0 and n_nodes * _NODE_ROW_BYTES <= ceiling:
+    if n_nodes * _NODE_ROW_BYTES <= _BROADCAST_CEILING_BYTES:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
 
@@ -195,10 +179,9 @@ def _graph_node_bound(spark: SparkSession, sf_dir: str, fact: DataFrame) -> int:
     count (one metadata-cheap scan) when the corpus has one; hand-built
     graph fixtures that carry only the fact table fall back to an exact
     distinct-node count (node-sized, paid once per query)."""
-    try:
+    if path_exists(spark, f"{sf_dir}/part.parquet"):
         return tbl(spark, sf_dir, "part").count()
-    except Exception:  # noqa: BLE001 — fixture without a part table
-        return fact.select("l_partkey").distinct().count()
+    return fact.select("l_partkey").distinct().count()
 
 
 # ---------------------------------------------------------------------------
@@ -2661,11 +2644,11 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # connected set (every connected node has out-edges by symmetry).
     rank = deg.select("node").withColumn("pr", F.lit(init).cast("long"))
     for _ in range(_PR_ITERS):
-        share = rank.join(_pin_node_side(spark, deg, n), "node").select(
+        share = rank.join(_pin_node_side(deg, n), "node").select(
             "node", F.expr("pr div outdeg").alias("share")
         )
         rank = (
-            edges.join(_pin_node_side(spark, share, n), share.node == edges.src)
+            edges.join(_pin_node_side(share, n), share.node == edges.src)
             .groupBy("dst")
             .agg(F.sum("share").cast("long").alias("contrib"))
             .select(
@@ -3094,14 +3077,14 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         frontier = visited.where(F.col("hop") == k - 1).select("node")
         new = (
             edges.join(
-                _pin_node_side(spark, frontier, n_nodes),
+                _pin_node_side(frontier, n_nodes),
                 edges.src == frontier.node,
                 "left_semi",
             )
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(
-                _pin_node_side(spark, visited.select("node"), n_nodes),
+                _pin_node_side(visited.select("node"), n_nodes),
                 "node",
                 "left_anti",
             )
@@ -4196,7 +4179,7 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_SSSP_HOPS):
         relaxed = (
             edges.join(
-                _pin_node_side(spark, dist, n_nodes),
+                _pin_node_side(dist, n_nodes),
                 edges.src == F.col("node"),
                 "inner",
             )
@@ -4316,13 +4299,13 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         kept = edges.join(
             _pin_node_side(
-                spark, surv.withColumnRenamed("node", "src"), n_nodes
+                surv.withColumnRenamed("node", "src"), n_nodes
             ),
             "src",
             "left_semi",
         ).join(
             _pin_node_side(
-                spark, surv.withColumnRenamed("node", "dst"), n_nodes
+                surv.withColumnRenamed("node", "dst"), n_nodes
             ),
             "dst",
             "left_semi",

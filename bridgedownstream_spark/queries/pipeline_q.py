@@ -2061,7 +2061,7 @@ def workflow_e2e_equiv(spark, sf_dir):
     """One-call workflow-orchestrator equivalence (pipeline/workflow.py —
     the reference's SNS→SQS→Lambda→Glue-workflow trigger chain,
     templates/study-pipeline-infra.j2:245-298, as one function): archives
-    carrying TWO assessment types run through checkpointed stage-1
+    carrying TWO assessment types run through ledger-bookmarked stage-1
     ingest, layout-based dataset discovery (no crawler — the dataset=
     dirs ARE the catalog), and CONCURRENT per-dataset stage-2 jobs
     (driver threads + Spark job groups, the reference's

@@ -738,17 +738,9 @@ def _ivf_assign(spark, sf_dir):
     projection: ZERO exchange, no crossJoin row expansion carrying the
     embedding n_cells times (the r9 struct-max form still shuffled one
     (ccos, neg_cent, emb, nrm) struct per vector)."""
-    e, _ = _ivf_cent(spark, sf_dir)
+    e, cent = _ivf_cent(spark, sf_dir)
     cents_row = F.broadcast(
-        e.where(
-            (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 250 * _N_CELLS)
-        )
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-        .agg(
+        cent.agg(
             F.expr(
                 "array_sort(collect_list(struct(cent_id, c_emb, c_nrm)))"
             ).alias("cents")

@@ -27,7 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["read_archives", "archive_listing", "load_archive_files", "explode_members"]
+__all__ = ["read_archives", "load_archive_files", "with_manifest", "explode_members"]
 
 #: marker member emitted for an archive whose zip cannot be opened — it
 #: fails validation by construction, routing the record to quarantine
@@ -41,22 +41,8 @@ def _has_glob(s: str) -> bool:
     return any(c in _GLOB_CHARS for c in s)
 
 
-def archive_listing(path: str) -> tuple[str, str | None] | None:
-    """Where :func:`load_archive_files` points the reader for ``path``: a
-    glob in the last component only gives ``(parent, pattern)``, a path
-    without a glob gives ``(path, None)``, and a glob anywhere else gives
-    None (the reader expands it itself)."""
-    if not _has_glob(path):
-        return path, None
-    parent, _, pattern = path.rpartition("/")
-    listable = parent and not parent.endswith(("/", ":"))
-    if listable and not _has_glob(parent):
-        return parent, pattern
-    return None
-
-
 def load_archive_files(reader, path: str) -> DataFrame:
-    """Load ``path`` through a ``binaryFile`` batch or stream reader.
+    """Load ``path`` through a ``binaryFile`` reader.
 
     A glob in the last component only (``inbox/*.zip``) loads the parent
     directory with ``pathGlobFilter``: Spark lists that one directory on the
@@ -67,10 +53,25 @@ def load_archive_files(reader, path: str) -> DataFrame:
     whose names do not match. Every other path shape, a glob directly under
     a filesystem root included, is loaded unchanged.
     """
-    where = archive_listing(path)
-    if where is not None and where[1] is not None:
-        return reader.option("pathGlobFilter", where[1]).load(where[0])
+    parent, _, pattern = path.rpartition("/")
+    listable = parent and not parent.endswith(("/", ":"))
+    if _has_glob(pattern) and listable and not _has_glob(parent):
+        return reader.option("pathGlobFilter", pattern).load(parent)
     return reader.load(path)
+
+
+def with_manifest(scan: DataFrame, manifest: DataFrame | None) -> DataFrame:
+    """``(path, content)`` rows of a ``binaryFile`` scan, each carrying its
+    record metadata: the manifest (keyed by ``path``) is broadcast and
+    inner-joined. binaryFile paths are URIs (``file:/…``); they are
+    normalized to plain paths first, so the manifest can use ordinary
+    filesystem paths."""
+    df = scan.select(
+        F.regexp_replace("path", "^file:/*", "/").alias("path"), "content"
+    )
+    if manifest is not None:
+        df = df.join(F.broadcast(manifest), "path", "inner")
+    return df
 
 
 def read_archives(
@@ -82,15 +83,9 @@ def read_archives(
     The binaryFile source splits the archives across tasks (one archive per
     row); archive bodies stay opaque until stage 1's pass unzips them.
     """
-    df = load_archive_files(spark.read.format("binaryFile"), path).select(
-        F.col("path"), F.col("content")
+    return with_manifest(
+        load_archive_files(spark.read.format("binaryFile"), path), manifest
     )
-    # binaryFile paths are URIs (file:/…); normalize to plain paths so the
-    # manifest can use ordinary filesystem paths.
-    df = df.withColumn("path", F.regexp_replace("path", "^file:/*", "/"))
-    if manifest is not None:
-        df = df.join(F.broadcast(manifest), "path", "inner")
-    return df
 
 
 def explode_members() -> Callable[[bytes], list[tuple]]:

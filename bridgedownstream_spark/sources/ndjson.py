@@ -39,13 +39,12 @@ def write_ndjson_dataset(
     dataset: str,
     partition_cols: tuple[str, ...] = PARTITION_COLS,
     mode: str = "append",
-    cluster: bool = True,
 ) -> str:
     """Write ``df`` as a partitioned NDJSON dataset; returns the dataset
     root. Missing partition columns raise — stage 1 must inject them
     (reference guarantees this at s3_to_json_s3.py:599-619).
 
-    ``cluster=True`` repartitions by the partition columns first so each
+    The rows are repartitioned by the partition columns first so each
     output directory is written by few tasks instead of every task emitting
     a sliver into every directory — without it, N tasks × P directories
     small files swamp the filesystem (and S3 listing) at scale.
@@ -54,7 +53,5 @@ def write_ndjson_dataset(
     if missing:
         raise ValueError(f"write_ndjson_dataset: missing partition columns {missing}")
     path = dataset_path(json_root, dataset)
-    if cluster:
-        df = df.repartition(*partition_cols)
-    df.write.mode(mode).partitionBy(*partition_cols).json(path)
+    df.repartition(*partition_cols).write.mode(mode).partitionBy(*partition_cols).json(path)
     return path

@@ -11,8 +11,11 @@
 - :mod:`.drain` — the one availableNow drain (start, bounded wait, stop
   and raise on timeout) behind every bounded stream run.
 
-The append-only stage 2 is bookmarked by the processed-files ledger
-(:mod:`bridgedownstream_spark.pipeline.ledger`), not by a streaming
+- :mod:`.ingest_stream` — incremental stage 1 (archives → NDJSON lake),
+  one bounded batch of the archives not yet ingested per call.
+
+Stage 1 and the append-only stage 2 are bookmarked by the processed-files
+ledger (:mod:`bridgedownstream_spark.pipeline.ledger`), not by a streaming
 checkpoint. It is written in the checkpoint logs' own format
 (:mod:`bridgedownstream_spark.pipeline.commitlog`): numbered ``v1`` files
 of one JSON entry per line, readable with any text tool (the reference

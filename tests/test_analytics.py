@@ -1200,59 +1200,41 @@ def test_copurchase_edges_match_inline_builds(spark, tmp_path_factory):
         assert got and got == sorted(map(tuple, ref.collect())), variant
 
 
-def test_graph_loop_degrades_to_shuffle_hash_above_broadcast_ceiling(spark):
+def test_graph_loop_degrades_to_shuffle_hash_above_broadcast_ceiling(spark, monkeypatch):
     """_pin_node_side: when the node frame cannot broadcast (the ceiling
-    conf forced to 0, the node-table-outgrew-the-ceiling stand-in),
-    every loop join must degrade to an explicit SHUFFLE_HASH build —
-    visible in the final round's physical plan — and the result must be
-    IDENTICAL to the broadcast path."""
-    from bridgedownstream_spark.queries.advanced import _CEILING_CONF
-
+    forced to 0, the node-table-outgrew-the-ceiling stand-in), every loop
+    join must degrade to an explicit SHUFFLE_HASH build — visible in the
+    final round's physical plan — and the result must be IDENTICAL to the
+    broadcast path."""
     sf = "/root/testdata/sf0.001"
     base = sorted(
         tuple(r) for r in advanced.bfs_hops(spark, sf).collect()
     )
-    spark.conf.set(_CEILING_CONF, "0")
-    try:
-        df = advanced.bfs_hops(spark, sf)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan  # the pinned fallback build
-        assert "BroadcastHashJoin" not in plan
-        got = sorted(tuple(r) for r in df.collect())
-    finally:
-        spark.conf.unset(_CEILING_CONF)
-    assert got == base
+    monkeypatch.setattr(advanced, "_BROADCAST_CEILING_BYTES", 0)
+    df = advanced.bfs_hops(spark, sf)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan  # the pinned fallback build
+    assert "BroadcastHashJoin" not in plan
+    assert sorted(tuple(r) for r in df.collect()) == base
 
 
-def test_pin_node_side_threshold_logic(spark):
-    """Broadcast under the sized ceiling, shuffle-hash above it or when
-    broadcasting is disabled; size confs parse with unit suffixes. The
-    knob is the package's own ceiling conf, NOT
-    autoBroadcastJoinThreshold — explicit broadcast hints are honored
-    far beyond the 10 MB auto threshold, and demoting a ~100 MB frontier
-    to per-round edge re-shuffles measured 247 s vs 141 s at 100x."""
-    from bridgedownstream_spark.queries.advanced import (
-        _CEILING_CONF,
-        _NODE_ROW_BYTES,
-        _bytes_conf,
-        _pin_node_side,
-    )
+def test_pin_node_side_threshold_logic(spark, monkeypatch):
+    """Broadcast under the sized ceiling, shuffle-hash above it. The
+    ceiling is the package's own, NOT autoBroadcastJoinThreshold —
+    explicit broadcast hints are honored far beyond the 10 MB auto
+    threshold, and demoting a ~100 MB frontier to per-round edge
+    re-shuffles measured 247 s vs 141 s at 100x."""
+    from bridgedownstream_spark.queries.advanced import _NODE_ROW_BYTES, _pin_node_side
 
     df = spark.range(4).withColumnRenamed("id", "node")
-    try:
-        spark.conf.set(_CEILING_CONF, "10m")
-        assert _bytes_conf(spark, _CEILING_CONF, 0) == 10 << 20
-        small = _pin_node_side(spark, df, 1000)
-        # a 2M-node frontier (the 100x corpus) exceeds 10m but must
-        # broadcast under the DEFAULT ceiling
-        spark.conf.unset(_CEILING_CONF)
-        frontier_100x = _pin_node_side(spark, df, 2_000_000)
-        spark.conf.set(_CEILING_CONF, "10m")
-        big = _pin_node_side(spark, df, (10 << 20) // _NODE_ROW_BYTES + 1)
-        spark.conf.set(_CEILING_CONF, "0")
-        disabled = _pin_node_side(spark, df, 1)
-    finally:
-        spark.conf.unset(_CEILING_CONF)
+    # a 2M-node frontier (the 100x corpus) must broadcast under the
+    # default ceiling
+    frontier_100x = _pin_node_side(df, 2_000_000)
+    monkeypatch.setattr(advanced, "_BROADCAST_CEILING_BYTES", 10 << 20)
+    small = _pin_node_side(df, 1000)
+    big = _pin_node_side(df, (10 << 20) // _NODE_ROW_BYTES + 1)
+    monkeypatch.setattr(advanced, "_BROADCAST_CEILING_BYTES", 0)
+    disabled = _pin_node_side(df, 1)
     probe = spark.range(4).withColumnRenamed("id", "node")
     for bcast in (small, frontier_100x):
         p = probe.join(bcast, "node")._jdf.queryExecution()

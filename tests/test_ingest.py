@@ -268,36 +268,6 @@ def test_corrupt_archive_quarantines_not_vanishes(spark, tmp_path):
     assert any("recG" in row["value"] for row in lake.collect())
 
 
-def test_prune_quarantine_retention(spark, tmp_path):
-    from bridgedownstream_spark.pipeline.ingest import prune_quarantine
-
-    root = str(tmp_path / "quarantine")
-    spark.createDataFrame(
-        [
-            ("r1", "2022-01-05T00:00:00.000Z", ["e1"]),
-            ("r2", "2022-06-01T12:00:00.000Z", ["e2"]),
-            ("r3", "2023-01-01T00:00:00.000Z", ["e3"]),
-            ("r4", None, ["e4"]),  # undatable: must survive every pass
-        ],
-        "recordid string, uploadedon string, errors array<string>",
-    ).coalesce(1).write.parquet(root)
-    out = prune_quarantine(spark, root, "2022-06-01T00:00:00.000Z")
-    assert out == {"kept": 3, "dropped": 1}
-    left = {r.recordid for r in spark.read.parquet(root).collect()}
-    assert left == {"r2", "r3", "r4"}
-    # idempotent: nothing else ages out at the same cutoff — and the
-    # NULL-dated row is still here (ADVICE r3: it must not silently age out)
-    assert prune_quarantine(spark, root, "2022-06-01T00:00:00.000Z") == {
-        "kept": 3,
-        "dropped": 0,
-    }
-    # missing/empty table: no-op, no crash
-    assert prune_quarantine(spark, str(tmp_path / "nope"), "2022-01-01") == {
-        "kept": 0,
-        "dropped": 0,
-    }
-
-
 def _ingest_batch(spark, tmp_path, name, archives, json_root, quarantine_root):
     """Zip ``archives`` ({recordid: (members, clientinfo)}) into their own
     directory and run one stage-1 append into the shared roots."""

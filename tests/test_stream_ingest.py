@@ -1,12 +1,16 @@
-"""Streaming stage-1 ingest: archives drain through the checkpointed
-binaryFile stream exactly once; late-arriving archives are picked up by a
-re-run without reprocessing the old ones."""
+"""Incremental stage-1 ingest: each archive is ingested once, bookmarked by
+a processed-files ledger diffed against the driver's listing; late-arriving
+archives are picked up by a re-run without reprocessing the old ones, and a
+run with nothing new launches no Spark job."""
 
 from __future__ import annotations
 
 import json
 import zipfile
 
+import pytest
+
+from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.streaming import stream_ingest
 
 EVENTS_SCHEMA = {
@@ -68,35 +72,22 @@ def test_stream_ingest_is_incremental(spark, tmp_path):
         _meta(_zip(arch / "r1.zip", [{"event_id": 1}, {"event_id": 2}]), "r1"),
         _meta(_zip(arch / "r2.zip", [{"event_id": 3}]), "r2"),
     ]
-    json_root = str(tmp_path / "json")
-    ck = str(tmp_path / "ck")
+    path, json_root, ledger = str(arch / "*.zip"), str(tmp_path / "json"), str(tmp_path / "l")
 
-    def drain(manifest_rows):
-        stream_ingest(
-            spark,
-            archive_path=str(arch / "*.zip"),
-            manifest=_manifest(spark, manifest_rows),
-            archive_map=ARCHIVE_MAP,
-            schema_store=SCHEMA_STORE,
-            schema_mapping=SCHEMA_MAPPING,
-            dataset_mapping=None,
-            json_root=json_root,
-            checkpoint_root=ck,
-            timeout_sec=120,
-        )
-
-    drain(rows)
+    _ingest(spark, path, rows, json_root, ledger)
     assert _lake_recordids(spark, json_root) == ["r1", "r1", "r2"]
 
-    # a third archive arrives; the same checkpoint must ingest ONLY it —
+    # a third archive arrives; the same ledger must ingest ONLY it —
     # were r1/r2 reprocessed, their rows would double in the append lake
     rows.append(_meta(_zip(arch / "r3.zip", [{"event_id": 4}]), "r3"))
-    drain(rows)
+    _ingest(spark, path, rows, json_root, ledger)
     assert _lake_recordids(spark, json_root) == ["r1", "r1", "r2", "r3"]
+    assert _logged(spark, ledger) == {"r1.zip", "r2.zip", "r3.zip"}
 
     # an immediate re-run with nothing new is a no-op
-    drain(rows)
+    _ingest(spark, path, rows, json_root, ledger)
     assert _lake_recordids(spark, json_root) == ["r1", "r1", "r2", "r3"]
+    assert _logged(spark, ledger) == {"r1.zip", "r2.zip", "r3.zip"}
 
 
 def test_flat_inbox_directory_listing_matches_glob(spark, tmp_path):
@@ -119,18 +110,7 @@ def test_flat_inbox_directory_listing_matches_glob(spark, tmp_path):
     assert sorted(r["path"].rsplit("/", 1)[1] for r in globbed) == ["a.zip", "b.zip"]
 
     streamed = str(tmp_path / "json_stream")
-    stream_ingest(
-        spark,
-        archive_path=pattern,
-        manifest=_manifest(spark, rows),
-        archive_map=ARCHIVE_MAP,
-        schema_store=SCHEMA_STORE,
-        schema_mapping=SCHEMA_MAPPING,
-        dataset_mapping=None,
-        json_root=streamed,
-        checkpoint_root=str(tmp_path / "ck"),
-        timeout_sec=120,
-    )
+    _ingest(spark, pattern, rows, streamed, str(tmp_path / "ledger"))
     assert _lake_recordids(spark, streamed) == ["a", "b"]
 
     batch = str(tmp_path / "json_batch")
@@ -194,44 +174,7 @@ def test_glob_in_parent_reads_every_match(spark, tmp_path):
     assert sorted(r["path"].rsplit("/", 2)[1] for r in got) == ["in1", "in2"]
 
 
-class _QueryStarts:
-    """Counts streaming queries started on ``spark`` while in use."""
-
-    def __init__(self, spark):
-        self._spark = spark
-        self.n = 0
-
-    def __enter__(self):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        counter = self
-
-        class _Listener(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                counter.n += 1
-
-            def onQueryProgress(self, event):
-                pass
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        self._listener = _Listener()
-        self._spark.streams.addListener(self._listener)
-        return self
-
-    def count(self) -> int:
-        self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return self.n
-
-    def __exit__(self, *exc):
-        self._spark.streams.removeListener(self._listener)
-
-
-def _ingest(spark, archive_path, rows, json_root, ck):
+def _ingest(spark, archive_path, rows, json_root, ledger):
     stream_ingest(
         spark,
         archive_path=archive_path,
@@ -241,143 +184,85 @@ def _ingest(spark, archive_path, rows, json_root, ck):
         schema_mapping=SCHEMA_MAPPING,
         dataset_mapping=None,
         json_root=json_root,
-        checkpoint_root=ck,
-        timeout_sec=120,
+        ledger_root=ledger,
     )
 
 
-def test_replays_a_planned_batch_that_was_never_committed(spark, tmp_path):
-    # a crash after planning leaves offsets/N without commits/N: the next
-    # run must start the stream and commit the batch, never skip it
-    arch = tmp_path / "archives"
-    arch.mkdir()
-    rows = [_meta(_zip(arch / "r1.zip", [{"event_id": 1}]), "r1")]
-    json_root, ck = str(tmp_path / "json"), tmp_path / "ck"
-    _ingest(spark, str(arch / "*.zip"), rows, json_root, str(ck))
-    last = max(int(p.name) for p in (ck / "commits").iterdir() if p.name.isdigit())
-    (ck / "commits" / str(last)).unlink()
-    (ck / "commits" / f".{last}.crc").unlink(missing_ok=True)
-
-    with _QueryStarts(spark) as starts:
-        _ingest(spark, str(arch / "*.zip"), rows, json_root, str(ck))
-        assert starts.count() == 1
-    assert (ck / "commits" / str(last)).exists()
-    assert "r1" in _lake_recordids(spark, json_root)
-
-
-def test_replays_files_logged_but_never_planned(spark, tmp_path):
-    # a crash after the source logged its new files but before the batch
-    # was planned leaves sources/0/N with neither offsets/N nor commits/N:
-    # those files are still pending, so the stream must start
-    inbox, rows = _inbox(tmp_path, 1)
-    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), tmp_path / "ck"
-    _ingest(spark, path, rows, json_root, str(ck))
-    rows.append(_meta(_zip(inbox / "r1.zip", [{"event_id": 1}]), "r1"))
-    _ingest(spark, path, rows, json_root, str(ck))
-    for log in ("offsets", "commits"):
-        (ck / log / "1").unlink()
-        (ck / log / ".1.crc").unlink(missing_ok=True)
-
-    with _QueryStarts(spark) as starts:
-        _ingest(spark, path, rows, json_root, str(ck))
-        assert starts.count() == 1
-    assert (ck / "commits" / "1").exists()
-    assert _lake_recordids(spark, json_root) == ["r0", "r1", "r1"]
-
-
-def _inbox(tmp_path, n):
+def _inbox(tmp_path, names):
     inbox = tmp_path / "inbox"
     inbox.mkdir()
     rows = [
-        _meta(_zip(inbox / f"r{i}.zip", [{"event_id": i}]), f"r{i}")
-        for i in range(n)
+        _meta(_zip(inbox / name, [{"event_id": i}]), f"r{i}")
+        for i, name in enumerate(names)
     ]
     return inbox, rows
 
 
-def test_noop_starts_no_query_for_glob_or_directory(spark, tmp_path):
-    inbox, rows = _inbox(tmp_path, 2)
-    for shape, path in (("glob", str(inbox / "*.zip")), ("dir", str(inbox))):
-        json_root, ck = str(tmp_path / f"json_{shape}"), str(tmp_path / f"ck_{shape}")
-        _ingest(spark, path, rows, json_root, ck)
-        with _QueryStarts(spark) as starts:
-            _ingest(spark, path, rows, json_root, ck)
-            assert starts.count() == 0, shape
-        assert _lake_recordids(spark, json_root) == ["r0", "r1"]
+def _logged(spark, ledger) -> set[str]:
+    """File names of the archives the stage-1 ledger holds."""
+    keys = FileLedger(spark, ledger).processed_files("archives")
+    return {path.rsplit("/", 1)[1] for _, _, path in keys}
 
 
-def test_noop_starts_no_query_beside_other_files_and_subdirectories(spark, tmp_path):
-    inbox, rows = _inbox(tmp_path, 2)
+def test_noop_launches_no_job_beside_other_files_and_subdirectories(
+    spark, tmp_path, new_jobs
+):
+    inbox, rows = _inbox(tmp_path, ["r0.zip", "r1.zip"])
     (inbox / "notes.txt").write_text("not an archive")
     (inbox / "sub").mkdir()
     rows.append(_meta(_zip(inbox / "sub" / "c.zip", [{"event_id": 9}]), "c"))
-    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
-    _ingest(spark, path, rows, json_root, ck)
-    with _QueryStarts(spark) as starts:
-        _ingest(spark, path, rows, json_root, ck)
-        assert starts.count() == 0
-    assert _lake_recordids(spark, json_root) == ["r0", "r1"]
+    for shape, path in (("glob", str(inbox / "*.zip")), ("dir", str(inbox))):
+        json_root, ledger = str(tmp_path / f"json_{shape}"), str(tmp_path / f"l_{shape}")
+        _ingest(spark, path, rows, json_root, ledger)
+        new_jobs()
+        _ingest(spark, path, rows, json_root, ledger)
+        assert new_jobs() == [], shape
+        assert _lake_recordids(spark, json_root) == ["r0", "r1"], shape
 
 
-def test_noop_starts_no_query_past_a_log_compaction(spark, tmp_path):
-    key = "spark.sql.streaming.fileSource.log.compactInterval"
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, "2")
-    try:
-        inbox = tmp_path / "inbox"
-        inbox.mkdir()
-        rows, ck = [], tmp_path / "ck"
-        json_root = str(tmp_path / "json")
-        for i in range(3):
-            rows.append(_meta(_zip(inbox / f"r{i}.zip", [{"event_id": i}]), f"r{i}"))
-            _ingest(spark, str(inbox / "*.zip"), rows, json_root, str(ck))
-        assert (ck / "sources" / "0" / "1.compact").exists()
-        with _QueryStarts(spark) as starts:
-            _ingest(spark, str(inbox / "*.zip"), rows, json_root, str(ck))
-            assert starts.count() == 0
-        assert _lake_recordids(spark, json_root) == ["r0", "r1", "r2"]
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
+def test_hidden_archives_are_neither_ingested_nor_committed(spark, tmp_path):
+    # Spark's listing skips names starting with "_" or "."
+    inbox, rows = _inbox(tmp_path, ["r0.zip", "_r1.zip", ".r2.zip"])
+    path, json_root, ledger = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "l")
+    _ingest(spark, path, rows, json_root, ledger)
+    assert _lake_recordids(spark, json_root) == ["r0"]
+    assert _logged(spark, ledger) == {"r0.zip"}
 
 
-def test_new_archive_starts_the_query(spark, tmp_path):
-    inbox, rows = _inbox(tmp_path, 2)
-    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
-    _ingest(spark, path, rows, json_root, ck)
-    rows.append(_meta(_zip(inbox / "r2.zip", [{"event_id": 2}]), "r2"))
-    with _QueryStarts(spark) as starts:
-        _ingest(spark, path, rows, json_root, ck)
-        assert starts.count() == 1
+def test_escaped_names_are_ingested_once(spark, tmp_path, new_jobs):
+    # a space is %20 in a URI and "%" is %25: "a b.zip" and "a%20b.zip"
+    # are two archives, each ingested once
+    names = ["a b.zip", "a%20b.zip", "c%d.zip"]
+    inbox, rows = _inbox(tmp_path, names)
+    path, json_root, ledger = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "l")
+    _ingest(spark, path, rows, json_root, ledger)
+    assert _lake_recordids(spark, json_root) == ["r0", "r1", "r2"]
+    assert _logged(spark, ledger) == set(names)
+    new_jobs()
+    _ingest(spark, path, rows, json_root, ledger)
+    assert new_jobs() == []
     assert _lake_recordids(spark, json_root) == ["r0", "r1", "r2"]
 
 
-def test_sink_log_in_inbox_starts_the_query(spark, tmp_path):
-    # a _spark_metadata directory makes the source read a sink's log
-    # instead of listing: the driver-side listing cannot vouch for that
-    inbox, rows = _inbox(tmp_path, 2)
-    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "ck")
-    _ingest(spark, path, rows, json_root, ck)
-    (inbox / "_spark_metadata").mkdir()
-    with _QueryStarts(spark) as starts:
-        _ingest(spark, path, rows, json_root, ck)
-        assert starts.count() == 1
+def test_failed_commit_leaves_ledger_unchanged_and_next_run_reprocesses(
+    spark, tmp_path, monkeypatch
+):
+    inbox, rows = _inbox(tmp_path, ["r0.zip"])
+    path, json_root, ledger = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "l")
+    _ingest(spark, path, rows, json_root, ledger)
+    rows.append(_meta(_zip(inbox / "r1.zip", [{"event_id": 1}]), "r1"))
 
+    def fail(self, paths, dataset):
+        raise OSError("commit failed")
 
-def test_unknown_log_version_starts_the_query(spark, tmp_path):
-    # the check does not skip on a log it cannot read: the stream starts
-    # and Spark itself rejects the log
-    import pytest
-
-    inbox, rows = _inbox(tmp_path, 2)
-    path, json_root, ck = str(inbox / "*.zip"), str(tmp_path / "json"), tmp_path / "ck"
-    _ingest(spark, path, rows, json_root, str(ck))
-    log = ck / "sources" / "0" / "0"
-    log.write_text("v9" + log.read_text()[2:])
-    (ck / "sources" / "0" / ".0.crc").unlink(missing_ok=True)
-    with _QueryStarts(spark) as starts:
-        with pytest.raises(Exception):
-            _ingest(spark, path, rows, json_root, str(ck))
-        assert starts.count() == 1
+    with monkeypatch.context() as m:
+        m.setattr(FileLedger, "commit", fail)
+        with pytest.raises(OSError):
+            _ingest(spark, path, rows, json_root, ledger)
+    # the sinks were written before the commit failed
+    assert _lake_recordids(spark, json_root) == ["r0", "r1"]
+    assert _logged(spark, ledger) == {"r0.zip"}
+    # at-least-once: the unlogged archive is ingested again, then logged
+    _ingest(spark, path, rows, json_root, ledger)
+    assert _lake_recordids(spark, json_root) == ["r0", "r1", "r1"]
+    assert _logged(spark, ledger) == {"r0.zip", "r1.zip"}

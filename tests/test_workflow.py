@@ -235,23 +235,14 @@ def test_workflow_skips_unregistered_datasets(spark, tmp_path):
     assert written == {}
 
 
-def _jobs_since(spark, first_job: int) -> list[tuple[int, int]]:
-    """(job id, task count) of every job with id >= ``first_job``, read
-    from Spark's status store once its listener events are processed."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    out = [(j.jobId(), j.numTasks()) for j in (jobs.apply(i) for i in range(jobs.size()))]
-    return sorted(j for j in out if j[0] >= first_job)
-
-
-def test_noop_rerun_lists_archive_directory_once(spark, tmp_path):
+def test_noop_rerun_lists_archive_directory_once(spark, tmp_path, new_jobs):
     # 40 archives exceed spark.sql.sources.parallelPartitionDiscovery
     # .threshold (32): listing them as 40 root paths launches a 40-task
-    # job, and so does restarting the archive stream (it re-opens its last
-    # committed batch). A no-op re-run lists the inbox once on the driver,
-    # starts no stream and reads the stage-2 ledger on the driver, so it
-    # launches no Spark job at all.
+    # job. Stage 1 lists the inbox once on the driver and selects the new
+    # archives from that listing, so a cold run has no job with a task per
+    # archive. A no-op re-run diffs the listing against the stage-1 ledger
+    # and reads the stage-2 ledger on the driver, so it launches no Spark
+    # job at all.
     n = 40
     arch = tmp_path / "archives"
     arch.mkdir()
@@ -280,13 +271,14 @@ def test_noop_rerun_lists_archive_directory_once(spark, tmp_path):
         return lake.count(), spark.read.parquet(table).count()
 
     written = run()
+    cold = new_jobs()
+    assert cold and max(tasks for _, tasks in cold) < n, cold
     table = written["eventlist_v1"]["eventlist_v1"]
     assert counts() == (n, n)
 
-    first = max((j for j, _ in _jobs_since(spark, 0)), default=-1) + 1
+    new_jobs()
     assert run() == {"eventlist_v1": {}}
-    jobs = _jobs_since(spark, first)
-    assert jobs == []
+    assert new_jobs() == []
     assert counts() == (n, n)
 
     # an archive landed after a no-op is ingested, exactly once

@@ -204,13 +204,8 @@ def _logged(spark, ledger) -> set[str]:
     return {path.rsplit("/", 1)[1] for _, _, path in keys}
 
 
-def test_noop_launches_no_job_beside_other_files_and_subdirectories(
-    spark, tmp_path, new_jobs
-):
-    inbox, rows = _inbox(tmp_path, ["r0.zip", "r1.zip"])
-    (inbox / "notes.txt").write_text("not an archive")
-    (inbox / "sub").mkdir()
-    rows.append(_meta(_zip(inbox / "sub" / "c.zip", [{"event_id": 9}]), "c"))
+def _assert_noop_rerun_launches_no_job(spark, tmp_path, inbox, rows, new_jobs):
+    # a run with nothing new launches no Spark job, so it starts no query
     for shape, path in (("glob", str(inbox / "*.zip")), ("dir", str(inbox))):
         json_root, ledger = str(tmp_path / f"json_{shape}"), str(tmp_path / f"l_{shape}")
         _ingest(spark, path, rows, json_root, ledger)
@@ -218,6 +213,21 @@ def test_noop_launches_no_job_beside_other_files_and_subdirectories(
         _ingest(spark, path, rows, json_root, ledger)
         assert new_jobs() == [], shape
         assert _lake_recordids(spark, json_root) == ["r0", "r1"], shape
+
+
+def test_noop_starts_no_query_for_glob_or_directory(spark, tmp_path, new_jobs):
+    inbox, rows = _inbox(tmp_path, ["r0.zip", "r1.zip"])
+    _assert_noop_rerun_launches_no_job(spark, tmp_path, inbox, rows, new_jobs)
+
+
+def test_noop_starts_no_query_beside_other_files_and_subdirectories(
+    spark, tmp_path, new_jobs
+):
+    inbox, rows = _inbox(tmp_path, ["r0.zip", "r1.zip"])
+    (inbox / "notes.txt").write_text("not an archive")
+    (inbox / "sub").mkdir()
+    rows.append(_meta(_zip(inbox / "sub" / "c.zip", [{"event_id": 9}]), "c"))
+    _assert_noop_rerun_launches_no_job(spark, tmp_path, inbox, rows, new_jobs)
 
 
 def test_hidden_archives_are_neither_ingested_nor_committed(spark, tmp_path):

@@ -181,7 +181,6 @@ def relationalize(
         link_cols=present_keys + ([_SALT] if salted else []),
         inherit_cols=present_keys,
         out=out,
-        is_root=True,
         wide_ids=wide_ids,
     )
     return dict(sorted(out.items()))
@@ -193,7 +192,6 @@ def _relationalize_level(
     link_cols: list[str],
     inherit_cols: list[str],
     out: dict[str, DataFrame],
-    is_root: bool,
     wide_ids: bool,
 ) -> None:
     # 1. Flatten structs (never the linking/inherited columns themselves).
@@ -247,7 +245,6 @@ def _relationalize_level(
             link_cols=["id", "index"],
             inherit_cols=inherit_cols,
             out=out,
-            is_root=False,
             wide_ids=wide_ids,
         )
 

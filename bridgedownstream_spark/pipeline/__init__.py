@@ -6,7 +6,7 @@
   partitioned parquet tables (reference src/glue/jobs/json_s3_to_parquet.py).
 - :mod:`.ledger` — processed-files ledger giving job-bookmark-style
   incremental semantics (reference transformation_ctx/job.commit()); the
-  one bookmark of both stages.
+  one bookmark of both stages and of the upsert lake sync.
 - :mod:`.commitlog` — the ledger's log format: Spark's numbered ``v1``
   checkpoint-log files, read and appended on the driver (one log per
   dataset).

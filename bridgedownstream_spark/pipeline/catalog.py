@@ -14,8 +14,8 @@ DataFrame temp view pins the file-listing snapshot taken at
 registration, so the next partition-overwrite (the upsert/compaction
 write path) makes queries through it fail with FILE_NOT_EXIST; the SQL
 form re-resolves the path's files on every query (verified against a
-dynamic partition overwrite), so the views stay correct while
-stream_upsert_lake continuously rewrites partitions. Registration cost
+dynamic partition overwrite), so the views stay correct while each
+stream_upsert_lake run rewrites the partitions it touches. Registration cost
 is one schema resolution per table; file listing and partition pruning
 happen per query.
 """

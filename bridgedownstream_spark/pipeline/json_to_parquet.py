@@ -32,7 +32,6 @@ from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
     relationalize,
 )
-from bridgedownstream_spark.pipeline.commitlog import path_key
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
 from bridgedownstream_spark.sources.ndjson import dataset_path
 
@@ -118,8 +117,9 @@ CORRUPT_COL = "_corrupt_record"
 
 
 def lake_read_schema(dataset: Dataset, keep_corrupt: bool = False) -> T.StructType:
-    """The schema every stage-2 reader, batch or stream, reads a JSON lake
-    through: the leaf-widened data fields, then :data:`CORRUPT_COL` if
+    """The schema every stage-2 reader (:func:`read_json_dataset`, so the
+    append job and the upsert lake sync alike) reads a JSON lake through:
+    the leaf-widened data fields, then :data:`CORRUPT_COL` if
     ``keep_corrupt``, then the declared partition fields (they resolve
     from the directory layout, never from file bodies)."""
     return T.StructType(
@@ -216,10 +216,10 @@ def run_json_to_parquet(
 
     ``ledger`` (a :class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`)
     makes the run incremental: the dataset's file listing is compared with
-    the ledger's commit log on the driver, as URI values
-    (:func:`~bridgedownstream_spark.pipeline.commitlog.path_key`), only
-    files absent from it are read, and their paths are committed after the
-    sinks succeed — the Glue-job-bookmark equivalent (reference
+    the ledger's commit log on the driver
+    (:meth:`~bridgedownstream_spark.pipeline.ledger.FileLedger.new_files`),
+    only files absent from it are read, and their paths are committed
+    after the sinks succeed — the Glue-job-bookmark equivalent (reference
     json_s3_to_parquet.py:74,103,233). Re-running over the same input is
     then a no-op that reads no data and launches no Spark job; a ledger
     that cannot be read raises instead of reprocessing everything.
@@ -248,10 +248,7 @@ def run_json_to_parquet(
         # batch is, since it contributes no rows and needs no rescan. A
         # missing dataset directory falls through to the read, which
         # raises.
-        done = ledger.processed_files(dataset_name)
-        paths = [
-            p for p in list_data_files(spark, dataset_dir) if path_key(p) not in done
-        ]
+        paths = ledger.new_files(list_data_files(spark, dataset_dir), dataset_name)
         if not paths:
             return {}
     df = read_json_dataset(spark, json_root, ds, keep_corrupt=keep_corrupt, paths=paths)

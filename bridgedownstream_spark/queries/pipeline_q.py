@@ -106,15 +106,6 @@ _ORACLE_SOURCE = f"""
 """
 
 
-def _read_table(
-    spark: SparkSession, path: str, cols: tuple[str, ...] = PARTITION_COLS
-) -> DataFrame:
-    """Read a lake table with catalog partition semantics: its partition
-    columns ``cols`` stay strings, through an explicit schema, whatever the
-    session it is handed infers (it sets no session conf)."""
-    return read_partitioned(spark, path, cols)
-
-
 @_fixture
 def _build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Stage 1 (sink) + stage 2 (job) over the sampled nested dataset:
@@ -1064,15 +1055,13 @@ def stream_dedup_e2e(spark, sf_dir):
     """,
 )
 def stream_sync_e2e(spark, sf_dir):
-    # Streaming-family certification with a FULL value-hash oracle: an
-    # availableNow drain is deterministic once it returns, so the streaming
-    # stage-2 path (checkpointed NDJSON file stream → foreachBatch conform →
-    # partition-scoped upsert sink, streaming/lake_sync.py) is oracle-
-    # checkable even though the stream itself is not SQL-expressible. The
-    # oracle recomputes the lake contents from the source events table —
-    # a pass certifies the stream read, the checkpoint lifecycle, and the
-    # upsert sink end-to-end. Re-invocation in-process is the no-op
-    # drain (same checkpoint, no new files): idempotency by construction.
+    # The upsert lake sync (streaming/lake_sync.py: ledger-bookmarked
+    # batch → read through the declared schema → partition-scoped upsert
+    # sink) certified with a FULL value-hash oracle: the oracle recomputes
+    # the lake contents from the source events table, so a pass certifies
+    # the listing diff, the read, the upsert sink and the ledger commit
+    # end-to-end. Re-invocation in-process is a no-op run (same ledger, no
+    # new files): idempotency by construction.
     from bridgedownstream_spark.streaming.lake_sync import stream_upsert_lake
 
     json_root = _build_ingest_lake(spark, sf_dir)
@@ -1085,7 +1074,7 @@ def stream_sync_e2e(spark, sf_dir):
         pq_root,
         "eventlist_v1",
         registry,
-        checkpoint_root=os.path.join(base, "stream_ckpt"),
+        ledger_root=os.path.join(base, "stream_ledger"),
     )
     return spark.read.parquet(os.path.join(pq_root, "eventlist_v1")).select(
         "event_id",
@@ -1111,7 +1100,7 @@ def stream_sync_e2e(spark, sf_dir):
 def pipeline_e2e_root(spark, sf_dir):
     # S4→S2→N2→N3→S5: the root lake table, read back from parquet.
     written = _build_lake(spark, sf_dir)
-    return _read_table(spark, written["rec_v1"]).select(
+    return read_partitioned(spark, written["rec_v1"], PARTITION_COLS).select(
         "recordid",
         "meta_o_orderstatus",
         "meta_o_orderpriority",
@@ -1139,7 +1128,7 @@ def pipeline_e2e_root(spark, sf_dir):
 def pipeline_e2e_child(spark, sf_dir):
     # The relationalized child table, read back from the parquet lake.
     written = _build_lake(spark, sf_dir)
-    return _read_table(spark, written["rec_v1_items"]).select(
+    return read_partitioned(spark, written["rec_v1_items"], PARTITION_COLS).select(
         "index",
         "l_linenumber",
         "l_partkey",
@@ -1182,7 +1171,9 @@ def pipeline_incremental_idempotent(spark, sf_dir):
             key_cols=("assessmentid", "year", "month", "day", "recordid"),
             mode="append", ledger=ledger,
         )
-    return _read_table(spark, os.path.join(pq2, "rec_v1_items")).select(
+    return read_partitioned(
+        spark, os.path.join(pq2, "rec_v1_items"), PARTITION_COLS
+    ).select(
         "index",
         "l_linenumber",
         "l_partkey",
@@ -1352,7 +1343,7 @@ def pipeline_partition_pruned(spark, sf_dir):
     # never the row data; proven plan-level in
     # tests/test_pipeline.py::test_partition_pruning_on_lake.
     written = _build_lake(spark, sf_dir)
-    child = _read_table(spark, written["rec_v1_items"])
+    child = read_partitioned(spark, written["rec_v1_items"], PARTITION_COLS)
     return (
         child.where(F.col("year") == "1995")
         .groupBy("recordid", "assessmentid")
@@ -1412,7 +1403,7 @@ def rollup_incremental_equiv(spark, sf_dir):
     # this query scans pre-aggregated rows only.
     roll = _build_rollup(spark, sf_dir)
     return (
-        _read_table(spark, roll)
+        read_partitioned(spark, roll, PARTITION_COLS)
         .groupBy("assessmentid", "year")
         .agg(
             F.sum("n").cast("bigint").alias("n_items"),
@@ -1590,7 +1581,7 @@ def dpp_pruned_join(spark, sf_dir):
     feasible — static pruning handles WHERE year='1995'; only DPP
     handles WHERE year IN (<join result>)."""
     written = _build_lake(spark, sf_dir)
-    child = _read_table(spark, written["rec_v1_items"])
+    child = read_partitioned(spark, written["rec_v1_items"], PARTITION_COLS)
     big = (
         tbl(spark, sf_dir, "orders")
         .where(
@@ -1739,7 +1730,7 @@ def pipeline_compaction_equiv(spark, sf_dir):
         F.col("n_files").cast("bigint").alias("part_files"),
     )
     return (
-        _read_table(spark, base, ("l_returnflag",))
+        read_partitioned(spark, base, ("l_returnflag",))
         .join(F.broadcast(stats), "l_returnflag")
         .select(
             "l_orderkey",
@@ -1815,7 +1806,7 @@ def upsert_merge_equiv(spark, sf_dir):
     dynamic overwrite) — one day of re-exports into a years-deep lake
     reads and rewrites one day."""
     base = _build_upserted_lake(spark, sf_dir)
-    return _read_table(spark, base, ("o_orderstatus",)).select(
+    return read_partitioned(spark, base, ("o_orderstatus",)).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "version"
     )
 
@@ -1938,7 +1929,9 @@ def archive_restore_equiv(spark, sf_dir):
     names = os.listdir(arch)
     updates = {m.group(1) for n in names if (m := _re.match(r".*_(\d+)$", n))}
     tables_newest = sum(1 for n in names if n.endswith(f"_{newest}"))
-    restored = _read_table(spark, os.path.join(arch, f"rec_v1_{newest}"))
+    restored = read_partitioned(
+        spark, os.path.join(arch, f"rec_v1_{newest}"), PARTITION_COLS
+    )
     return restored.select(
         "recordid",
         "meta_o_orderstatus",
@@ -2077,8 +2070,8 @@ def workflow_e2e_equiv(spark, sf_dir):
     listing, and concurrency is driver-thread-cheap (jobs share the
     cluster via scheduler pools)."""
     work = _build_workflow_lake(spark, sf_dir)
-    ev = _read_table(
-        spark, os.path.join(work, "parquet", "eventlist_v1")
+    ev = read_partitioned(
+        spark, os.path.join(work, "parquet", "eventlist_v1"), PARTITION_COLS
     ).select(
         F.lit("eventlist_v1").alias("dataset"),
         "recordid",
@@ -2086,8 +2079,8 @@ def workflow_e2e_equiv(spark, sf_dir):
         "event_type",
         F.round("value", 2).alias("value"),
     )
-    taps = _read_table(
-        spark, os.path.join(work, "parquet", "taplist_v1")
+    taps = read_partitioned(
+        spark, os.path.join(work, "parquet", "taplist_v1"), PARTITION_COLS
     ).select(
         F.lit("taplist_v1").alias("dataset"),
         "recordid",

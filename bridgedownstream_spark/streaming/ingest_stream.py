@@ -16,9 +16,9 @@ One run of :func:`stream_ingest`:
    which lists the inbox once on the driver with Spark's own rules (hidden
    ``_``/``.`` names, ``pathGlobFilter``, partition discovery);
 2. takes that listing with ``inputFiles()`` — no job — and diffs it
-   against the ledger through
-   :func:`~bridgedownstream_spark.pipeline.commitlog.path_key`; with
-   nothing new it returns;
+   against the ledger
+   (:meth:`~bridgedownstream_spark.pipeline.ledger.FileLedger.new_files`);
+   with nothing new it returns;
 3. restricts the same scan to the new archives with a
    ``_metadata.file_path`` filter, which Spark applies to the listing it
    already holds (no re-listing, no job of one task per archive);
@@ -30,10 +30,10 @@ One run of :func:`stream_ingest`:
 
 Delivery is at-least-once: a crash between the sinks and the commit
 leaves those archives unlogged, and the next run ingests them again.
-Two runs on one ledger that race for one log number: the second raises at
-its commit, after its sinks, as stage 2 does. A run whose commit starts
-after the other's has finished finds its archives logged and raises
-nothing, so its sinks keep a second copy.
+Of two runs on one ledger that overlap, the one that commits second
+raises at its commit, after its sinks, as stage 2 does: its ledger log
+moved on since its read
+(:class:`~bridgedownstream_spark.pipeline.ledger.FileLedger`).
 """
 
 from __future__ import annotations
@@ -41,7 +41,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bridgedownstream_spark.pipeline.commitlog import path_key
 from bridgedownstream_spark.pipeline.ingest import ingest_archives
 from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.sources.archive import load_archive_files, with_manifest
@@ -72,8 +71,7 @@ def stream_ingest(
     having launched no Spark job."""
     scan = load_archive_files(spark.read.format("binaryFile"), archive_path)
     ledger = FileLedger(spark, ledger_root)
-    done = ledger.processed_files(_LEDGER_DATASET)
-    new = [u for u in scan.inputFiles() if path_key(u) not in done]
+    new = ledger.new_files(scan.inputFiles(), _LEDGER_DATASET)
     if not new:
         return
     batch = scan.where(F.col("_metadata.file_path").isin([_file_path(u) for u in new]))

@@ -1,31 +1,38 @@
-"""Streaming stage 2: NDJSON lake → parquet lake, kept in sync by upsert.
+"""Stage-2 lake sync: NDJSON lake → parquet lake, kept in sync by upsert.
 
-The batch stage-2 job (pipeline/json_to_parquet.py) is bookmarked by the
-file ledger and APPENDS; re-exported records are then reconciled downstream
-by dedup-latest, exactly like the reference (Glue bookmarks + most-recent-
-export filtering, json_s3_to_parquet.py:74,103 + bootstrap_trigger.py:
-222-225). This module is the *continuous* lifecycle for the same contract:
+The append stage-2 job (pipeline/json_to_parquet.py) APPENDS; re-exported
+records are then reconciled downstream by dedup-latest, exactly like the
+reference (Glue bookmarks + most-recent-export filtering,
+json_s3_to_parquet.py:74,103 + bootstrap_trigger.py:222-225). This module
+keeps the same contract with the reconciliation folded INTO the sink. One
+run of :func:`stream_upsert_lake` is a ledger-bookmarked batch, the unit
+of work of every incremental job here
+(:mod:`bridgedownstream_spark.pipeline.ledger`):
 
-    NDJSON lake file stream (checkpoint = bookmark)
-      → conform to declared schema (resolveChoice)
+    list the dataset's lake files on the driver
+      → diff the listing against the ledger (nothing new: return, no job)
+      → read only the new files, conformed to the declared schema
       → relationalize (shuffle-free)
-      → partition-scoped UPSERT of every emitted table
+      → partition-scoped UPSERT of every emitted table (+ rollup refresh)
+      → commit the new files to the ledger
 
-Replacing the append with :func:`pipeline.upsert.upsert_dataset` folds the
-reconciliation INTO the sink: a re-exported recordid replaces all of its
-prior rows (root and children) in place, so the parquet lake is always
-dedup-latest — readers skip the A2 window entirely.
+A re-exported recordid replaces all of its prior rows (root and children)
+in place, so the parquet lake is always dedup-latest — readers skip the
+A2 window entirely.
 
-Scale: each micro-batch touches only the partitions its records live in
+Scale: each run touches only the partitions its records live in
 (partition-scoped upsert), so steady-state cost tracks the arrival rate,
-not lake size. The checkpoint makes restarts exactly-once; availableNow
-makes the same code a cron-driven incremental job or a long-lived daemon.
+not lake size. A file is new until it is committed, whatever its mtime.
+A crash between the sinks and the commit replays those files on the next
+run, and the upsert replaces the rows it had written: the lake ends as
+after one clean run. Every job runs on the caller's thread, under its job
+group.
 
 With a rollup attached, the root table's touched partition directories
 are parsed back to partition values by
 :func:`pipeline.partitions.parse_partition` and handed to
 :func:`pipeline.rollup.refresh_rollup`. Neither sink sets a session conf,
-so the stream can share its SparkSession with other jobs.
+so the sync can share its SparkSession with other jobs.
 """
 
 from __future__ import annotations
@@ -38,17 +45,19 @@ from bridgedownstream_spark.operators.relationalize import (
     DEFAULT_KEY_COLS,
     relationalize,
 )
-from bridgedownstream_spark.pipeline.json_to_parquet import (
-    conform_to_schema,
-    lake_read_schema,
+from bridgedownstream_spark.pipeline.fsutil import (
+    has_data_files,
+    list_data_files,
+    list_dirs,
+    path_exists,
 )
-from bridgedownstream_spark.pipeline.fsutil import has_data_files, list_dirs
+from bridgedownstream_spark.pipeline.json_to_parquet import read_json_dataset
+from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.pipeline.partitions import parse_partition
 from bridgedownstream_spark.pipeline.registry import Dataset, DatasetRegistry
 from bridgedownstream_spark.pipeline.rollup import refresh_rollup
 from bridgedownstream_spark.pipeline.upsert import upsert_dataset
 from bridgedownstream_spark.sources.ndjson import dataset_path
-from bridgedownstream_spark.streaming.drain import drain
 
 __all__ = ["sync_batch_to_lake", "stream_upsert_lake"]
 
@@ -72,12 +81,14 @@ def sync_batch_to_lake(
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     registry: DatasetRegistry | None = None,
 ) -> tuple[dict[str, str], set[str]]:
-    """Conform → relationalize → upsert one (micro-)batch into the lake.
+    """Relationalize → upsert one batch into the lake.
 
-    ``batch_df`` carries the widened data columns plus partition columns
-    (the stream's read schema). Upsert keys on ``recordid``: every table a
-    record relationalizes into replaces ALL rows of that recordid — the
-    only correct contract when a re-export can change a child array's
+    ``batch_df`` is in the dataset's declared schema, data then partition
+    columns, as
+    :func:`~bridgedownstream_spark.pipeline.json_to_parquet.read_json_dataset`
+    returns it. Upsert keys on ``recordid``: every table a record
+    relationalizes into replaces ALL rows of that recordid — the only
+    correct contract when a re-export can change a child array's
     length. The deletion key set is the batch's ROOT recordids, not each
     table's own update rows: a re-export that shrinks a child array to
     empty (or drops the nested field entirely) emits ZERO update rows for
@@ -103,13 +114,12 @@ def sync_batch_to_lake(
     ``{name}``/``{name}_`` prefix match is used (single-dataset roots
     only).
     """
-    df = conform_to_schema(batch_df, dataset.full_schema())
-    if df.isEmpty():
+    if batch_df.isEmpty():
         return {}, set()
-    tables = relationalize(df, dataset.name, key_cols=key_cols)
-    # metadata-scale (one id per re-exported record in this micro-batch);
+    tables = relationalize(batch_df, dataset.name, key_cols=key_cols)
+    # metadata-scale (one id per re-exported record in this batch);
     # checkpointed so the repeated broadcasts don't re-read the batch
-    root_keys = df.select("recordid").distinct().localCheckpoint(eager=True)
+    root_keys = batch_df.select("recordid").distinct().localCheckpoint(eager=True)
     written: dict[str, str] = {}
     root_touched: set[str] = set()
     for name, table in tables.items():
@@ -186,26 +196,27 @@ def stream_upsert_lake(
     parquet_root: str,
     dataset_name: str,
     registry: DatasetRegistry,
-    checkpoint_root: str,
+    ledger_root: str,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
-    timeout_sec: int = 300,
     rollup_path: str | None = None,
     rollup_group_cols: list[str] | None = None,
     rollup_aggs: list | None = None,
 ) -> None:
-    """Drain all NDJSON lake files not yet seen by ``checkpoint_root``
-    through stage 2, upserting into the parquet lake, then return.
+    """Upsert every NDJSON lake file of the dataset that the ledger under
+    ``ledger_root`` has not logged into the parquet lake, then log them.
 
-    The stream reads through :func:`lake_read_schema`, like the batch
-    reader, so drifted scalar types coerce the same way (``resolveChoice``
-    semantics); partition columns resolve from the directory layout.
-    Re-running with the same checkpoint processes only files that arrived
-    since the last run; re-exported records replace their prior rows
-    instead of appending duplicates.
+    The new files are read through
+    :func:`~bridgedownstream_spark.pipeline.json_to_parquet.read_json_dataset`,
+    like the append job's, so drifted scalar types coerce the same way
+    (``resolveChoice`` semantics); partition columns resolve from the
+    directory layout. Re-running with the same ledger processes only files
+    that arrived since the last run, and with none it launches no Spark
+    job; re-exported records replace their prior rows instead of appending
+    duplicates. A missing dataset directory raises.
 
     When ``rollup_path`` is given (with ``rollup_group_cols`` and
     ``rollup_aggs``, see :func:`pipeline.rollup.refresh_rollup`), every
-    micro-batch ALSO re-refreshes the root table's rollup for exactly the
+    run ALSO re-refreshes the root table's rollup for exactly the
     partitions the upsert touched — the upsert's OWN touched set, which
     includes the OLD partitions of replaced rows, not just the batch's
     partition values: a re-export that moves a record to a new partition
@@ -223,36 +234,32 @@ def stream_upsert_lake(
         )
     ds = registry[dataset_name]
     path = dataset_path(json_root, ds.name)
-    stream = (
-        spark.readStream.schema(lake_read_schema(ds))
-        .option("basePath", path)
-        .json(path)
+    if not path_exists(spark, path):
+        raise FileNotFoundError(f"stream_upsert_lake: no dataset directory {path}")
+    ledger = FileLedger(spark, ledger_root)
+    new = ledger.new_files(list_data_files(spark, path), ds.name)
+    if not new:
+        return
+    written, root_touched = sync_batch_to_lake(
+        spark,
+        read_json_dataset(spark, json_root, ds, paths=new),
+        ds,
+        parquet_root,
+        key_cols=key_cols,
+        registry=registry,
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        written, root_touched = sync_batch_to_lake(
-            spark, batch_df, ds, parquet_root, key_cols=key_cols,
-            registry=registry,
+    if rollup_path is not None and root_touched:
+        # the UPSERT's touched set (new partitions + old partitions of
+        # replaced/moved rows), parsed back to partition-value dicts
+        refresh_rollup(
+            spark,
+            written[ds.name],
+            rollup_path,
+            rollup_group_cols or [],
+            rollup_aggs or [],
+            list(ds.partition_cols),
+            refresh_partitions=[
+                parse_partition(p) for p in sorted(root_touched) if p
+            ],
         )
-        root_path = written.get(ds.name)
-        if rollup_path is not None and root_path is not None and root_touched:
-            # the UPSERT's touched set (new partitions + old partitions of
-            # replaced/moved rows), parsed back to partition-value dicts
-            refresh_rollup(
-                spark,
-                root_path,
-                rollup_path,
-                rollup_group_cols or [],
-                rollup_aggs or [],
-                list(ds.partition_cols),
-                refresh_partitions=[
-                    parse_partition(p) for p in sorted(root_touched) if p
-                ],
-            )
-
-    drain(
-        stream.writeStream.foreachBatch(process_batch),
-        checkpoint_root,
-        timeout_sec,
-        "stream_upsert_lake",
-    )
+    ledger.commit(new, ds.name)

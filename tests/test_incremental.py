@@ -275,9 +275,9 @@ def test_ledger_compacts_every_tenth_file(spark, tmp_path):
 
 
 def test_ledger_concurrent_datasets_lose_no_entry(spark, tmp_path):
-    # stage 2 commits each dataset from its own thread of a pool, as
-    # run_study_workflow does; with more threads than cores and a short
-    # switch interval, no commit may lose another's entries
+    # stage 2 diffs and commits each dataset from its own thread of a
+    # pool, as run_study_workflow does; with more threads than cores and a
+    # short switch interval, no commit may lose another's entries
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -286,7 +286,8 @@ def test_ledger_concurrent_datasets_lose_no_entry(spark, tmp_path):
 
     def commit_all(ds):
         return sum(
-            ledger.commit([f"{ds}/{i}-{j}" for j in range(2)], ds) for i in range(12)
+            ledger.commit(ledger.new_files([f"{ds}/{i}-{j}" for j in range(2)], ds), ds)
+            for i in range(12)
         )
 
     interval = sys.getswitchinterval()

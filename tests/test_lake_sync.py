@@ -1,15 +1,18 @@
-"""Streaming stage 2 (lake sync): the NDJSON lake drains into the parquet
-lake through a checkpointed stream whose sink is a partition-scoped UPSERT —
-new records append, re-exported records replace all their rows (root and
-child), and already-processed files are never reprocessed."""
+"""Stage-2 lake sync: the NDJSON lake's new files, bookmarked by the
+processed-files ledger, go into the parquet lake through a partition-scoped
+UPSERT — new records append, re-exported records replace all their rows
+(root and child), and already-processed files are never reprocessed."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
+from bridgedownstream_spark.pipeline.ledger import FileLedger
 from bridgedownstream_spark.pipeline.registry import DatasetRegistry
 from bridgedownstream_spark.streaming.lake_sync import stream_upsert_lake
 
@@ -300,3 +303,144 @@ def test_stream_sync_keeps_rollup_exact_under_reexports(spark, tmp_path):
     _write_records(os.path.join(a_dir, "f6.ndjson"), [_rec("r4", 6.0, [10])])
     drain()
     assert rollup_by_aid() == direct_by_aid() == {"A": (4, 22.0)}
+
+
+def _recordids(spark, pq_root) -> list[str]:
+    df = spark.read.parquet(os.path.join(pq_root, "rec_v1"))
+    return sorted(r["recordid"] for r in df.collect())
+
+
+def test_late_file_with_an_old_mtime_is_synced(spark, tmp_path):
+    # a file is new until the ledger logs it, whatever its mtime: one that
+    # lands 8 days older than the newest synced file is still synced
+    json_root = str(tmp_path / "json")
+    pq_root = str(tmp_path / "parquet")
+    ledger = str(tmp_path / "ledger")
+    a_dir = _part_dir(json_root, "A")
+    f1 = os.path.join(a_dir, "f1.ndjson")
+    _write_records(f1, [_rec("r1", 1.0, [1])])
+    stream_upsert_lake(spark, json_root, pq_root, "rec_v1", REGISTRY, ledger)
+
+    f2 = os.path.join(a_dir, "f2.ndjson")
+    _write_records(f2, [_rec("r2", 2.0, [2])])
+    old = os.stat(f1).st_mtime - 8 * 86400
+    os.utime(f2, (old, old))
+    stream_upsert_lake(spark, json_root, pq_root, "rec_v1", REGISTRY, ledger)
+    assert _recordids(spark, pq_root) == ["r1", "r2"]
+
+
+def test_lake_sync_jobs_run_under_the_callers_job_group(spark, tmp_path, new_jobs):
+    json_root = str(tmp_path / "json")
+    pq_root = str(tmp_path / "parquet")
+    ledger = str(tmp_path / "ledger")
+    sc = spark.sparkContext
+    group = "lake-sync-caller"
+
+    def run() -> set[int]:
+        new_jobs()
+        sc.setJobGroup(group, "lake sync under a caller's job group")
+        try:
+            stream_upsert_lake(
+                spark, json_root, pq_root, "rec_v1", REGISTRY, ledger,
+                rollup_path=str(tmp_path / "rollup"),
+                rollup_group_cols=[],
+                rollup_aggs=[F.count("*").alias("n")],
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return {job for job, _ in new_jobs()}
+
+    a_dir = _part_dir(json_root, "A")
+    _write_records(
+        os.path.join(a_dir, "f1.ndjson"),
+        [_rec("r1", 1.0, [1, 2]), _rec("r2", 2.0, [3])],
+    )
+    cold = run()
+    _write_records(os.path.join(a_dir, "f2.ndjson"), [_rec("r1", 9.0, [7])])
+    incremental = run()
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert cold and cold <= in_group
+    assert incremental and incremental <= in_group
+    assert run() == set()  # a no-op run launches no job
+    assert _recordids(spark, pq_root) == ["r1", "r2"]
+
+
+def test_crash_before_the_commit_replays_to_one_clean_run(spark, tmp_path, monkeypatch):
+    # a run that dies after its upsert sinks and before its ledger commit
+    # leaves its files unlogged; the next run replays them and the upsert
+    # replaces the rows the crashed run wrote, so every table ends equal,
+    # row for row, to one clean run's
+    json_root = str(tmp_path / "json")
+    a_dir = _part_dir(json_root, "A")
+    b_dir = _part_dir(json_root, "B")
+    _write_records(
+        os.path.join(a_dir, "f1.ndjson"),
+        [_rec("r1", 1.0, [1, 2]), _rec("r2", 2.0, [3])],
+    )
+    _write_records(os.path.join(b_dir, "f2.ndjson"), [_rec("r3", 3.0, [4])])
+
+    def sync(name):
+        stream_upsert_lake(
+            spark, json_root, str(tmp_path / name), "rec_v1", REGISTRY,
+            str(tmp_path / f"{name}_ledger"),
+        )
+
+    sync("clean")
+    sync("crashed")
+    # a re-export that shrinks r1 and moves r3 to A, plus a new record
+    _write_records(
+        os.path.join(a_dir, "f3.ndjson"),
+        [_rec("r1", 9.0, [7]), _rec("r3", 5.0, [8, 9]), _rec("r4", 4.0, [])],
+    )
+    sync("clean")
+
+    def crash(self, paths, dataset):
+        raise OSError("crash before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(FileLedger, "commit", crash)
+        with pytest.raises(OSError):
+            sync("crashed")
+    sync("crashed")
+
+    def rows(name, table):
+        df = spark.read.parquet(str(tmp_path / name / table))
+        return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    for table in ("rec_v1", "rec_v1_items"):
+        assert rows("crashed", table) == rows("clean", table), table
+    assert _recordids(spark, str(tmp_path / "clean")) == ["r1", "r2", "r3", "r4"]
+
+
+def test_commit_after_another_run_committed_raises(spark, tmp_path, monkeypatch):
+    # run B runs whole inside run A's commit: A's read of the ledger is
+    # stale, so A raises at its commit instead of returning as if its
+    # files were logged by it
+    json_root = str(tmp_path / "json")
+    pq_root = str(tmp_path / "parquet")
+    ledger = str(tmp_path / "ledger")
+    _write_records(
+        os.path.join(_part_dir(json_root, "A"), "f1.ndjson"),
+        [_rec("r1", 1.0, [1])],
+    )
+    commit = FileLedger.commit
+
+    def run_b_then_commit(self, paths, dataset):
+        monkeypatch.setattr(FileLedger, "commit", commit)
+        stream_upsert_lake(spark, json_root, pq_root, "rec_v1", REGISTRY, ledger)
+        return commit(self, paths, dataset)
+
+    monkeypatch.setattr(FileLedger, "commit", run_b_then_commit)
+    with pytest.raises(Exception, match="FileAlreadyExists"):
+        stream_upsert_lake(spark, json_root, pq_root, "rec_v1", REGISTRY, ledger)
+    assert _recordids(spark, pq_root) == ["r1"]
+    assert len(FileLedger(spark, ledger).processed_files("rec_v1")) == 1
+
+
+def test_missing_dataset_directory_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        stream_upsert_lake(
+            spark, str(tmp_path / "json"), str(tmp_path / "parquet"), "rec_v1",
+            REGISTRY, str(tmp_path / "ledger"),
+        )

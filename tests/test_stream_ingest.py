@@ -276,3 +276,23 @@ def test_failed_commit_leaves_ledger_unchanged_and_next_run_reprocesses(
     _ingest(spark, path, rows, json_root, ledger)
     assert _lake_recordids(spark, json_root) == ["r0", "r1", "r1"]
     assert _logged(spark, ledger) == {"r0.zip", "r1.zip"}
+
+
+def test_commit_after_another_run_committed_raises(spark, tmp_path, monkeypatch):
+    # run B runs whole inside run A's commit: A's read of the ledger is
+    # stale and its sinks hold a second copy, so A must raise at its
+    # commit rather than return as if it had logged its archives
+    inbox, rows = _inbox(tmp_path, ["r0.zip"])
+    path, json_root, ledger = str(inbox / "*.zip"), str(tmp_path / "json"), str(tmp_path / "l")
+    commit = FileLedger.commit
+
+    def run_b_then_commit(self, paths, dataset):
+        monkeypatch.setattr(FileLedger, "commit", commit)
+        _ingest(spark, path, rows, json_root, ledger)
+        return commit(self, paths, dataset)
+
+    monkeypatch.setattr(FileLedger, "commit", run_b_then_commit)
+    with pytest.raises(Exception, match="FileAlreadyExists"):
+        _ingest(spark, path, rows, json_root, ledger)
+    assert _lake_recordids(spark, json_root) == ["r0", "r0"]
+    assert _logged(spark, ledger) == {"r0.zip"}
